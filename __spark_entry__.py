@@ -1246,9 +1246,10 @@ def _get_seg_index(spark: SparkSession, sf_dir: str):
     # this is layout only; the 256 floor keeps small SFs multi-segment.
     import pyarrow.parquet as _pq
 
-    n_docs = _pq.ParquetDataset(
-        f"{sf_dir}/documents.parquet"
-    ).read(columns=[]).num_rows
+    n_docs = sum(
+        _pq.ParquetFile(f).metadata.num_rows
+        for f in _pq.ParquetDataset(f"{sf_dir}/documents.parquet").files
+    )
     seg_size = max(256, n_docs // 32)
     sidx = SegmentIndexBuilder(
         spark, path, {"text": "whitespace"}, seg_size=seg_size

@@ -45,4 +45,10 @@ from ferret_spark.spans import (  # noqa: F401
     SpanTermQuery,
 )
 
+from ferret_spark.session import install_zip_cache_hook
+
+# every UDF closure imports this package when a Python worker unpickles it,
+# so each reused worker installs the hook on its first task
+install_zip_cache_hook()
+
 __version__ = "0.1.0"

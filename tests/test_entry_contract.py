@@ -71,3 +71,44 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 1
     assert set(df.columns) == {"rank", "doc_id", "score"}
+
+
+def test_seg_size_from_parquet_footers(spark, tmp_path, monkeypatch):
+    """_get_seg_index sizes segments from footer row counts: no table read
+    on the driver, same seg_size over a multi-file documents table."""
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import ferret_spark.segments as segments
+
+    docs = tmp_path / "documents.parquet"
+    docs.mkdir()
+    start = 0
+    for i, n in enumerate((3000, 3000, 3500)):
+        ids = list(range(start, start + n))
+        start += n
+        pq.write_table(
+            pa.table({"doc_id": ids, "text": [f"w{j % 7}" for j in ids]}),
+            docs / f"part-{i}.parquet",
+        )
+
+    def no_read(*_a, **_k):
+        raise AssertionError("documents read on the driver")
+
+    got = {}
+
+    class FakeBuilder:
+        def __init__(self, _spark, _path, _fields, seg_size):
+            got["seg_size"] = seg_size
+
+        def build(self, _docs, doc_id_col):
+            return "built"
+
+    monkeypatch.setattr(pq.ParquetDataset, "read", no_read)
+    monkeypatch.setattr(segments, "SegmentIndexBuilder", FakeBuilder)
+    monkeypatch.setattr(tempfile, "mkdtemp", lambda prefix: str(tmp_path / "seg"))
+    monkeypatch.setattr(entry, "_SEG_CACHE", {})
+    assert entry._get_seg_index(spark, str(tmp_path)) == "built"
+    assert got["seg_size"] == 9500 // 32

@@ -15,7 +15,7 @@ EDGE_ROWS = [
     (1, ""),
     (2, None),
     (3, "   \t\n mixed \r\x0b WS   "),
-    (4, "a b nbsp stays one token"),
+    (4, "a\u00a0b \u00a0 stays one token"),
     (5, "num3ric 42 mix3d punct!x, y-z"),
     (6, "dup dup dup"),
     (7, "UPPER lower MiXeD"),
