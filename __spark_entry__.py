@@ -1610,7 +1610,7 @@ def _pipe(fn_name: str, **kw):
 
 
 # shared DuckDB CTE: tokenized documents + 3-gram shingles (mirrors
-# pipeline._toks_col / _shingles exactly)
+# pipeline._tokenize / _doc_shingles exactly)
 _PIPE_PRELUDE = r"""
 WITH toks AS (
   SELECT doc_id,

@@ -28,6 +28,10 @@ Operators:
 
 from __future__ import annotations
 
+import hashlib
+import re
+from itertools import chain
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -169,26 +173,46 @@ def _dot(a, b) -> float:
     return s
 
 
-def _toks_col():
-    return F.expr(r"filter(split(lower(text), '\\s+'), t -> t <> '')")
+# --- the one tokenizer of every text kernel ---------------------------------
+# Java's regex \s class: what split(text, '\\s+') splits on in Spark.
+# Python's str.split() whitespace is wider (NBSP, U+2028, \x1c, ...).
+_JAVA_WS = " \t\n\x0b\f\r"
+_JAVA_WS_RE = re.compile(f"[{_JAVA_WS}]+")
 
 
-def _java_ws_split(texts, lower: bool):
-    """Python mirror of filter(split(text, '\\s+'), t <> '') with Java \\s
-    semantics ([ \\t\\n\\x0B\\f\\r] — narrower than Python's str.split
-    whitespace), optionally lowered first like _toks_col(). Shared by the
-    r7 in-row text-op kernels; parity pinned per op."""
-    import re as _re
+def _tokenize(texts, lower: bool = True):
+    """Per-doc tokens of a text column, as filter(split(text, '\\s+'),
+    t -> t <> '') computes them (Java \\s), lowered first when ``lower``.
 
-    ws = _re.compile("[ \t\n\x0b\f\r]+")
-    out = []
-    for t in texts:
-        s = t or ""
-        if lower:
-            s = s.lower()
-        s = ws.sub(" ", s).strip()
-        out.append(s.split(" ") if s else [])
-    return out
+    Returns (token lists, NULL mask). NULL text gives [] with its mask bit
+    set; "" and whitespace-only text give [] with it clear — the zero-token
+    doc. Each kernel maps both cases to its DuckDB twin's value."""
+    null = np.fromiter((t is None for t in texts), dtype=bool, count=len(texts))
+    split = _JAVA_WS_RE.split
+    toks = [
+        [] if t is None else [w for w in split(t.lower() if lower else t) if w]
+        for t in texts
+    ]
+    return toks, null
+
+
+def _flatten(toks):
+    """(flat token list, per-doc lengths) of _tokenize's token lists."""
+    lens = np.fromiter(map(len, toks), dtype=np.int64, count=len(toks))
+    return list(chain.from_iterable(toks)), lens
+
+
+def _md5_prefix_ints(values, nhex: int) -> np.ndarray:
+    """int(md5(v).hexdigest()[:nhex], 16) per element of a flat string
+    array — the JVM's cast(conv(substr(md5(v), 1, nhex), 16, 10) as
+    bigint). md5 runs once per distinct value (factorize)."""
+    codes, uniq = pd.factorize(pd.Series(values, dtype=object), sort=False)
+    hu = np.fromiter(
+        (int(hashlib.md5(u.encode("utf-8")).hexdigest()[:nhex], 16) for u in uniq),
+        dtype=np.int64,
+        count=len(uniq),
+    )
+    return hu[codes]
 
 
 # ---------------------------------------------------------------------------
@@ -207,39 +231,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("n_copies") >= 1)
         .orderBy("canonical_doc_id")
-    )
-
-
-def _shingles(n: int = SHINGLE_N):
-    # indexed concat instead of per-i slice(): slice allocates a fresh
-    # array per shingle under Catalyst's interpreted HOF evaluator (~5x
-    # slower). Docs shorter than n tokens produce their single whole-doc
-    # shingle, matching the slice semantics the SQL twin mirrors.
-    idx = " ,' ',".join(f"toks[i + {j}]" for j in range(n)).replace(" ,", ",")
-    return F.expr(
-        f"IF(size(toks) < {n},"
-        f" array(concat_ws(' ', toks)),"
-        f" array_distinct(transform(sequence(0, size(toks) - {n}),"
-        f" i -> concat({idx}))))"
-    )
-
-
-def _shingles_from_text(n: int = SHINGLE_N):
-    """Shingles computed DIRECTLY from the text column with ONE codegen'd
-    regex scan — no token array, no interpreted HOF lambdas (those cost
-    ~3x the whole-stage-codegen path at sf0.1): normalize whitespace, then
-    a lookahead regex emits every n-token window (a consuming `^| ` anchor
-    plus zero-width capture keeps windows overlapping). Semantics are
-    bit-identical to _shingles() over _toks_col() — docs with fewer than n
-    tokens yield their single whole-doc shingle — verified golden-equal in
-    tests and mirrored by the SQL twin."""
-    norm = "trim(regexp_replace(lower(text), '\\\\s+', ' '))"
-    window = " ".join(["\\\\S+"] * n)
-    pat = f"(?:^| )(?=({window}))"
-    return F.expr(
-        f"IF(size(split({norm}, ' ')) < {n},"
-        f" array({norm}),"
-        f" array_distinct(regexp_extract_all({norm}, '{pat}', 1)))"
     )
 
 
@@ -283,16 +274,12 @@ def _shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _doc_shingles(t: str | None, n_gram: int, ws) -> list[str]:
-    """Distinct n-gram shingles of one doc: normalize whitespace + lower,
-    dict-dedup windows; docs shorter than n_gram yield their single
-    whole-doc shingle (including the empty shingle for empty docs).
-    Whitespace class mirrors Java \\s ([ \\t\\n\\x0B\\f\\r]); parity vs
-    _shingles_from_text pinned by tests/test_shingle_arrow.py."""
-    norm = ws.sub(" ", (t or "").lower()).strip()
-    toks = norm.split(" ")
+def _doc_shingles(toks: list[str], n_gram: int) -> list[str]:
+    """Distinct n-gram shingles of one doc's (non-empty) token list, in
+    first-seen order; a doc shorter than n_gram tokens yields its single
+    whole-doc shingle (the twin's list_slice semantics)."""
     if len(toks) < n_gram:
-        return [norm]
+        return [" ".join(toks)]
     return list(
         dict.fromkeys(
             " ".join(toks[j : j + n_gram])
@@ -302,56 +289,24 @@ def _doc_shingles(t: str | None, n_gram: int, ws) -> list[str]:
 
 
 def _shingle_docs_arrow(batches):
-    """Arrow kernel for _shingle_docs: text -> one (doc_id, n_sh, shs)
-    row per doc. The Python str.split + dict-dedup window walk runs 4-7x
-    faster than the Java lookahead-regex extraction it replaced (measured
-    at sf1.0: 4.0s -> 0.6s warm)."""
+    """Arrow kernel for _shingle_docs: text -> one (doc_id, n_sh, shs) row
+    per doc with at least one token. NULL and zero-token docs have no
+    shingles and emit no row, as the twin drops them (len(sh) > 0) — an
+    empty shingle would pair them all at Jaccard 1.0."""
     import pyarrow as pa
-    import re as _re
 
-    ws = _re.compile("[ \t\n\x0b\f\r]+")
     n_gram = SHINGLE_N
     for batch in batches:
-        texts = batch.column(1).to_pylist()
-        shs_out = [_doc_shingles(t, n_gram, ws) for t in texts]
+        toks, _ = _tokenize(batch.column(1).to_pylist())
+        keep = pa.array([bool(tl) for tl in toks])
+        shs_out = [_doc_shingles(tl, n_gram) for tl in toks if tl]
         yield pa.record_batch(
             [
-                batch.column(0).cast(pa.int64()),
+                batch.column(0).filter(keep).cast(pa.int64()),
                 pa.array([len(s) for s in shs_out], type=pa.int32()),
                 pa.array(shs_out, type=pa.list_(pa.string())),
             ],
             names=["doc_id", "n_sh", "shs"],
-        )
-
-
-def _shingle_rows_arrow(batches):
-    """Exploded (doc_id, n_sh, shingle) form of _shingle_docs_arrow —
-    kept as the row-parity surface (tests/test_shingle_arrow.py pins it
-    golden-equal to the JVM _shingles_from_text extraction)."""
-    import pyarrow as pa
-    import re as _re
-
-    ws = _re.compile("[ \t\n\x0b\f\r]+")
-    n_gram = SHINGLE_N
-    for batch in batches:
-        did = batch.column(0).to_numpy()
-        texts = batch.column(1).to_pylist()
-        ids_out: list = []
-        n_out: list = []
-        s_out: list = []
-        for i, t in enumerate(texts):
-            shs = _doc_shingles(t, n_gram, ws)
-            n = len(shs)
-            ids_out.extend([did[i]] * n)
-            n_out.extend([n] * n)
-            s_out.extend(shs)
-        yield pa.record_batch(
-            [
-                pa.array(ids_out, type=pa.int64()),
-                pa.array(n_out, type=pa.int32()),
-                pa.array(s_out, type=pa.string()),
-            ],
-            names=["doc_id", "n_sh", "s"],
         )
 
 
@@ -476,7 +431,9 @@ def dedup_ngram_jaccard(
                         np.minimum(na, nb)
                         >= thr_lo * np.maximum(na, nb)
                     ]
-                parts.append(pk)
+                if len(pk):
+                    parts.append(pk)
+            # the size-ratio bound can drop every pair of the batch
             if not parts:
                 continue
             uk, cnt = np.unique(np.concatenate(parts), return_counts=True)
@@ -605,8 +562,6 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_mod = MINHASH_P
 
     def _sigs(batches):
-        import hashlib
-
         import pyarrow as pa
 
         for batch in batches:
@@ -614,21 +569,13 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
             if len(did) == 0:
                 continue
             shs = batch.column(1)
+            # every cached doc has >= 1 shingle (_shingle_docs_arrow), so
+            # no reduceat run below is empty
             lens = pa.compute.list_value_length(shs).to_numpy()
             starts = np.concatenate(
                 ([0], np.cumsum(lens[:-1]))
             ).astype(np.int64)
-            flat = shs.flatten().to_pandas()
-            codes, uniq = pd.factorize(flat, sort=False)
-            hu = np.fromiter(
-                (
-                    int(hashlib.md5(u.encode("utf-8")).hexdigest()[:10], 16)
-                    for u in uniq
-                ),
-                dtype=np.int64,
-                count=len(uniq),
-            )
-            h = hu[codes]
+            h = _md5_prefix_ints(shs.flatten().to_pandas(), 10)
             mins = np.empty((len(lens), n_perm), dtype=np.int64)
             for i in range(n_perm):
                 hp = (a_arr[i] * h + b_arr[i]) % p_mod
@@ -709,56 +656,28 @@ def dedup_simhash(
     # in its own row, so the per-bit +-1 tallies and the sign step are
     # complete without any explode, exchange, aggregation or restore-join
     # (the pre-r7 path exploded ~10M (doc_id, hash) rows through Arrow and
-    # summed 60 partial columns per doc). Tokenization mirrors
-    # filter(split(lower(text),'\s+'), t<>'') with Java \s semantics
-    # ([ \t\n\x0B\f\r]) — the same normalize-split used (and pinned) by
-    # the shingle kernel; the token hash int(md5(t).hexdigest()[:15], 16)
-    # equals the JVM cast(conv(substr(md5(t),1,15),16,10) as bigint), and
-    # md5 runs once per DISTINCT token per batch (factorize). Zero-token
-    # docs have all tallies 0 -> simhash 0, matching the old restore-join.
-    # Exact integer math throughout — fingerprints bit-identical (parity
-    # test vs the aggregate form, tests/test_ann_numpy_parity.py).
+    # summed 60 partial columns per doc). Tokens come from _tokenize; the
+    # token hash is _md5_prefix_ints(.., 15). NULL and zero-token docs
+    # have all tallies 0 -> simhash 0, the twin's coalesce(.., 0). Exact
+    # integer math throughout — fingerprints bit-identical (parity test
+    # vs the aggregate form, tests/test_ann_numpy_parity.py).
     nbits = bits
 
     def _fps(batches):
-        import hashlib
-        import re as _re
-
         import pyarrow as pa
 
-        ws = _re.compile("[ \t\n\x0b\f\r]+")
         one = np.int64(1)
         weights = one << np.arange(nbits, dtype=np.int64)
         for batch in batches:
             did = batch.column(0)
             if len(did) == 0:
                 continue
-            texts = batch.column(1).to_pylist()
-            toks_flat: list[str] = []
-            lens = np.empty(len(texts), dtype=np.int64)
-            for i, t in enumerate(texts):
-                norm = ws.sub(" ", (t or "").lower()).strip()
-                tl = norm.split(" ") if norm else []
-                lens[i] = len(tl)
-                toks_flat.extend(tl)
-            fp = np.zeros(len(texts), dtype=np.int64)
+            toks, _ = _tokenize(batch.column(1).to_pylist())
+            flat, lens = _flatten(toks)
+            fp = np.zeros(len(toks), dtype=np.int64)
             nz = np.flatnonzero(lens)
             if len(nz):
-                codes, uniq = pd.factorize(
-                    pd.Series(toks_flat), sort=False
-                )
-                hu = np.fromiter(
-                    (
-                        int(
-                            hashlib.md5(u.encode("utf-8")).hexdigest()[:15],
-                            16,
-                        )
-                        for u in uniq
-                    ),
-                    dtype=np.int64,
-                    count=len(uniq),
-                )
-                h = hu[codes]
+                h = _md5_prefix_ints(flat, 15)
                 starts = np.concatenate(
                     ([0], np.cumsum(lens[nz])[:-1])
                 ).astype(np.int64)
@@ -1118,44 +1037,6 @@ def ivf_trained_centroids(
     return out
 
 
-def _ivf_dot_structs(vec: str, cents: list[list[float]]) -> str:
-    """Spark SQL array of struct(d=dot(vec, c_i), i) — struct comparison
-    orders by dot then index, so max/sort are deterministic under ties."""
-    parts = []
-    for i, c in enumerate(cents):
-        arr = ", ".join(repr(x) for x in c)
-        dot = (
-            f"aggregate(zip_with({vec}, array({arr}), (x, y) -> x * y),"
-            f" 0D, (s, x) -> s + x)"
-        )
-        parts.append(f"struct({dot} AS d, {i} AS i)")
-    return f"array({', '.join(parts)})"
-
-
-def ivf_assign(emb: DataFrame, spark: SparkSession, cents) -> DataFrame:
-    """Assign every vector to its max-dot centroid. The codebook ships as
-    ONE broadcast row of struct data (a dim=768 codebook would otherwise
-    be a ~12k-float Catalyst literal tree rebuilt per query); assignment
-    stays a JVM fold, no shuffle, ties to the larger centroid id (struct
-    max over (dot, id) — mirrored by the twin's list_max)."""
-    cents_df = spark.createDataFrame(
-        [([(i, c) for i, c in enumerate(cents)],)],
-        "cents array<struct<cid:int,c:array<double>>>",
-    )
-    return (
-        emb.crossJoin(F.broadcast(cents_df))
-        .withColumn(
-            "cid",
-            F.expr(
-                "array_max(transform(cents, s -> struct("
-                "aggregate(zip_with(e, s.c, (x, y) -> x * y), 0D,"
-                " (a, x) -> a + x) AS d, s.cid AS i))).i"
-            ),
-        )
-        .drop("cents")
-    )
-
-
 def ann_ivf_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -1180,8 +1061,8 @@ def ann_ivf_topk(
     dots = [(_dot(qe, c), i) for i, c in enumerate(cents)]
     probe = [i for _, i in sorted(dots, reverse=True)[:nprobe]]
     # assignment + cosine in one Arrow pass: per-centroid left-fold dots,
-    # argmax with ties to the LARGER centroid id (the array_max-over-
-    # struct(d, i) rule ivf_assign's JVM fold implements)
+    # argmax with ties to the LARGER centroid id (the twin's list_max over
+    # (dot, id) rule; the JVM array_max form is pinned in the tests)
     C_arr = np.asarray(cents, dtype=np.float64)
     q_arr = np.asarray(qe, dtype=np.float64)
     n_cent = len(cents)
@@ -1222,19 +1103,6 @@ def _plane_literals(dim: int, n_planes: int, seed: int = 42) -> list[list[float]
     BOTH the Spark expression and the DuckDB twin, so the bucketing is
     bit-identical across engines."""
     return [[float(x) for x in row] for row in _hyperplanes(dim, n_planes, seed)]
-
-
-def _bucket_expr_sql(vec: str, planes: list[list[float]]) -> str:
-    """Spark SQL: LSH bucket id = sign-bit pattern of plane projections."""
-    parts = []
-    for p, plane in enumerate(planes):
-        arr = ", ".join(repr(c) for c in plane)
-        dot = (
-            f"aggregate(zip_with({vec}, array({arr}), (x, y) -> x * y),"
-            f" 0D, (s, x) -> s + x)"
-        )
-        parts.append(f"IF({dot} > 0, {1 << p}, 0)")
-    return " + ".join(parts)
 
 
 def ann_batch_topk(
@@ -1335,15 +1203,11 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
             did = batch.column(0)
             if len(did) == 0:
                 continue
-            texts = batch.column(1).to_pylist()
-            toks = _java_ws_split(texts, lower=True)
-            # NULL text -> NULL ratio (size(NULL)/greatest(NULL,1) is NULL
-            # in the JVM form)
+            toks, null = _tokenize(batch.column(1).to_pylist())
+            # NULL text -> NULL ratio; a zero-token doc -> 0 / 1
             r = [
-                None
-                if t is None
-                else sum(1 for w in tl if w in sw) / max(len(tl), 1)
-                for t, tl in zip(texts, toks)
+                None if nl else sum(1 for w in tl if w in sw) / max(len(tl), 1)
+                for tl, nl in zip(toks, null)
             ]
             yield pa.record_batch(
                 [did, pa.array(r, type=pa.float64())],
@@ -1355,10 +1219,11 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .mapInArrow(_ratio, "doc_id long, _r double")
     )
+    # a NULL ratio is not English-like: 0, as the twin's CASE gives
     return staged.select(
         "doc_id", F.round(F.col("_r"), 6).alias("stopword_ratio")
     ).withColumn(
-        "is_englishlike", (F.col("stopword_ratio") >= 0.1).cast("int")
+        "is_englishlike", F.when(F.col("stopword_ratio") >= 0.1, 1).otherwise(0)
     ).orderBy("doc_id")
 
 
@@ -1374,30 +1239,29 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expression performed. Rounding and the score composition stay in
     # Spark, unchanged.
     def _metrics(batches):
-        import re as _re
-
         import pyarrow as pa
 
-        alpha = _re.compile("[a-z]+")
+        alpha = re.compile("[a-z]+")
         for batch in batches:
             did = batch.column(0)
             if len(did) == 0:
                 continue
-            texts = batch.column(1).to_pylist()
-            toks = _java_ws_split(texts, lower=True)
+            toks, null = _tokenize(batch.column(1).to_pylist())
             n = len(toks)
-            # NULL text -> NULL metrics (the JVM aggregates over a NULL
-            # token array are NULL)
+            # NULL text -> NULL metrics. A zero-token doc has no mean
+            # token length (the twin's sum over an empty list is NULL),
+            # so Spark's NULL-skipping least() scores it 1.0 * 0.3
             ml: list = [None] * n
             af: list = [None] * n
             nt: list = [None] * n
             for i, tl in enumerate(toks):
-                if texts[i] is None:
+                if null[i]:
                     continue
                 k = len(tl)
                 nt[i] = k
                 g = max(k, 1)
-                ml[i] = sum(map(len, tl)) / g
+                if k:
+                    ml[i] = sum(map(len, tl)) / k
                 af[i] = (
                     sum(1 for t in tl if alpha.fullmatch(t) is not None) / g
                 )
@@ -1439,23 +1303,18 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # like filter(split(text,'\s+'), t<>''). len() == JVM length() (both
     # count code points).
     def _counts(batches):
-        import re as _re
-
         import pyarrow as pa
 
-        sub = _re.compile("[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 \t\n\x0b\f\r]")
+        sub = re.compile(f"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9{_JAVA_WS}]")
         for batch in batches:
             did = batch.column(0)
             if len(did) == 0:
                 continue
             texts = batch.column(1).to_pylist()
-            toks = _java_ws_split(texts, lower=False)
+            toks, null = _tokenize(texts, lower=False)
             # NULL text propagates to NULL counts, exactly like
             # size(split(NULL)) / length(NULL) in the JVM form
-            ws_n = [
-                None if t is None else len(tl)
-                for t, tl in zip(texts, toks)
-            ]
+            ws_n = [None if nl else len(tl) for tl, nl in zip(toks, null)]
             sub_n = [
                 None if t is None else len(sub.findall(t)) for t in texts
             ]
@@ -1691,34 +1550,20 @@ def keywords_tfidf(
     # Per-doc (term, tf) pairs in ONE Arrow batch pass (guide §4.2): the
     # explode -> groupBy(doc_id, term) form shipped every token occurrence
     # (~10M rows at sf1.0, 6.0s noop-isolated) through a hash aggregate;
-    # counting inside the doc row needs no shuffle at all. Tokenization
-    # mirrors filter(split(lower(text), '\s+'), t <> '') with Java regex
-    # \s semantics ([ \t\n\x0B\f\r]) — parity pinned by
-    # tests/test_keywords_tfidf_opt.py and the DuckDB twin.
-    import re as _re
-
-    _ws = _re.compile("[ \t\n\x0b\f\r]+")
-
-    # r7: (doc_id, term, tf) rows straight out of one Arrow kernel — the
-    # pandas_udf struct-array + JVM explode form paid per-doc Python tuple
-    # building and a Generate pass; one factorize + lexsort emits the
-    # exploded rows directly (same counting, same Java-\s tokenization).
+    # counting inside the doc row needs no shuffle at all. r7: (doc_id,
+    # term, tf) rows straight out of one Arrow kernel — one factorize +
+    # lexsort over _tokenize's tokens emits the exploded rows directly.
     def _doc_tf_rows(batches):
         import pyarrow as pa
 
         for batch in batches:
             ids = batch.column(0).to_numpy()
-            texts = batch.column(1).to_pylist()
-            toks_flat: list[str] = []
-            lens = np.empty(len(texts), dtype=np.int64)
-            for i, t in enumerate(texts):
-                tl = [tok for tok in _ws.split((t or "").lower()) if tok]
-                lens[i] = len(tl)
-                toks_flat.extend(tl)
+            toks, _ = _tokenize(batch.column(1).to_pylist())
+            toks_flat, lens = _flatten(toks)
             if not toks_flat:
                 continue
             codes, uniq = pd.factorize(pd.Series(toks_flat), sort=False)
-            docidx = np.repeat(np.arange(len(texts)), lens)
+            docidx = np.repeat(np.arange(len(toks)), lens)
             order = np.lexsort((codes, docidx))
             d_s = docidx[order]
             c_s = codes[order]
@@ -1746,43 +1591,10 @@ def keywords_tfidf(
     n_docs = d.count()
     from pyspark.sql import Window
 
-    # df per term = number of docs containing the term (same value by
-    # definition). r7: per-batch PARTIAL doc counts fold in-row in an
-    # Arrow kernel — only ~batch-vocabulary (term, count) rows reach the
-    # final aggregation, instead of exploding every distinct token
-    # occurrence through an interpreted HOF inside the single-task scan
-    # (2.9s -> ~0.5s noop-isolated at the measurement scale). Joined back
-    # by Spark's size-estimated strategy (broadcast at test scale; SMJ if
-    # a real corpus's vocabulary outgrows it).
-    def _partial_df(batches):
-        from collections import Counter
-
-        import pyarrow as pa
-
-        for batch in batches:
-            texts = batch.column(0).to_pylist()
-            c: Counter = Counter()
-            for t in texts:
-                if t is None:
-                    continue
-                c.update(set(tok for tok in _ws.split(t.lower()) if tok))
-            if not c:
-                continue
-            yield pa.record_batch(
-                [
-                    pa.array(list(c.keys()), type=pa.string()),
-                    pa.array(list(c.values()), type=pa.int64()),
-                ],
-                names=["term", "c"],
-            )
-
-    dfreq = (
-        _docs_wide(spark, sf_dir)
-        .select("text")
-        .mapInArrow(_partial_df, "term string, c long")
-        .groupBy("term")
-        .agg(F.sum("c").alias("df"))
-    )
+    # df per term = number of docs containing it = its tf rows (the twin's
+    # dfreq); map-side partial counts keep the exchange at batch-vocabulary
+    # size
+    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     scored = (
         tf.join(dfreq, "term")
         .select(
@@ -1827,6 +1639,10 @@ WINNOW_W = 4
 WINNOW_B = 257
 WINNOW_P = 1_000_000_007
 _WINNOW_POW = [pow(WINNOW_B, WINNOW_K - 1 - j, WINNOW_P) for j in range(WINNOW_K)]
+# Unicode category Zs (space separators): what DuckDB's trim() strips
+_ZS = (
+    " \u00a0\u1680" + "".join(map(chr, range(0x2000, 0x200B))) + "\u202f\u205f\u3000"
+)
 
 
 def winnow_min_hashes(s: str) -> list[int]:
@@ -1915,8 +1731,11 @@ def fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
             for j in range(1, w):
                 np.minimum(mn, h[j : total - (w - 1) + j], out=mn)
             nw = np.maximum(m - (w - 1), 1)
+            # NULL text -> NULL fingerprint (md5(NULL), as in the twin)
             out = [
-                ",".join(
+                None
+                if texts[i] is None
+                else ",".join(
                     map(
                         str,
                         np.unique(mn[offs[i] : offs[i] + nw[i]]).tolist(),
@@ -1930,9 +1749,11 @@ def fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     d = _docs_wide(spark, sf_dir)
-    norm = r"trim(regexp_replace(lower(text), '\\s+', ' '))"
+    # Spark's trim() strips only ' ', DuckDB's (the twin's) every Unicode
+    # space separator (Zs): trim that set
+    norm = F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "), F.lit(_ZS))
     return (
-        d.selectExpr("doc_id", f"{norm} AS s")
+        d.select("doc_id", norm.alias("s"))
         .mapInArrow(_fps, "doc_id long, fp string")
         .select("doc_id", F.md5(F.col("fp")).alias("winnow_fp"))
         .orderBy("doc_id")
@@ -1947,25 +1768,21 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # array ops inside the single-task parquet scan). Parity: Python
     # sorted() orders code points and JVM array_sort orders UTF8 bytes —
     # identical orderings (UTF-8 is order-preserving); md5 hex lowercase
-    # both sides; NULL text -> NULL fingerprint.
+    # both sides. NULL and zero-token docs -> NULL fingerprint (the twin's
+    # array_to_string over an empty list is NULL).
     def _fp(batches):
-        import hashlib
-
         import pyarrow as pa
 
         for batch in batches:
             did = batch.column(0)
             if len(did) == 0:
                 continue
-            texts = batch.column(1).to_pylist()
-            toks = _java_ws_split(texts, lower=True)
+            toks, _ = _tokenize(batch.column(1).to_pylist())
             fps = [
-                None
-                if t is None
-                else hashlib.md5(
-                    " ".join(sorted(set(tl))).encode("utf-8")
-                ).hexdigest()
-                for t, tl in zip(texts, toks)
+                hashlib.md5(" ".join(sorted(set(tl))).encode("utf-8")).hexdigest()
+                if tl
+                else None
+                for tl in toks
             ]
             yield pa.record_batch(
                 [did, pa.array(fps, type=pa.string())],
@@ -2224,8 +2041,6 @@ def multimodal_feature_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = synth_media(spark, sf_dir)
 
     def extract(batches):
-        import hashlib
-
         for pdf in batches:
             feats = []
             for b in pdf["media"]:

@@ -1660,10 +1660,11 @@ def segment_search(
         seg_rows = index.segments
         if scan_cond is not None:
             seg_rows = seg_rows.where(scan_cond)
-        # union in one stub row per segment so empty segments still appear
-        all_segs = index.segments.select("seg_id").distinct()
-        stub = all_segs.select(
-            "seg_id",
+        # union in one stub row per segment of the id span so posting-less
+        # segments still appear — from a driver-side range, as in
+        # segment_batch_search (no distinct() scan + shuffle of segments)
+        stub = index.spark.range(_n_segs_span(index, n_docs, seg_size)).select(
+            F.col("id").cast("long").alias("seg_id"),
             F.lit("__stub__").alias("field"),
             F.lit("").alias("term"),
             F.lit(0).cast("long").alias("df"),

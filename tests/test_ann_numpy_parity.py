@@ -10,8 +10,46 @@ from pyspark.sql import functions as F
 
 import ferret_spark.pipeline as P
 from tests.conftest import spark  # noqa: F401
+from tests.jvm_forms import toks_col
 
 SF = "/root/testdata/sf0.01"
+
+# --- the JVM expression forms the numpy kernels replaced ---------------------
+
+
+def _bucket_expr_sql(vec: str, planes: list[list[float]]) -> str:
+    """Spark SQL: LSH bucket id = sign-bit pattern of plane projections."""
+    parts = []
+    for p, plane in enumerate(planes):
+        arr = ", ".join(repr(c) for c in plane)
+        dot = (
+            f"aggregate(zip_with({vec}, array({arr}), (x, y) -> x * y),"
+            f" 0D, (s, x) -> s + x)"
+        )
+        parts.append(f"IF({dot} > 0, {1 << p}, 0)")
+    return " + ".join(parts)
+
+
+def _ivf_assign(emb, spark, cents):
+    """Assign every vector to its max-dot centroid as a JVM fold over one
+    broadcast codebook row; ties go to the larger centroid id (struct max
+    over (dot, id))."""
+    cents_df = spark.createDataFrame(
+        [([(i, c) for i, c in enumerate(cents)],)],
+        "cents array<struct<cid:int,c:array<double>>>",
+    )
+    return (
+        emb.crossJoin(F.broadcast(cents_df))
+        .withColumn(
+            "cid",
+            F.expr(
+                "array_max(transform(cents, s -> struct("
+                "aggregate(zip_with(e, s.c, (x, y) -> x * y), 0D,"
+                " (a, x) -> a + x) AS d, s.cid AS i))).i"
+            ),
+        )
+        .drop("cents")
+    )
 
 
 def _emb_np(spark):
@@ -34,7 +72,7 @@ def test_bucket_bits_match_jvm(spark):  # noqa: F811
             "vec_id",
             F.expr("transform(embedding, x -> cast(x as double))").alias("e"),
         )
-        .withColumn("bucket", F.expr(P._bucket_expr_sql("e", planes)))
+        .withColumn("bucket", F.expr(_bucket_expr_sql("e", planes)))
         .orderBy("vec_id")
         .collect()
     )
@@ -87,7 +125,7 @@ def test_ivf_assignment_matches_jvm(spark):  # noqa: F811
     )
     jvm = {
         r["vec_id"]: r["cid"]
-        for r in P.ivf_assign(emb, spark, cents).select("vec_id", "cid").collect()
+        for r in _ivf_assign(emb, spark, cents).select("vec_id", "cid").collect()
     }
     C_arr = np.asarray(cents, dtype=np.float64)
     D = np.empty((len(E), len(cents)), dtype=np.float64)
@@ -107,7 +145,7 @@ def test_simhash_matches_aggregate_form(spark):  # noqa: F811
     }
     # pre-r7 shape: 60 conditional SUM aggregates over exploded tokens
     d = P._docs_wide(spark, sf).select(
-        "doc_id", P._toks_col().alias("toks")
+        "doc_id", toks_col().alias("toks")
     )
     ex = d.select("doc_id", F.explode("toks").alias("t")).select(
         "doc_id",

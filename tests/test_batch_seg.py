@@ -149,3 +149,33 @@ def test_seg_batch_plan_shape(seg):
     n_py = plan.count("FlatMapGroupsInPandas") + plan.count("MapInPandas")
     assert n_py == 1, plan
     df.collect()  # and it actually runs
+
+
+def test_pure_not_same_hits_on_posting_less_segment(spark, tmp_path):
+    """A pure-NOT query is MatchAll minus the NOT term, so both search
+    paths must visit every segment of the id span — including one whose
+    docs have no postings at all (the second generation's empty docs)."""
+    from ferret_spark.ind import FerretIndex
+
+    idx = FerretIndex(
+        spark, str(tmp_path / "gens"), {"content": "whitespace"}, seg_size=2
+    )
+    gen1 = [
+        {"doc_id": 0, "content": "apple banana"},
+        {"doc_id": 1, "content": "cherry"},
+        {"doc_id": 2, "content": "apple"},
+    ]
+    gen2 = [{"doc_id": 0, "content": ""}, {"doc_id": 1, "content": ""}]
+    idx.add_documents(spark.createDataFrame(gen1), doc_id_col="doc_id")
+    idx.add_documents(spark.createDataFrame(gen2), doc_id_col="doc_id")
+    q = BooleanQuery.of((T("apple"), MUST_NOT))
+    single = segment_search(idx.index, q, k=K).collect()
+    batch = sorted(
+        segment_batch_search(idx.index, [q], k=K).collect(),
+        key=lambda r: r["rank"],
+    )
+    # gen2 starts at the next segment boundary: ids 4, 5 in segment 2
+    assert [r["doc_id"] for r in single] == [1, 4, 5]
+    assert [r["doc_id"] for r in batch] == [r["doc_id"] for r in single]
+    for b, s in zip(batch, single):
+        assert np.float32(b["score"]) == np.float32(s["score"])

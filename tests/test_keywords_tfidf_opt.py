@@ -1,5 +1,5 @@
-"""keywords_tfidf round-7 rewrite parity: the Arrow per-doc tf counter +
-in-row-distinct df branch must reproduce the explode/groupBy/self-join
+"""keywords_tfidf round-7 rewrite parity: the Arrow per-doc tf counter,
+with df counted from its rows, must reproduce the explode/groupBy/self-join
 form exactly (same tokens, same counts, same top-k serialization)."""
 
 from __future__ import annotations
@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from ferret_spark.pipeline import keywords_tfidf
 from tests.conftest import spark  # noqa: F401
+from tests.jvm_forms import toks_col
 
 
 def _reference_keywords(spark, sf_dir, k=3):
@@ -16,9 +17,7 @@ def _reference_keywords(spark, sf_dir, k=3):
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     toks = d.select(
         "doc_id",
-        F.explode(
-            F.expr(r"filter(split(lower(text), '\\s+'), t -> t <> '')")
-        ).alias("term"),
+        F.explode(toks_col()).alias("term"),
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     n_docs = d.count()
@@ -65,7 +64,8 @@ def test_keywords_matches_reference_shape(spark):  # noqa: F811
 
 
 def test_arrow_tokenizer_matches_jvm_split(spark):  # noqa: F811
-    # whitespace-edge shapes: Java \s class, empties, case folding
+    # the pipeline's one tokenizer on whitespace-edge shapes: Java \s
+    # class, empties, case folding, Python-only whitespace inside a token
     rows = [
         (0, "A b  c\td\ne"),
         (1, "  leading and trailing  "),
@@ -73,23 +73,26 @@ def test_arrow_tokenizer_matches_jvm_split(spark):  # noqa: F811
         (3, "ONE one OnE"),
         (4, "x\x0by\fz\rw"),
         (5, "solo"),
+        (6, "nbsp\u00a0inside x\u2028y\x1cz"),
+        (7, "\u00a0lead and trail\u2028"),
+        (8, "\u00a0"),
+        (9, " \x1c \u00a0\u00a0 \x85"),
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string")
     jvm = d.select(
         "doc_id",
-        F.explode(
-            F.expr(r"filter(split(lower(text), '\\s+'), t -> t <> '')")
-        ).alias("term"),
+        F.explode(toks_col()).alias("term"),
     ).groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    import re
     from collections import Counter
 
-    ws = re.compile("[ \t\n\x0b\f\r]+")
-    want = set()
-    for i, t in rows:
-        for term, tf in Counter(
-            tok for tok in ws.split(t.lower()) if tok
-        ).items():
-            want.add((i, term, tf))
+    from ferret_spark.pipeline import _tokenize
+
+    toks, null = _tokenize([t for _, t in rows])
+    assert not null.any()
+    want = {
+        (i, term, tf)
+        for (i, _), tl in zip(rows, toks)
+        for term, tf in Counter(tl).items()
+    }
     got = {(r["doc_id"], r["term"], r["tf"]) for r in jvm.collect()}
     assert got == want

@@ -74,3 +74,14 @@ def test_ngram_jaccard_low_threshold_matches_reference(spark):  # noqa: F811
     want = _reference_pairs(spark, sf_dir, threshold=0.05).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
     assert len(got) > 0
+
+
+def test_size_ratio_bound_emptying_every_pair(spark, tmp_path):  # noqa: F811
+    """The map-side size-ratio bound can drop every candidate pair of a
+    batch; the blob stage must then emit nothing instead of indexing an
+    empty shard array (IndexError at threshold 0.4)."""
+    long_doc = "a b c " + " ".join(f"w{i}" for i in range(40))
+    spark.createDataFrame(
+        [(0, "a b c"), (1, long_doc)], "doc_id long, text string"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    assert dedup_ngram_jaccard(spark, str(tmp_path), threshold=0.4).collect() == []

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 import ferret_spark.pipeline as P
 from tests.conftest import spark  # noqa: F401
+from tests.jvm_forms import toks_col
 
 ROWS = [
     (0, "one two three two one"),
@@ -22,7 +23,7 @@ ROWS = [
 
 def _jvm_simhash(spark, df):
     """Pre-r7 shape: exploded JVM md5 + 60 conditional SUM aggregates."""
-    ex = df.select("doc_id", F.explode(P._toks_col()).alias("t")).select(
+    ex = df.select("doc_id", F.explode(toks_col()).alias("t")).select(
         "doc_id",
         F.expr("cast(conv(substr(md5(t), 1, 15), 16, 10) as bigint)").alias(
             "h"

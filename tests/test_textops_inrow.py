@@ -1,6 +1,9 @@
 """r7 in-row text-op kernels (quality / lang_id / token_count /
 fingerprint) vs the JVM expression forms they replaced: values must match
-exactly, including NULL-text propagation and Java-\\s tokenization."""
+exactly, including NULL-text propagation and Java-\\s tokenization.
+Where the JVM form and the DuckDB twin disagree on a NULL or zero-token
+doc, the kernels give the twin's value (tests/test_pipeline_edge_twins.py)
+and the expectation here says so row by row."""
 
 from __future__ import annotations
 
@@ -9,6 +12,7 @@ from pyspark.sql import functions as F
 
 import ferret_spark.pipeline as P
 from tests.conftest import spark  # noqa: F401
+from tests.jvm_forms import toks_col
 
 EDGE_ROWS = [
     (0, "The quick brown fox and the lazy dog of it"),
@@ -19,6 +23,11 @@ EDGE_ROWS = [
     (5, "num3ric 42 mix3d punct!x, y-z"),
     (6, "dup dup dup"),
     (7, "UPPER lower MiXeD"),
+    # NBSP, not U+2028, at the end: Java's '$' in rlike '^[a-z]+$' also
+    # matches before a final U+2028, the kernel and the DuckDB twin do not
+    # (tests/test_pipeline_edge_twins.py holds that row)
+    (8, "\u00a0lead and trail\u00a0"),
+    (9, "\u00a0"),
 ]
 
 
@@ -39,7 +48,7 @@ def _by_id(rows):
 def test_quality_matches_jvm(spark, docs_df, monkeypatch):  # noqa: F811
     _patch(monkeypatch, docs_df)
     got = _by_id(P.text_quality(spark, "unused").collect())
-    toked = docs_df.select("doc_id", P._toks_col().alias("_t"))
+    toked = docs_df.select("doc_id", toks_col().alias("_t"))
     staged = toked.select(
         "doc_id",
         F.expr(
@@ -64,6 +73,10 @@ def test_quality_matches_jvm(spark, docs_df, monkeypatch):  # noqa: F811
             ).alias("quality_score"),
         ).collect()
     )
+    # zero-token "": the JVM form gives mean_token_len 0.0 and score 0.0;
+    # the twin's sum over an empty list is NULL, scoring least(NULL, 1)
+    assert want[1] == (0.0, 0.0, 0, 0.0)
+    want[1] = (None, 0.0, 0, 0.3)
     assert got == want
 
 
@@ -71,7 +84,7 @@ def test_lang_id_matches_jvm(spark, docs_df, monkeypatch):  # noqa: F811
     _patch(monkeypatch, docs_df)
     got = _by_id(P.text_lang_id(spark, "unused").collect())
     sw_lit = ", ".join(f"'{w}'" for w in sorted(P.ENGLISH_STOP_WORDS))
-    toked = docs_df.select("doc_id", P._toks_col().alias("_t"))
+    toked = docs_df.select("doc_id", toks_col().alias("_t"))
     want = _by_id(
         toked.select(
             "doc_id",
@@ -85,6 +98,9 @@ def test_lang_id_matches_jvm(spark, docs_df, monkeypatch):  # noqa: F811
         )
         .collect()
     )
+    # NULL text: the JVM form's flag is NULL, the twin's CASE gives 0
+    assert want[2] == (None, None)
+    want[2] = (None, 0)
     assert got == want
 
 
@@ -119,6 +135,9 @@ def test_fingerprint_matches_jvm(spark, docs_df, monkeypatch):  # noqa: F811
             ).alias("fingerprint"),
         ).collect()
     )
+    # zero-token "": the JVM form hashes "", the twin's md5 is of NULL
+    assert want[1] == ("d41d8cd98f00b204e9800998ecf8427e",)
+    want[1] = (None,)
     assert got == want
 
 
@@ -126,7 +145,7 @@ def test_textops_match_jvm_on_corpus(spark, monkeypatch):  # noqa: F811
     df = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     _patch(monkeypatch, df)
     got = _by_id(P.text_quality(spark, "unused").collect())
-    toked = df.select("doc_id", P._toks_col().alias("_t"))
+    toked = df.select("doc_id", toks_col().alias("_t"))
     staged = toked.select(
         "doc_id",
         F.expr(
