@@ -1331,10 +1331,11 @@ def _q_seg_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment engine in ONE Spark job (wand.segment_batch_search): one
     segments scan with the union term predicate, one broadcast term_stats
     join, one _SegEval per segment serving every query (each posting list
-    decodes once for the whole batch). Per-query float32 scores are
-    identical to segment_search, so the SQL twin is the four single-query
-    twins stacked. Over-fetch + re-rank by the 4dp-rounded double score,
-    same convention as ft_seg_term."""
+    decodes once for the whole batch). segment_search plans a single
+    query through the same planner, so per-query float32 scores are
+    identical to it and the SQL twin is the four single-query twins
+    stacked. Over-fetch + re-rank by the 4dp-rounded double score, same
+    convention as ft_seg_term."""
     from ferret_spark.query import MUST, MUST_NOT, SHOULD, BooleanQuery, TermQuery
     from ferret_spark.wand import segment_batch_search
 

@@ -98,11 +98,6 @@ _K_MUST = 0  # scores and counts toward MUST coverage
 _K_SHOULD = 1  # scores
 _K_NOT = 2  # poisons the (query_id, doc_id) group
 
-_OUT_SCHEMA = (
-    "query_id int, rank long, doc_id long, score float"
-)
-
-
 def _clause_rows(qid: int, q: Query, dfs: dict, n_docs: int, avgdl_of):
     """(meta_rows, matchall_rows, n_must, qboost) for one rewritten query.
 
@@ -431,7 +426,11 @@ def batch_search(
         _phrase_scored_batch(index, phrase_qs, dfs) if phrase_qs else None
     )
     if not meta_rows and not ma_meta_rows and phrase_scored is None:
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        # ranked like a scored batch, so the score type follows score_round
+        empty = spark.createDataFrame(
+            [], "qid int, doc_id long, score64 double"
+        )
+        return _rank_topk(empty, k, score_round)
     if not meta_rows and not ma_meta_rows:
         return _rank_topk(phrase_scored, k, score_round)
 

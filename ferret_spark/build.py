@@ -46,25 +46,6 @@ def tokenize_udf(analyzer_name: str):
     return _tok
 
 
-def pairs_udf(analyzer_name: str):
-    """array<struct<term,pos>> — general form (hyphen pipelines)."""
-    analyzer = get_analyzer(analyzer_name)
-    schema = T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("term", T.StringType()),
-                T.StructField("pos", T.IntegerType()),
-            ]
-        )
-    )
-
-    @F.pandas_udf(schema)
-    def _tok(s: pd.Series) -> pd.Series:
-        return analyzer.pairs_pandas(s)
-
-    return _tok
-
-
 def doc_len_udf(analyzer_name: str):
     """int doc_len (post-filter token count) — avoids shipping whole token
     arrays through Arrow when only the BM25 length is needed."""

@@ -399,16 +399,6 @@ class FerretIndex:
     def _deleted_path(self) -> str:
         return os.path.join(self.path, "deleted")
 
-    def deleted_ids(self) -> set[int]:
-        """Driver-side set — tests/small indexes only; the search and
-        optimize paths use deleted_df() (never collected)."""
-        p = self._deleted_path()
-        if not os.path.exists(p):
-            return set()
-        return {
-            r["doc_id"] for r in self.spark.read.parquet(p).collect()
-        }
-
     def deleted_df(self) -> DataFrame | None:
         p = self._deleted_path()
         if not os.path.exists(p):
@@ -456,9 +446,9 @@ class FerretIndex:
     def search_batch(self, queries: list, k: int = 10) -> DataFrame:
         """Top-k for a whole query log in ONE Spark job — (query_id,
         rank, doc_id, score), float32-identical per query to search().
-        Deletions apply exactly as in search(). Supported shapes: term /
-        multi-term (prefix, wildcard, fuzzy rewrites) / flat boolean —
-        see wand.segment_batch_search."""
+        Deletions apply exactly as in search(), and every query shape
+        search() accepts is accepted: both plan through the same
+        wand._plan_segments."""
         from ferret_spark.wand import segment_batch_search
 
         return segment_batch_search(

@@ -11,7 +11,6 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ferret_spark import build as B
 from ferret_spark.query import Query
@@ -129,14 +128,12 @@ class SparkIndex:
     def doc_freqs(self, pairs: list[tuple[str, str]]) -> dict[tuple[str, str], int]:
         """Driver-side df lookup for the query terms (one tiny job with
         pushed-down predicates — the 'reader open' analog)."""
+        from ferret_spark.wand import _exact_pair_cond
+
         if not pairs:
             return {}
-        fields = sorted({f for f, _ in pairs})
-        terms = sorted({t for _, t in pairs})
         rows = (
-            self.term_stats.where(
-                F.col("field").isin(fields) & F.col("term").isin(terms)
-            )
+            self.term_stats.where(_exact_pair_cond(pairs))
             .select("field", "term", "df")
             .collect()
         )

@@ -79,9 +79,9 @@ __all__ = [
 ]
 
 # Target total position count per kernel invocation.  The static kernels
-# allocate ~25 full-length temporaries; called over a whole cross-segment
-# group's candidate set those walk DRAM, and with every core running one
-# such call the memory bus saturates (measured: batching segments 7x made
+# allocate ~25 full-length temporaries; called over a large candidate
+# set those walk DRAM, and with every core running one such call the
+# memory bus saturates (measured: 7 segments' candidates in one call made
 # the sloppy kernel SLOWER while the cheaper exact kernel sped up).  Rows
 # are scored independently, so the dispatch slices row blocks of ~this
 # many positions — temporaries stay cache-resident and the per-call numpy

@@ -910,15 +910,11 @@ class SegmentIndex:
         return self.stats["avgdl"][field]
 
     def doc_freqs(self, pairs):
+        from ferret_spark.wand import _exact_pair_cond
+
         if not pairs:
             return {}
-        fields = sorted({f for f, _ in pairs})
-        terms = sorted({t for _, t in pairs})
-        rows = (
-            self.term_stats.where(
-                F.col("field").isin(fields) & F.col("term").isin(terms)
-            ).collect()
-        )
+        rows = self.term_stats.where(_exact_pair_cond(pairs)).collect()
         got = {(r["field"], r["term"]): r["df"] for r in rows}
         return {p: got.get(p, 0) for p in pairs}
 

@@ -797,10 +797,8 @@ def _phrase_repeats(q: PhraseQuery) -> bool:
 
 def _phrase_freqs_from_decs(q: PhraseQuery, decs):
     """Kernel dispatch over per-slot decoded postings: ``decs[j]`` is
-    (ids sorted, tfs, (pos_flat, bounds), dls) in ANY consistent id
-    space (segment-local or global) -> (cand_ids, freqs, dls).  Shared
-    by the per-segment evaluator and the cross-segment phrase path
-    (which passes streams concatenated across a whole segment group)."""
+    (ids sorted, tfs, (pos_flat, bounds), dls) in segment-local ids
+    -> (cand_ids, freqs, dls)."""
     from ferret_spark.phrase_np import (
         exact_freqk_flat,
         sloppy_freq2_flat,
@@ -1392,42 +1390,6 @@ def _pack_deleted(deleted: DataFrame, seg_size: int, seg_schema) -> DataFrame:
     return _pack_ids(deleted, seg_size, seg_schema, "__del__")
 
 
-_BALANCED_KEY_CACHE: dict = {}
-
-
-def _balanced_group_keys(spark) -> list[int]:
-    """LONG group keys whose shuffle-hash partitions — pmod(hash(key), P)
-    for P = spark.sql.shuffle.partitions — are exactly 0..P-1, one each.
-    Grouping by these keys places one group per reduce partition, so a
-    ~P-group applyInPandas stage runs perfectly level instead of the
-    balls-in-bins layout hash keys give (max 3-4 groups on one partition
-    at m ~= P).  Found with one tiny spark.range probe job — the probe
-    evaluates the same Murmur3(seed 42) the shuffle's HashPartitioning
-    uses, so the mapping is exact by construction and robust to hash
-    version changes.  Cached per (application, P)."""
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ck = (spark.sparkContext.applicationId, P)
-    keys = _BALANCED_KEY_CACHE.get(ck)
-    if keys is None:
-        span = max(4096, P * 16)
-        rows = (
-            spark.range(span)
-            .select(
-                F.col("id"),
-                F.pmod(F.hash(F.col("id")), F.lit(P)).alias("p"),
-            )
-            .groupBy("p")
-            .agg(F.min("id").alias("k"))
-            .collect()
-        )
-        by_p = {int(r["p"]): int(r["k"]) for r in rows}
-        # a partition missing from the sample (P(empty) ~ e^-16 at the
-        # 16x oversample) just shrinks the usable group count
-        keys = [by_p[i] for i in range(P) if i in by_p]
-        _BALANCED_KEY_CACHE[ck] = keys
-    return keys
-
-
 def _n_segs_span(index, n_docs: int, seg_size: int) -> int:
     """Segment-id span [0, n_segs): derived from id_ranges' max id, NOT
     from the doc count — incremental adds align each batch to the next
@@ -1437,310 +1399,142 @@ def _n_segs_span(index, n_docs: int, seg_size: int) -> int:
     return max(1, -(-max_id // seg_size))
 
 
-def _phrase_group_search(
-    index, rq, seg_rows, dfs, avgdl_map, seg_size, n_docs,
-    local_k, k, offset, deleted_set,
-):
-    """Cross-segment phrase scoring: group key = seg_id // G, each group
-    decodes its segments' posting rows per slot, CONCATENATES the flat
-    streams (stored ids are global -> ascending across the group's
-    segments), and runs candidate intersection + the batch kernels ONCE
-    per group via _phrase_freqs_from_decs.  BM25 needs no per-segment
-    state for phrases — global df arrives on the __df__ stub rows, dl
-    rides the posting stream — so the per-segment fixed cost amortizes
-    over G segments.  G targets ~2 groups per core so the group fan-out
-    still saturates the cluster; index.phrase_group_segs overrides (tests
-    force multi-segment groups)."""
-    field = rq.field
-    boost = rq.boost
-    avgdl = avgdl_map.get(field, 1.0)
-    positions = rq.positions
-    n_segs = _n_segs_span(index, n_docs, seg_size)
-    g = getattr(index, "phrase_group_segs", None)
-    if g:
-        # test override: exact seg_id // G group shapes
-        grp_expr = F.floor(F.col("seg_id") / F.lit(int(g)))
-    else:
-        # contiguous seg ranges keyed by ENGINEERED group keys whose
-        # shuffle hash lands one group per reduce partition: with ~P
-        # hash-keyed groups in P partitions, balls-in-bins collisions put
-        # 3-4 groups on one partition while others idle — the reduce
-        # stage's critical path triples for nothing
-        keys = _balanced_group_keys(index.spark)
-        n_groups = max(1, min(n_segs, len(keys)))
-        slot = F.floor(
-            F.col("seg_id") * F.lit(int(n_groups)) / F.lit(int(n_segs))
-        ).cast("int")
-        # defensive clamp: an out-of-range element_at yields a NULL key
-        # that would silently pool stray segments into one group
-        slot = F.least(slot, F.lit(n_groups - 1))
-        grp_expr = F.element_at(
-            F.array(*[F.lit(int(kk)).cast("long") for kk in keys[:n_groups]]),
-            slot + F.lit(1),
-        )
-    del_static = (
-        np.fromiter(sorted(deleted_set), dtype=np.int64, count=len(deleted_set))
-        if deleted_set
-        else None
+def _stub_rows(seg_ids: DataFrame, bm_type, field, term, df) -> DataFrame:
+    """Posting-less rows in the segments schema, one per row of
+    ``seg_ids`` (whose ``id`` column becomes seg_id)."""
+    return seg_ids.select(
+        F.col("id").cast("long").alias("seg_id"),
+        field.alias("field"),
+        term.alias("term"),
+        df.cast("long").alias("df"),
+        F.lit(b"").alias("doc_bin"),
+        F.lit(b"").alias("tf_bin"),
+        F.lit(b"").alias("pos_bin"),
+        F.lit(b"").alias("dl_bin"),
+        F.lit(None).cast(bm_type).alias("block_meta"),
     )
 
-    def score_group(key, pdf):  # no hints: pyspark warns on partial grouped-map hints
-        empty = pd.DataFrame(
-            {"doc_id": np.empty(0, dtype=np.int64), "score": np.empty(0)}
-        )
-        dfs_local = dict(dfs)
-        rows_by_t: dict[str, list] = {}
-        del_parts = [] if del_static is None else [del_static]
-        for r in pdf.to_dict("records"):
-            fld = r["field"]
-            if fld.startswith("__df__:"):
-                dfs_local[(fld[7:], r["term"])] = int(r["df"])
-                continue
-            if fld == "__del__":
-                del_parts.append(
-                    np.frombuffer(bytes(r["doc_bin"]), dtype=np.int64)
-                )
-                continue
-            if fld != field:
-                continue
-            rows_by_t.setdefault(r["term"], []).append(
-                (
-                    int(r["seg_id"]),
-                    {
-                        "doc_bin": bytes(r["doc_bin"]),
-                        "tf_bin": bytes(r["tf_bin"]),
-                        "pos_bin": bytes(r["pos_bin"]),
-                        "dl_bin": bytes(r["dl_bin"]),
-                        "block_meta": [
-                            bm if isinstance(bm, dict) else bm.asDict()
-                            for bm in r["block_meta"]
-                        ],
-                        "df": int(r["df"]),
-                    },
-                )
-            )
-        # idf_sum over GLOBAL dfs in slot/alt order (same float64 add
-        # sequence as the per-segment evaluator and the oracle)
-        idf_sum = 0.0
-        for _, alts in positions:
-            for t in alts:
-                df_ = dfs_local.get((field, t), 0)
-                if df_ > 0:
-                    idf_sum += bm25_idf(df_, n_docs)
-        decs = []
-        for _, alts in positions:
-            parts = rows_by_t.get(alts[0])
-            if not parts:
-                return empty
-            parts.sort(key=lambda p: p[0])
-            decoded = [
-                decode_posting_list(row, with_positions="flat")
-                for _, row in parts
-            ]
-            if len(decoded) == 1:
-                ids, tfs, (pflat, bounds), dls = decoded[0]
-                decs.append((ids, tfs, (pflat, bounds[: len(tfs)]), dls))
-                continue
-            ids = np.concatenate([d[0] for d in decoded])
-            tfs = np.concatenate([d[1] for d in decoded])
-            pflat = np.concatenate([d[2][0] for d in decoded])
-            offs = np.cumsum([0] + [len(d[2][0]) for d in decoded[:-1]])
-            starts = np.concatenate(
-                [d[2][1][: len(d[1])] + o for d, o in zip(decoded, offs)]
-            )
-            dls = np.concatenate([d[3] for d in decoded])
-            decs.append((ids, tfs, (pflat, starts), dls))
-        cand, freq, dl = _phrase_freqs_from_decs(rq, decs)
-        if cand.size == 0:
-            return empty
-        if del_parts:
-            dead = np.concatenate(del_parts)
-            keep = ~np.isin(cand, dead)
-            cand, freq, dl = cand[keep], freq[keep], dl[keep]
-        nz = freq > 0.0
-        f = freq[nz]
-        dd = cand[nz]
-        # same float64 grouping as _eval_phrase
-        s = (
-            boost
-            * idf_sum
-            * (f * (K1 + 1.0))
-            / (f + K1 * (1.0 - B + B * dl[nz] / avgdl))
-        )
-        if local_k is not None and len(dd) > local_k:
-            f32 = s.astype(np.float32)
-            order = np.lexsort((dd, -f32))[:local_k]
-            dd = dd[order]
-            s = s[order]
-        return pd.DataFrame({"doc_id": dd.astype(np.int64), "score": s})
 
-    scored = seg_rows.groupBy(grp_expr.alias("_grp")).applyInPandas(
-        score_group, "doc_id long, score double"
-    )
-    ranked = scored.select(
-        "doc_id", F.col("score").cast("float").alias("score")
-    ).orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    if offset:
-        ranked = ranked.offset(offset)
-    if k is not None:
-        ranked = ranked.limit(k)
-    return ranked
-
-
-def segment_search(
+def _plan_segments(
     index,
-    q: Query,
-    k: int | None = 10,
-    offset: int = 0,
+    queries: list,
+    local_k: int | None,
     prune: bool = True,
     deleted=None,
+    deleted_cache_key=None,
     similarity: str = "bm25",
     doc_boosts: dict[int, float] | None = None,
     post_filter=None,
-    deleted_cache_key=None,
-) -> DataFrame:
-    """``deleted`` is a DataFrame with a doc_id column (distributed path —
-    each segment task receives only ITS deletions as a packed binary row)
-    or, legacy, a small driver-side set.
+) -> DataFrame | None:
+    """The segmented engine's one planner, shared by segment_search (a
+    batch of one) and segment_batch_search. ``queries`` holds
+    (qid, wand_rewrite-ten query) pairs. Returns each segment's local
+    top-``local_k`` hits per query as (qid, doc_id, score double), or None
+    when no query can match anything.
 
-    ``post_filter`` is the reference's user extension hook
-    (FrtPostFilter, c/include/search.h:763-769 applied in isea_search_w
-    c/src/search.c:1078-1092): callable(doc_id, score) -> factor; falsy
-    drops the hit, factor < 1.0 scales the score. It is pickled into the
-    scoring closure and runs executor-side BEFORE per-segment top-k, so
-    pruned results stay correct. Block-max pruning is disabled under a
-    post_filter (the reference's scorer loop likewise visits every hit).
+    ONE plan serves the union of the queries:
+    - one segments scan with the exact (field, term) pairs and any
+      uncapped range/match bounds pushed;
+    - one ``__stub__`` row per segment of the id span when any query
+      carries a MatchAll, so posting-less segments still score;
+    - global dfs fused into the scoring job (BM25), per query by the
+      shape's needs: flat term shapes read only locally present terms'
+      dfs, attached by a broadcast term_stats join (``gdf``); phrase and
+      span idf sums also cover terms absent from a segment, so their
+      terms ride to EVERY segment as ``__df__`` stub rows. TF-IDF
+      resolves dfs driver-side (qnorm needs them before the job);
+    - cached filter doc-id sets as packed ``__filt__`` rows;
+    - deletes as packed ``__del__`` rows, persisted per deletes state.
+
+    ONE groupBy(seg_id).applyInPandas closure parses a segment's rows
+    once and builds one evaluator, so each posting list decodes once no
+    matter how many queries read it. Each query then takes block-max
+    WAND (flat disjunctions), boolean WAND (term-like boolean trees) or
+    the exact ev.eval, followed by deletes, ``post_filter`` and the local
+    top-k cut.
     """
-    rq = wand_rewrite(index, q)
-    rq, cached_filters = _attach_filter_cache(index, rq)
-    pairs = sorted(set(_collect_terms(rq)))
-    ranges = _collect_ranges(rq)
+    attached, cached_filters = [], {}
+    for qid, rq in queries:
+        rq, cached = _attach_filter_cache(index, rq)
+        attached.append((qid, rq))
+        cached_filters.update(cached)
+    pairs = sorted({p for _, rq in attached for p in _collect_terms(rq)})
+    ranges = list(
+        dict.fromkeys(r for _, rq in attached for r in _collect_ranges(rq))
+    )
+    needs_all = any(_query_needs_all_docs(rq) for _, rq in attached)
+    if not pairs and not needs_all and not ranges and not cached_filters:
+        return None
+
     # cache the segments schema on the index — .schema is a py4j
-    # round-trip with JSON parsing (~20ms each), and plan construction
-    # needs it up to 3x per search
+    # round-trip with JSON parsing (~20ms each)
     seg_schema = getattr(index, "_seg_schema_cache", None)
     if seg_schema is None:
-        seg_schema = index.segments.schema
-        index._seg_schema_cache = seg_schema
+        seg_schema = index._seg_schema_cache = index.segments.schema
     bm_type = seg_schema["block_meta"].dataType
+    spark = index.spark
     n_docs = index.n_docs
     avgdl_map = dict(index.stats["avgdl"])
     seg_size = index.seg_size
-    needs_all = _query_needs_all_docs(rq)
+    n_segs = _n_segs_span(index, n_docs, seg_size)
+    id_ranges = getattr(index, "id_ranges", None) or [[0, n_docs]]
 
-    if not pairs and not needs_all and not ranges and not cached_filters:
-        return index.spark.createDataFrame([], "doc_id long, score float")
-
-    # Global df resolution. BM25 fuses the lookup INTO the scoring job:
-    # every matching segment gets one tiny __df__ stub row per query term
-    # (global df from a broadcast term_stats scan), so a search is ONE
-    # Spark job instead of doc_freqs-collect + scoring. TF-IDF still
-    # resolves driver-side (qnorm needs the dfs before the job).
-    fuse_dfs = similarity == "bm25" and bool(pairs)
-    dfs = {} if fuse_dfs else index.doc_freqs(pairs)
-
-    # scan predicate: exact (field, term) pushdown for the query's terms,
-    # OR'd with any uncapped range bounds (predicate stays executor-side —
-    # no driver term materialization)
-    scan_cond = None
-    if pairs:
-        scan_cond = _exact_pair_cond(pairs)
+    scan_cond = _exact_pair_cond(pairs) if pairs else None
     for r in ranges:
         rc = r.spark_cond()
         scan_cond = rc if scan_cond is None else (scan_cond | rc)
+    # no posting predicate (MatchAll / cached filters only): the stub and
+    # __filt__ rows below carry the whole answer
+    seg_rows = index.segments.where(
+        F.lit(False) if scan_cond is None else scan_cond
+    )
 
-    if not needs_all and scan_cond is None:
-        # filter-cache-only query: no posting rows needed at all — the
-        # packed __filt__ rows below carry the whole answer
-        seg_rows = index.segments.where(F.lit(False))
-    elif (pairs or ranges) and not needs_all:
-        seg_rows = index.segments.where(scan_cond)
-    else:
-        # MatchAll-bearing queries must visit every segment
-        seg_rows = index.segments
-        if scan_cond is not None:
-            seg_rows = seg_rows.where(scan_cond)
-        # union in one stub row per segment of the id span so posting-less
-        # segments still appear — from a driver-side range, as in
-        # segment_batch_search (no distinct() scan + shuffle of segments)
-        stub = index.spark.range(_n_segs_span(index, n_docs, seg_size)).select(
-            F.col("id").cast("long").alias("seg_id"),
-            F.lit("__stub__").alias("field"),
-            F.lit("").alias("term"),
-            F.lit(0).cast("long").alias("df"),
-            F.lit(b"").alias("doc_bin"),
-            F.lit(b"").alias("tf_bin"),
-            F.lit(b"").alias("pos_bin"),
-            F.lit(b"").alias("dl_bin"),
-            F.lit(None)
-            .cast(bm_type)
-            .alias("block_meta"),
-        )
-        seg_rows = seg_rows.unionByName(stub)
-
-    has_gdf = False
+    fuse_dfs = similarity == "bm25"
+    dfs = {} if fuse_dfs else index.doc_freqs(pairs)
+    absent, present = set(), set()
     if fuse_dfs:
-        ts_small = index.term_stats.where(
-            _exact_pair_cond(pairs)
-        ).select("field", "term", "df")
-        if _needs_absent_dfs(rq):
-            # phrase/span idf sums include terms absent from a given
-            # segment -> ship EVERY query term's global df to every
-            # segment as __df__ stub rows.  Segment ids are doc_id //
-            # seg_size, so the full id range is known DRIVER-SIDE — a
-            # spark.range avoids re-scanning the postings parquet (a
-            # .distinct() over seg_rows was a second full scan + shuffle
-            # per query, ~0.5s at 500k docs).  Stubs landing on segments
-            # with no posting rows form groups that return empty
-            # immediately (a slot is missing), so over-shipping is
-            # harmless.  The range MUST cover id_ranges' max, not
-            # ceil(n_docs/seg_size): incremental adds align each batch to
-            # the next segment boundary, so doc-id GAPS push the last
-            # segments past the count-derived bound — a stub range keyed
-            # on n_docs starves those segments of global dfs and their
-            # phrase matches silently score idf_sum = 0.
-            n_segs = _n_segs_span(index, n_docs, seg_size)
-            seg_ids_src = index.spark.range(n_segs).select(
-                F.col("id").cast("long").alias("seg_id")
+        for _, rq in attached:
+            (absent if _needs_absent_dfs(rq) else present).update(
+                _collect_terms(rq)
             )
-            df_stubs = seg_ids_src.crossJoin(F.broadcast(ts_small)).select(
-                "seg_id",
-                F.concat(F.lit("__df__:"), F.col("field")).alias("field"),
-                "term",
-                "df",
-                F.lit(b"").alias("doc_bin"),
-                F.lit(b"").alias("tf_bin"),
-                F.lit(b"").alias("pos_bin"),
-                F.lit(b"").alias("dl_bin"),
-                F.lit(None)
-                .cast(bm_type)
-                .alias("block_meta"),
+    has_gdf = bool(present)
+    if has_gdf:
+        gdf = index.term_stats.where(_exact_pair_cond(sorted(present))).select(
+            "field", "term", F.col("df").alias("gdf")
+        )
+        seg_rows = seg_rows.join(F.broadcast(gdf), ["field", "term"], "left")
+    extra = []
+    if needs_all:
+        extra.append(
+            _stub_rows(
+                spark.range(n_segs), bm_type,
+                F.lit("__stub__"), F.lit(""), F.lit(0),
             )
-            seg_rows = seg_rows.unionByName(df_stubs)
-        else:
-            # flat term queries only score terms that are locally present
-            # -> a broadcast hash join attaches each row's global df
-            # in-task (no extra shuffle, unlike a distinct+crossJoin)
-            has_gdf = True
-            seg_rows = seg_rows.join(
-                F.broadcast(ts_small.withColumnRenamed("df", "gdf")),
-                ["field", "term"],
-                "left",
+        )
+    if absent:
+        # stubs reach segments with no posting rows too; those return
+        # empty at once. The span MUST cover id_ranges' max (see
+        # _n_segs_span), or segments past a doc-id gap would score their
+        # phrase matches with idf_sum = 0.
+        ts_small = index.term_stats.where(_exact_pair_cond(sorted(absent)))
+        extra.append(
+            _stub_rows(
+                spark.range(n_segs).crossJoin(
+                    F.broadcast(ts_small.select("field", "term", "df"))
+                ),
+                bm_type,
+                F.concat(F.lit("__df__:"), F.col("field")),
+                F.col("term"),
+                F.col("df"),
             )
-
-    # cached filter doc-id sets ride the same seg_id shuffle as postings
+        )
     for tag, cdir in cached_filters.items():
-        fdf = index.spark.read.parquet(cdir)
-        frows = _pack_ids(fdf, seg_size, seg_schema, f"__filt__:{tag}")
-        if has_gdf:
-            frows = frows.withColumn("gdf", F.lit(None).cast("long"))
-        seg_rows = seg_rows.unionByName(frows)
-
-    if deleted is not None and isinstance(deleted, DataFrame):
-        # the pack is a groupBy shuffle of the deletes parquet — cache it
-        # per deletes-state so repeated searches on the same index
-        # generation reuse the persisted partitions (the caller supplies
-        # the state key; FerretIndex keys on the deletes dir listing)
+        fdf = spark.read.parquet(cdir)
+        extra.append(_pack_ids(fdf, seg_size, seg_schema, f"__filt__:{tag}"))
+    if deleted is not None:
+        # the pack is a groupBy shuffle of the deletes parquet — persist
+        # it per deletes state (the caller's key; FerretIndex keys on the
+        # deletes dir listing) so repeated searches reuse the partitions
         cached = getattr(index, "_packed_del_cache", None)
         if (
             deleted_cache_key is not None
@@ -1755,78 +1549,50 @@ def segment_search(
                 if cached is not None:
                     cached[1].unpersist()
                 index._packed_del_cache = (deleted_cache_key, del_rows)
+        extra.append(del_rows)
+    for rows in extra:
         if has_gdf:
-            del_rows = del_rows.withColumn("gdf", F.lit(None).cast("long"))
-        seg_rows = seg_rows.unionByName(del_rows)
-        deleted = None  # handled distributively
+            rows = rows.withColumn("gdf", F.lit(None).cast("long"))
+        seg_rows = seg_rows.unionByName(rows)
 
-    local_k = None if k is None else offset + k
     # interval block-max WAND pays off for small disjunctions; past ~32
     # terms the vectorized dense-accumulator exact path is faster (one
-    # np.add.at per term vs per-interval × per-term slicing)
-    use_wand = (
+    # np.add.at per term vs per-interval × per-term slicing). It needs
+    # positive BM25 scores and a top-k, and a post_filter must see every
+    # hit (the reference's scorer loop likewise visits every hit).
+    may_prune = (
         prune
         and similarity == "bm25"
         and post_filter is None
         and local_k is not None
-        and isinstance(rq, MultiTermQuery)
-        and len(rq.terms) <= 32
-        and rq.boost > 0.0
-        and all(tb > 0.0 for _, tb in rq.terms)
     )
-    use_bool_wand = (
-        prune
-        and similarity == "bm25"
-        and post_filter is None
-        and local_k is not None
-        and _bool_wandable(rq)
-    )
-    qnorm = 1.0
-    if similarity == "tfidf":
-        from ferret_spark import similarity as S
+    plans = []  # (qid, query, pruner or None, tfidf qnorm or None)
+    for qid, rq in attached:
+        pruner = qnorm = None
+        if similarity == "tfidf":
+            from ferret_spark import similarity as S
 
-        qnorm = S.query_norm(S.sum_sq_weights(rq, dfs, n_docs, None))
-    doc_boosts = doc_boosts or {}
-    rq_for_exec = rq
-
-    deleted = deleted or set()
-    id_ranges = getattr(index, "id_ranges", None) or [[0, n_docs]]
-
-    # plain phrases take the CROSS-SEGMENT batch path: several segments
-    # share one applyInPandas group and their decoded posting streams
-    # concatenate (stored doc ids are global, so per-slot streams stay
-    # sorted), so the fixed per-segment eval cost — row parsing, decode
-    # dispatch, candidate intersect, one kernel invocation — is paid once
-    # per GROUP.  At 2M docs / 488 segments this is the difference
-    # between 488 and ~70 kernel invocations for the same work.
-    if (
-        similarity == "bm25"
-        and post_filter is None
-        and not cached_filters
-        and isinstance(rq, PhraseQuery)
-        and rq.positions
-        and all(len(alts) == 1 for _, alts in rq.positions)
-    ):
-        return _phrase_group_search(
-            index, rq, seg_rows, dfs, avgdl_map, seg_size, n_docs,
-            local_k, k, offset, deleted,
-        )
+            qnorm = S.query_norm(S.sum_sq_weights(rq, dfs, n_docs, None))
+        elif (
+            may_prune
+            and isinstance(rq, MultiTermQuery)
+            and len(rq.terms) <= 32
+            and rq.boost > 0.0
+            and all(tb > 0.0 for _, tb in rq.terms)
+        ):
+            pruner = _wand_multiterm_topk
+        elif may_prune and _bool_wandable(rq):
+            pruner = _wand_bool_topk
+        plans.append((qid, rq, pruner, qnorm))
 
     def score_segment(key, pdf):  # no hints: pyspark warns on partial grouped-map hints
-        seg_id = int(key[0])
-        base = seg_id * seg_size
-        seg_n = seg_size
-        del_local = (
-            np.array(
-                sorted(d - base for d in deleted if base <= d < base + seg_n),
-                dtype=np.int64,
-            )
-            if deleted
-            else None
-        )
+        from ferret_spark.segments import _row_to_codec
+
+        base = int(key[0]) * seg_size
         dfs_local = dict(dfs)
         rows_by_ft = {}
         filt_local: dict[str, np.ndarray] = {}
+        del_local = None
         # records, not iterrows: no per-row Series construction (rows here
         # = query terms x segments, small but on every search's hot path)
         for r in pdf.to_dict("records"):
@@ -1840,85 +1606,108 @@ def segment_search(
                 ids = np.frombuffer(bytes(r["doc_bin"]), dtype=np.int64)
                 filt_local[fld[9:]] = ids - base
                 continue
-            if has_gdf and not pd.isna(r["gdf"]):
-                dfs_local[(fld, r["term"])] = int(r["gdf"])
             if fld == "__del__":
                 ids = np.frombuffer(bytes(r["doc_bin"]), dtype=np.int64)
                 dl2 = ids - base
                 del_local = (
-                    dl2
-                    if del_local is None
-                    else np.union1d(del_local, dl2)
+                    dl2 if del_local is None else np.union1d(del_local, dl2)
                 )
                 continue
-            rows_by_ft[(fld, r["term"])] = {
-                "doc_bin": bytes(r["doc_bin"]),
-                "tf_bin": bytes(r["tf_bin"]),
-                "pos_bin": bytes(r["pos_bin"]),
-                "dl_bin": bytes(r["dl_bin"]),
-                "block_meta": [
-                    bm if isinstance(bm, dict) else bm.asDict()
-                    for bm in r["block_meta"]
-                ],
-                "df": int(r["df"]),
-            }
+            if has_gdf and not pd.isna(r["gdf"]):
+                dfs_local[(fld, r["term"])] = int(r["gdf"])
+            rows_by_ft[(fld, r["term"])] = _row_to_codec(r)
+        args = (
+            rows_by_ft, dfs_local, n_docs, avgdl_map, base, seg_size,
+            id_ranges,
+        )
         if similarity == "tfidf":
-            ev = _SegEvalTFIDF(
-                rows_by_ft,
-                dfs_local,
-                n_docs,
-                avgdl_map,
-                base,
-                seg_n,
-                id_ranges,
-                qnorm=qnorm,
-                doc_boosts=doc_boosts,
-            )
+            ev = _SegEvalTFIDF(*args, doc_boosts=doc_boosts)
         else:
-            ev = _SegEval(
-                rows_by_ft, dfs_local, n_docs, avgdl_map, base, seg_n, id_ranges
-            )
+            ev = _SegEval(*args)
         ev.cached_filters = filt_local
-        if use_wand and isinstance(rq_for_exec, MultiTermQuery):
-            docs, scores = _wand_multiterm_topk(
-                ev, rq_for_exec, local_k, del_local
-            )
-            return pd.DataFrame(
-                {"doc_id": [d + base for d in docs], "score": scores}
-            )
-        if use_bool_wand and isinstance(rq_for_exec, BooleanQuery):
-            docs, scores, _skipped = _wand_bool_topk(
-                ev, rq_for_exec, local_k, del_local
-            )
-            return pd.DataFrame(
-                {"doc_id": [d + base for d in docs], "score": scores}
-            )
-        mask, score = ev.eval(rq_for_exec)
-        if del_local is not None and len(del_local):
-            mask[del_local] = False
-        if post_filter is not None:
-            for d in np.flatnonzero(mask):
-                f = post_filter(int(d) + base, float(score[d]))
-                if not f:
-                    mask[d] = False
-                elif f < 1.0:
-                    score[d] = score[d] * f
-        locs = np.flatnonzero(mask)
-        if local_k is not None and len(locs) > local_k:
-            s = score[locs]
-            f32 = s.astype(np.float32)
-            order = np.lexsort((locs, -f32))[:local_k]
-            locs = locs[order]
+        out_q, out_d, out_s = [], [], []
+        for qid, rq, pruner, qnorm in plans:
+            if pruner is not None:
+                docs, scores = pruner(ev, rq, local_k, del_local)[:2]
+                locs = np.asarray(docs, dtype=np.int64)
+                s = np.asarray(scores, dtype=np.float64)
+            else:
+                if qnorm is not None:
+                    ev.qnorm = qnorm
+                mask, score = ev.eval(rq)
+                if del_local is not None and len(del_local):
+                    mask[del_local] = False
+                if post_filter is not None:
+                    for d in np.flatnonzero(mask):
+                        f = post_filter(int(d) + base, float(score[d]))
+                        if not f:
+                            mask[d] = False
+                        elif f < 1.0:
+                            score[d] = score[d] * f
+                locs = np.flatnonzero(mask)
+                if local_k is not None and len(locs) > local_k:
+                    f32 = score[locs].astype(np.float32)
+                    locs = locs[np.lexsort((locs, -f32))[:local_k]]
+                s = score[locs]
+            out_q.append(np.full(len(locs), qid, dtype=np.int32))
+            out_d.append(locs + base)
+            out_s.append(s)
         return pd.DataFrame(
             {
-                "doc_id": (locs + base).astype(np.int64),
-                "score": score[locs] if len(locs) else np.empty(0),
+                "qid": np.concatenate(out_q),
+                "doc_id": np.concatenate(out_d),
+                "score": np.concatenate(out_s),
             }
         )
 
-    scored = seg_rows.groupBy("seg_id").applyInPandas(
-        score_segment, "doc_id long, score double"
+    return seg_rows.groupBy("seg_id").applyInPandas(
+        score_segment, "qid int, doc_id long, score double"
     )
+
+
+def segment_search(
+    index,
+    q: Query,
+    k: int | None = 10,
+    offset: int = 0,
+    prune: bool = True,
+    deleted=None,
+    similarity: str = "bm25",
+    doc_boosts: dict[int, float] | None = None,
+    post_filter=None,
+    deleted_cache_key=None,
+) -> DataFrame:
+    """Top-k (doc_id, score float) for one query: _plan_segments with a
+    batch of one, then orderBy(score desc, doc_id asc) + offset/limit
+    (``k=None`` returns every hit).
+
+    ``deleted`` is a DataFrame with a doc_id column — each segment task
+    receives only ITS deletions as a packed binary row;
+    ``deleted_cache_key`` keys the persisted pack.
+
+    ``post_filter`` is the reference's user extension hook
+    (FrtPostFilter, c/include/search.h:763-769 applied in isea_search_w
+    c/src/search.c:1078-1092): callable(doc_id, score) -> factor; falsy
+    drops the hit, factor < 1.0 scales the score. It is pickled into the
+    scoring closure and runs executor-side BEFORE per-segment top-k, so
+    pruned results stay correct. Block-max pruning is disabled under a
+    post_filter (the reference's scorer loop likewise visits every hit).
+    """
+    scored = _plan_segments(
+        index,
+        [(0, wand_rewrite(index, q))],
+        None if k is None else offset + k,
+        prune=prune,
+        deleted=deleted,
+        deleted_cache_key=deleted_cache_key,
+        similarity=similarity,
+        doc_boosts=doc_boosts,
+        post_filter=post_filter,
+    )
+    if scored is None:
+        return index.spark.createDataFrame([], "doc_id long, score float")
+    # orderBy + limit, not the batch's per-query window: a window over
+    # one query measured slower (term_hot p50 767 vs 691 ms)
     ranked = scored.select(
         "doc_id", F.col("score").cast("float").alias("score")
     ).orderBy(F.col("score").desc(), F.col("doc_id").asc())
@@ -1929,33 +1718,15 @@ def segment_search(
     return ranked
 
 
-def _batchable_seg_query(rq) -> bool:
-    """Shapes segment_batch_search accepts: TermQuery, MultiTermQuery,
-    and flat BooleanQuery whose scoring clauses are TermQuery or
-    MatchAllQuery (MUST_NOT clauses TermQuery) — the same surface as
-    batch.batch_search, so prefix/wildcard/fuzzy arrive via their capped
-    rewrites and pure-NOT booleans via the injected MatchAll."""
-    if isinstance(rq, (TermQuery, MultiTermQuery)):
-        return True
-    if isinstance(rq, BooleanQuery):
-        for c in rq.clauses:
-            if c.occur == MUST_NOT:
-                if not isinstance(c.query, TermQuery):
-                    return False
-            elif not isinstance(c.query, (TermQuery, MatchAllQuery)):
-                return False
-        return True
-    return False
-
-
-# Union-term budget per segment_batch_search job: each applyInPandas
-# group materializes ONE Arrow batch holding every matched term's posting
-# binaries for that segment, so a batch of B hot-term queries puts
-# O(union_terms x seg_bytes) in the JVM's direct-memory Arrow pool per
-# concurrent task. Measured on this box: ~128 hot terms per job is
-# comfortable, ~512 OOMs the default pool at 2M docs x 32 tasks.
-# Batches whose term union exceeds the budget split into sub-jobs —
-# still ~B/budget jobs instead of B.
+# Union-term budget per _plan_segments call of segment_batch_search:
+# each applyInPandas group materializes ONE Arrow batch holding every
+# matched term's posting binaries for that segment, so a batch of B
+# hot-term queries puts O(union_terms x seg_bytes) in the JVM's
+# direct-memory Arrow pool per concurrent task. Measured: ~128 hot terms
+# per plan is comfortable, ~512 OOMs the default pool at 2M docs x 32
+# tasks. A batch whose term union exceeds the budget is planned in
+# contiguous chunks whose scored rows union under one ranking window, so
+# no scoring task holds more than one chunk's postings.
 SEG_BATCH_TERM_BUDGET = 192
 
 
@@ -1974,186 +1745,37 @@ def segment_batch_search(
     The reference answers a query log one searcher call at a time
     (frt_isea_search_w, c/src/search.c:1049-1127) because its per-call
     fixed cost is microseconds; on Spark each call pays job submission +
-    a postings scan + a collect (~seconds at 2M docs), so a query log is
-    batched instead — the segment-store analog of batch.batch_search:
-
-    - ONE segments scan with the union (field, term) predicate pushed
-      (plus one stub row per segment when any query carries a MatchAll);
-    - global dfs fused in-task via one broadcast term_stats join;
-    - per segment group, ONE _SegEval serves every query: posting rows
-      parse once and each term DECODES ONCE into the evaluator's cache
-      no matter how many queries reference it — the per-query
-      incremental cost is just the numpy mask/score fold;
-    - per-(segment, query) top-k cut inside the group, then one global
-      per-query ranked window (float32 rank semantics, ties doc asc).
-
-    Shapes: see _batchable_seg_query; anything else raises ValueError —
-    route it through segment_search.  ``deleted`` is the packed-deletes
-    DataFrame path of segment_search (same per-state cache key).
+    a postings scan + a collect, so a query log is planned as one batch
+    by _plan_segments (the planner segment_search uses with a batch of
+    one): one segments scan, one evaluator per segment serving every
+    query, then one per-query ranked window (float32 rank semantics, ties
+    doc asc). Every query shape segment_search accepts is accepted here.
+    ``deleted`` is the packed-deletes DataFrame of segment_search (same
+    per-state cache key).
     """
-    rqs = []
-    for q in queries:
-        rq = wand_rewrite(index, q)
-        if not _batchable_seg_query(rq):
-            raise ValueError(
-                "segment_batch_search: unsupported query shape "
-                f"{type(rq).__name__} — use segment_search for this query"
-            )
-        rqs.append(rq)
-
     budget = SEG_BATCH_TERM_BUDGET if term_budget is None else term_budget
-    union_terms = {p for rq in rqs for p in _collect_terms(rq)}
-    if budget and len(union_terms) > budget and len(rqs) > 1:
-        # split into sub-jobs whose term unions fit the Arrow pool;
-        # query_id stays the caller's position via an offset re-map
-        out = None
-        chunk, seen = [], set()
-        start = 0
-        for i, rq in enumerate(rqs):
-            ts = set(_collect_terms(rq))
-            if chunk and len(seen | ts) > budget:
-                part = segment_batch_search(
-                    index, queries[start:i], k=k, deleted=deleted,
-                    deleted_cache_key=deleted_cache_key, term_budget=0,
-                ).withColumn(
-                    "query_id", F.col("query_id") + F.lit(start)
-                )
-                out = part if out is None else out.unionByName(part)
-                chunk, seen, start = [], set(), i
-            chunk.append(rq)
-            seen |= ts
-        part = segment_batch_search(
-            index, queries[start:], k=k, deleted=deleted,
-            deleted_cache_key=deleted_cache_key, term_budget=0,
-        ).withColumn("query_id", F.col("query_id") + F.lit(start))
-        return part if out is None else out.unionByName(part)
-
-    pairs = sorted(union_terms)
-    needs_all = any(_query_needs_all_docs(rq) for rq in rqs)
-    seg_schema = getattr(index, "_seg_schema_cache", None)
-    if seg_schema is None:
-        seg_schema = index.segments.schema
-        index._seg_schema_cache = seg_schema
-    bm_type = seg_schema["block_meta"].dataType
-    n_docs = index.n_docs
-    avgdl_map = dict(index.stats["avgdl"])
-    seg_size = index.seg_size
-    spark = index.spark
-    out_schema = "query_id int, rank long, doc_id long, score float"
-    if not pairs and not needs_all:
-        return spark.createDataFrame([], out_schema)
-
-    scan_cond = None
-    if pairs:
-        scan_cond = _exact_pair_cond(pairs)
-    if needs_all:
-        seg_rows = index.segments
-        if scan_cond is not None:
-            seg_rows = seg_rows.where(scan_cond)
-        n_segs = _n_segs_span(index, n_docs, seg_size)
-        stub = spark.range(n_segs).select(
-            F.col("id").cast("long").alias("seg_id"),
-            F.lit("__stub__").alias("field"),
-            F.lit("").alias("term"),
-            F.lit(0).cast("long").alias("df"),
-            F.lit(b"").alias("doc_bin"),
-            F.lit(b"").alias("tf_bin"),
-            F.lit(b"").alias("pos_bin"),
-            F.lit(b"").alias("dl_bin"),
-            F.lit(None).cast(bm_type).alias("block_meta"),
+    chunks, chunk, seen = [], [], set()
+    for qid, q in enumerate(queries):
+        rq = wand_rewrite(index, q)
+        ts = set(_collect_terms(rq))
+        if budget and chunk and len(seen | ts) > budget:
+            chunks.append(chunk)
+            chunk, seen = [], set()
+        chunk.append((qid, rq))
+        seen |= ts
+    if chunk:
+        chunks.append(chunk)
+    scored = None
+    for c in chunks:
+        part = _plan_segments(
+            index, c, k, deleted=deleted, deleted_cache_key=deleted_cache_key
         )
-        seg_rows = seg_rows.unionByName(stub)
-    elif scan_cond is not None:
-        seg_rows = index.segments.where(scan_cond)
-    else:
-        seg_rows = index.segments.where(F.lit(False))
-
-    has_gdf = bool(pairs)
-    if has_gdf:
-        ts_small = index.term_stats.where(
-            _exact_pair_cond(pairs)
-        ).select("field", "term", F.col("df").alias("gdf"))
-        seg_rows = seg_rows.join(F.broadcast(ts_small), ["field", "term"], "left")
-
-    if deleted is not None and isinstance(deleted, DataFrame):
-        cached = getattr(index, "_packed_del_cache", None)
-        if (
-            deleted_cache_key is not None
-            and cached is not None
-            and cached[0] == deleted_cache_key
-        ):
-            del_rows = cached[1]
-        else:
-            del_rows = _pack_deleted(deleted, seg_size, seg_schema)
-            if deleted_cache_key is not None:
-                del_rows = del_rows.persist()
-                if cached is not None:
-                    cached[1].unpersist()
-                index._packed_del_cache = (deleted_cache_key, del_rows)
-        if has_gdf:
-            del_rows = del_rows.withColumn("gdf", F.lit(None).cast("long"))
-        seg_rows = seg_rows.unionByName(del_rows)
-
-    id_ranges = getattr(index, "id_ranges", None) or [[0, n_docs]]
-    local_k = k
-
-    def score_segment_batch(key, pdf):
-        seg_id = int(key[0])
-        base = seg_id * seg_size
-        del_local = None
-        rows_by_ft = {}
-        dfs_local = {}
-        for r in pdf.to_dict("records"):
-            fld = r["field"]
-            if fld == "__stub__":
-                continue
-            if fld == "__del__":
-                ids = np.frombuffer(bytes(r["doc_bin"]), dtype=np.int64)
-                dl2 = ids - base
-                del_local = (
-                    dl2 if del_local is None else np.union1d(del_local, dl2)
-                )
-                continue
-            if has_gdf and not pd.isna(r["gdf"]):
-                dfs_local[(fld, r["term"])] = int(r["gdf"])
-            rows_by_ft[(fld, r["term"])] = {
-                "doc_bin": bytes(r["doc_bin"]),
-                "tf_bin": bytes(r["tf_bin"]),
-                "pos_bin": bytes(r["pos_bin"]),
-                "dl_bin": bytes(r["dl_bin"]),
-                "block_meta": [
-                    bm if isinstance(bm, dict) else bm.asDict()
-                    for bm in r["block_meta"]
-                ],
-                "df": int(r["df"]),
-            }
-        ev = _SegEval(
-            rows_by_ft, dfs_local, n_docs, avgdl_map, base, seg_size, id_ranges
+        if part is not None:
+            scored = part if scored is None else scored.unionByName(part)
+    if scored is None:
+        return index.spark.createDataFrame(
+            [], "query_id int, rank long, doc_id long, score float"
         )
-        out_q, out_d, out_s = [], [], []
-        for qid, rq in enumerate(rqs):
-            mask, score = ev.eval(rq)
-            if del_local is not None and len(del_local):
-                mask[del_local] = False
-            locs = np.flatnonzero(mask)
-            if local_k is not None and len(locs) > local_k:
-                s32 = score[locs].astype(np.float32)
-                order = np.lexsort((locs, -s32))[:local_k]
-                locs = locs[order]
-            out_q.append(np.full(len(locs), qid, dtype=np.int32))
-            out_d.append((locs + base).astype(np.int64))
-            out_s.append(score[locs])
-        return pd.DataFrame(
-            {
-                "qid": np.concatenate(out_q) if out_q else [],
-                "doc_id": np.concatenate(out_d) if out_d else [],
-                "score": np.concatenate(out_s) if out_s else [],
-            }
-        )
-
-    scored = seg_rows.groupBy("seg_id").applyInPandas(
-        score_segment_batch, "qid int, doc_id long, score double"
-    )
     rank_score = F.col("score").cast("float")
     w = Window.partitionBy("qid").orderBy(
         rank_score.desc(), F.col("doc_id").asc()

@@ -106,6 +106,16 @@ def test_batch_score_round_mode(sidx):
         assert abs(r["score"] - round(r["score"], 4)) < 1e-12
 
 
+@pytest.mark.parametrize("score_round", [None, 4])
+def test_batch_empty_schema_matches_scored(sidx, score_round):
+    """A batch that matches nothing declares the score type of the scored
+    path: float when ranking on the float32 cast, double when rounding."""
+    empty = batch_search(sidx, [T("zzzzz")], k=5, score_round=score_round)
+    scored = batch_search(sidx, [T("word2")], k=5, score_round=score_round)
+    assert empty.collect() == []
+    assert empty.schema == scored.schema
+
+
 @pytest.mark.parametrize(
     "bad",
     [

@@ -2,7 +2,7 @@
 exactly segment_search's top-k (doc order AND float32 scores) — both
 run the same _SegEval fold per segment, so any drift is a bug.  Plus
 plan-shape guards (one segments scan + one term_stats scan for the
-whole batch, one applyInPandas) and unsupported-shape errors."""
+whole batch, one applyInPandas; a single query has no window)."""
 
 import numpy as np
 import pytest
@@ -15,10 +15,11 @@ from ferret_spark.query import (
     BooleanQuery,
     PhraseQuery,
     PrefixQuery,
+    RangeQuery,
     TermQuery,
 )
 from ferret_spark.segments import SegmentIndexBuilder
-from ferret_spark.wand import segment_batch_search, segment_search
+from ferret_spark.wand import segment_batch_search, segment_search, wand_rewrite
 
 
 def T(t, field="content", boost=1.0):
@@ -79,19 +80,94 @@ def test_seg_batch_empty_and_pure_not(seg):
     assert not_rows and all(r["score"] == 1.0 for r in not_rows)
 
 
-@pytest.mark.parametrize(
-    "bad",
-    [
-        PhraseQuery.of("content", ["quick", "brown"]),
+def _every_shape():
+    """The perfbench single-query stream's shapes (hot / mid / rare /
+    absent term, AND, OR, NOT, exact and sloppy phrase, prefix) plus
+    multi-alternative phrase, SpanNear, range (uncapped under the patched
+    cap), range filter and pure NOT."""
+    from ferret_spark.spans import SpanNearQuery, SpanTermQuery
+
+    def S(t):
+        return SpanTermQuery(field="content", term=t)
+
+    return [
+        T("word1"),
+        T("word3"),
+        T("hairy"),
+        T("zzzzz"),
+        BooleanQuery.of((T("word3"), MUST), (T("word1"), MUST)),
         BooleanQuery.of(
-            (PhraseQuery.of("content", ["quick", "brown"]), MUST),
-            (T("word2"), MUST),
+            (T("word2"), SHOULD), (T("fox"), SHOULD), (T("red"), SHOULD)
         ),
-    ],
+        BooleanQuery.of((T("word1"), MUST), (T("word3"), MUST_NOT)),
+        PhraseQuery.of("content", ["brown", "fox"]),
+        PhraseQuery.of("content", ["quick", "fox"], slop=2),
+        PrefixQuery(field="content", prefix="wor"),
+        PhraseQuery.of("content", ["quick", ("brown", "red", "hairy")]),
+        SpanNearQuery(clauses=(S("quick"), S("fox")), slop=1, in_order=True),
+        RangeQuery(field="number", lower=0, upper=100, typed=True),
+        BooleanQuery.of(
+            (T("word1"), MUST),
+            (RangeQuery(field="date", lower="20051001", upper="20051003"), MUST),
+        ),
+        BooleanQuery.of((T("word2"), MUST_NOT)),
+    ]
+
+
+@pytest.mark.parametrize(
+    "lazy_delete", [False, True], ids=["no_delete", "lazy_delete"]
 )
-def test_seg_batch_unsupported_raises(seg, bad):
-    with pytest.raises(ValueError):
-        segment_batch_search(seg, [T("word1"), bad], k=5)
+def test_seg_batch_parity_every_shape(
+    spark, tmp_path, monkeypatch, lazy_delete
+):
+    """One batch of every query shape equals per-query search(): doc ids
+    and float32 scores at a top-k that binds inside 6-doc segments, with
+    the filter doc-set cache off (the range scans as a pushed predicate)
+    and on (both ranges ship as cached filters), with and without a lazy
+    delete."""
+    import ferret_spark.wand as W
+    from ferret_spark.ind import FerretIndex
+
+    monkeypatch.setattr(W, "RANGE_EXPAND_CAP", 3)
+    rows = [dict(r, doc_id=i) for i, r in enumerate(golden_rows())]
+    idx = FerretIndex(
+        spark, str(tmp_path / "shapes"), GOLDEN_FIELD_CONFIG, seg_size=6
+    )
+    idx.add_documents(spark.createDataFrame(rows), doc_id_col="doc_id")
+    if lazy_delete:
+        assert idx.delete_by_term("content", "fox") == 6
+    shapes = _every_shape()
+    rq = wand_rewrite(idx.index, shapes[12])
+    assert isinstance(rq, W.ConstantScoreRange)
+    # the absent term, and with fox deleted the shapes whose hits all hold it
+    empty = {3} | ({2, 7, 8, 10, 11} if lazy_delete else set())
+    for cache in (False, True):
+        idx.index.filter_doc_cache = cache
+        got = idx.search_batch(shapes, k=5).collect()
+        for qid, q in enumerate(shapes):
+            want = idx.search(q, k=5).collect()
+            have = sorted(
+                (r for r in got if r["query_id"] == qid),
+                key=lambda r: r["rank"],
+            )
+            assert bool(want) == (qid not in empty), (cache, qid, q)
+            assert [r["doc_id"] for r in have] == [
+                r["doc_id"] for r in want
+            ], (cache, qid, q)
+            for h, w in zip(have, want):
+                assert np.float32(h["score"]) == np.float32(w["score"]), (
+                    cache, qid, q,
+                )
+
+
+def test_single_query_plan_one_scoring_node_no_window(seg):
+    """A single query is the planner's batch of one with the orderBy/limit
+    tail: exactly one Python scoring node and no per-query window."""
+    for q in (T("word1"), PhraseQuery.of("content", ["brown", "fox"]), BATCH[7]):
+        df = segment_search(seg, q, k=10)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FlatMapGroupsInPandas") == 1, plan
+        assert "Window" not in plan, plan
 
 
 def test_seg_batch_facade_with_deletes(spark, tmp_path):

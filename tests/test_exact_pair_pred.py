@@ -40,3 +40,34 @@ def test_exact_pair_cond_plan_pushes_per_field_lists(spark, tmp_path):  # noqa: 
     # pushed as per-field conjunctions, visible in the scan's filters
     assert "PushedFilters" in plan
     assert plan.count("Or(And(") >= 1 or "And(EqualTo(field,text)" in plan
+
+
+def test_doc_freqs_push_exact_pairs_in_both_engines(spark):  # noqa: F811
+    """Both engines' df lookups push the exact (field, term) pairs: the
+    cross-field trap rows must not survive the pushed filter."""
+    from types import SimpleNamespace
+
+    from ferret_spark.index import SparkIndex
+    from ferret_spark.segments import SegmentIndex
+
+    ts = spark.createDataFrame(
+        [
+            ("text", "a", 1), ("lang", "en", 2),
+            ("lang", "a", 3), ("text", "en", 4),  # cross-product traps
+        ],
+        "field string, term string, df long",
+    )
+    pairs = [("text", "a"), ("lang", "en")]
+    for engine in (SparkIndex, SegmentIndex):
+        conds = []
+
+        class Spy:
+            def where(self, cond):
+                conds.append(cond)
+                return ts.where(cond)
+
+        dfs = engine.doc_freqs(SimpleNamespace(term_stats=Spy()), pairs)
+        assert dfs == {("text", "a"): 1, ("lang", "en"): 2}, engine
+        (cond,) = conds
+        got = sorted((r["field"], r["term"]) for r in ts.where(cond).collect())
+        assert got == sorted(pairs), engine

@@ -82,7 +82,7 @@ def test_delete_and_search(spark, fidx):
 def test_optimize_expunges(spark, fidx):
     fidx.delete_by_term("content", "egg")
     fidx.optimize()
-    assert fidx.deleted_ids() == set()
+    assert fidx.deleted_df() is None
     assert fidx.size() == 2
     assert _hits(fidx.search(T("cherry"), k=None)) == {0, 1}
     # stats now reflect the compacted corpus (df of 'cherry' drops to 2)

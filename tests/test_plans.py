@@ -150,22 +150,3 @@ def test_phrase_join_broadcasts_rare_side(saved_idx):
         df = saved_idx.search(q, k=10)
         plan = _executed_plan(df)
         assert "BroadcastHashJoin" in plan, plan
-
-
-def test_balanced_group_keys_one_per_partition(spark):
-    """The engineered phrase-group keys must land on pairwise-distinct
-    shuffle partitions (key for slot i on partition i), replicating the
-    shuffle's own Murmur3+pmod mapping."""
-    import pyspark.sql.functions as F
-
-    from ferret_spark.wand import _balanced_group_keys
-
-    keys = _balanced_group_keys(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert len(keys) == P
-    got = (
-        spark.createDataFrame([(int(k),) for k in keys], "k long")
-        .select(F.pmod(F.hash("k"), F.lit(P)).alias("p"))
-        .collect()
-    )
-    assert [r["p"] for r in got] == list(range(P))

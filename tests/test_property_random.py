@@ -144,13 +144,15 @@ def test_random_fallback_docset_identity(pair, seed, monkeypatch):
     assert got == exp, f"seed={seed} query={q}"
 
 
-@pytest.mark.parametrize("grp", [2, 4, 16])
-def test_phrase_group_batching_rank_identity(pair, grp):
-    """The cross-segment phrase path with FORCED multi-segment groups
-    (several segments' posting streams concatenated into one kernel
-    invocation) must stay rank- and float32-score-identical to the
-    oracle — same gate as per-segment grouping."""
+@pytest.mark.parametrize("k", [2, 4, 16])
+def test_phrase_group_batching_rank_identity(pair, k):
+    """Phrases scored per segment (9-doc segments, so each phrase spans
+    several) stay rank- and float32-score-identical to the oracle, alone
+    and as one batch of the four, at top-k cuts that bind inside a
+    segment (k = 2, 4) and one that does not (k = 16)."""
     import numpy as np
+
+    from ferret_spark.wand import segment_batch_search
 
     oracle, sidx = pair
     queries = [
@@ -159,19 +161,21 @@ def test_phrase_group_batching_rank_identity(pair, grp):
         PhraseQuery.of("content", ["alpha", "beta", "gamma"], slop=3),
         PhraseQuery.of("content", ["run", None, "theta"], slop=1),
     ]
-    old = getattr(sidx, "phrase_group_segs", None)
-    sidx.phrase_group_segs = grp
-    try:
-        for q in queries:
-            expected = oracle.search(q, k=25)
-            got = [
-                (r["doc_id"], r["score"])
-                for r in sidx.search(q, k=25).collect()
-            ]
+    batch = segment_batch_search(sidx, queries, k=k).collect()
+    for qid, q in enumerate(queries):
+        expected = oracle.search(q, k=k)
+        single = [
+            (r["doc_id"], r["score"]) for r in sidx.search(q, k=k).collect()
+        ]
+        batched = [
+            (r["doc_id"], r["score"])
+            for r in sorted(batch, key=lambda r: r["rank"])
+            if r["query_id"] == qid
+        ]
+        assert expected
+        for got in (single, batched):
             assert [d for d, _ in got] == [d for d, _ in expected], (
-                grp, q, got, expected,
+                k, q, got, expected,
             )
             for (gd, gs), (_ed, es) in zip(got, expected):
-                assert np.float32(gs) == np.float32(es), (grp, q, gd)
-    finally:
-        sidx.phrase_group_segs = old
+                assert np.float32(gs) == np.float32(es), (k, q, gd)
