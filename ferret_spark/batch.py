@@ -325,16 +325,17 @@ def _phrase_scored_batch(index, phrase_qs, dfs) -> DataFrame | None:
                     for j in range(kq):
                         if len(per_slot[j]) == 1:
                             a = per_slot[j][0]
-                        elif slop == 0:
+                        elif slop == 0 and kq > 1:
                             # exact scoring intersects DISTINCT values
                             # (plan_phrase's array_intersect dedups), and
                             # exact_freqk assumes within-slot distinctness
                             # — same-position alternatives must collapse
                             a = np.unique(np.concatenate(per_slot[j]))
                         else:
-                            # sloppy kernels get the dup-preserving merge,
-                            # exactly like plan_phrase's
-                            # sort_array(flatten(collect_list))
+                            # a single slot counts, and the sloppy kernels
+                            # walk, the dup-preserving merge, exactly like
+                            # plan_phrase's sort_array(flatten(collect_list))
+                            # and the oracle's per-alternative extend
                             a = np.sort(np.concatenate(per_slot[j]))
                         slot_arrs[j][out_i] = a
                 if kq == 1:

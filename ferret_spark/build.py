@@ -35,6 +35,20 @@ from ferret_spark.analysis import get_analyzer
 DOC_ID_BUCKETS = 1024
 
 
+def check_field_config(field_config: dict[str, str]) -> None:
+    """Reject, on the driver and before anything is written, a field whose
+    analyzer no build path can run: a hyphen pipeline emits same-position
+    (term, pos) pairs that ``Analyzer.tokens_pandas`` (index == position)
+    cannot express, so it would raise inside a Python worker after the
+    first stage had committed."""
+    for field, aname in field_config.items():
+        if aname != "keyword" and get_analyzer(aname).hyphens:
+            raise ValueError(
+                f"field {field!r}: analyzer {aname!r} is a hyphen pipeline, "
+                "which the index builds cannot tokenize"
+            )
+
+
 def tokenize_udf(analyzer_name: str):
     """array<string> tokens where index == position; NULL = stopped slot."""
     analyzer = get_analyzer(analyzer_name)

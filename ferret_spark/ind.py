@@ -314,7 +314,9 @@ class FerretIndex:
             .agg(F.sum("df").alias("df"))
             .withColumn("term_num", F.expr("try_cast(term as double)"))
         )
-        ts.write.mode("overwrite").parquet(
+        # sorted by (field, term) like every build's term_stats, so the
+        # driver-side doc_freqs read prunes by file and row-group stats
+        ts.orderBy("field", "term").write.mode("overwrite").parquet(
             os.path.join(self.path, "term_stats.tmp")
         )
         # atomic-ish swap

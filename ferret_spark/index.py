@@ -44,6 +44,7 @@ class SparkIndex:
         doc_id_col: str | None = None,
         cache: bool = True,
     ) -> "SparkIndex":
+        B.check_field_config(field_config)
         # r7: widen a narrow source before the build — a single-file
         # corpus otherwise scans as ONE task, and the cached docs keep
         # that width, so tokenize + the postings explode/partial-agg all

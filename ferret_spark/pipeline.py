@@ -184,6 +184,12 @@ def _tokenize(texts, lower: bool = True):
     """Per-doc tokens of a text column, as filter(split(text, '\\s+'),
     t -> t <> '') computes them (Java \\s), lowered first when ``lower``.
 
+    The whitespace rule is Java's \\s, as Spark's split uses it: vertical
+    tab (\\x0b) separates tokens. The frozen DuckDB twins follow RE2's \\s,
+    which does not, so a \\x0b inside a word is the one input on which a
+    kernel and its twin may differ; the kernels keep the rule of the JVM
+    they run beside.
+
     Returns (token lists, NULL mask). NULL text gives [] with its mask bit
     set; "" and whitespace-only text give [] with it clear — the zero-token
     doc. Each kernel maps both cases to its DuckDB twin's value."""

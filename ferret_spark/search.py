@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import logging
 import math
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -366,10 +367,17 @@ class _Planner:
                     F.col("doc_len").alias(f"dl{i}"),
                 )
             else:
+                # a repeated alternative adds its positions once per
+                # occurrence, like the oracle's per-alternative merge
+                pos = F.col("positions")
+                reps = Counter(alts_live)
+                if max(reps.values()) > 1:
+                    n_rep = F.coalesce(
+                        *(F.when(F.col("term") == t, c) for t, c in reps.items())
+                    )
+                    pos = F.flatten(F.array_repeat(pos, n_rep))
                 sdf = p.groupBy("doc_id").agg(
-                    F.sort_array(F.flatten(F.collect_list("positions"))).alias(
-                        f"p{i}"
-                    ),
+                    F.sort_array(F.flatten(F.collect_list(pos))).alias(f"p{i}"),
                     F.first("doc_len").alias(f"dl{i}"),
                 )
             slot_dfs.append(sdf)

@@ -419,20 +419,6 @@ def _query_needs_all_docs(q: Query) -> bool:
     return False
 
 
-def _needs_absent_dfs(q: Query) -> bool:
-    """True when scoring needs global dfs for terms NOT present in a
-    segment: phrase/span idf sums cover every (globally alive) query term,
-    while term/multiterm/const nodes only read dfs of locally-present
-    postings."""
-    from ferret_spark.spans import is_span
-
-    if isinstance(q, PhraseQuery) or is_span(q):
-        return True
-    if isinstance(q, BooleanQuery):
-        return any(_needs_absent_dfs(c.query) for c in q.clauses)
-    return False
-
-
 # ---------------------------------------------------------------------------
 # per-segment evaluation
 
@@ -707,6 +693,10 @@ class _SegEval:
         path (per-doc position-list merge across a slot's terms)."""
         field = q.field
         empty = (np.empty(0, dtype=np.int64), np.zeros(0), np.zeros(0))
+        # an exact multi-slot phrase intersects DISTINCT positions (the
+        # k-way kernel assumes them), so a repeated alternative collapses;
+        # one slot counts, and the sloppy walk sees, every occurrence
+        merge = np.unique if q.slop == 0 and len(q.positions) > 1 else np.sort
         slot_pos: list[dict[int, np.ndarray]] = []
         slot_dls: dict[int, int] = {}
         for _, alts in q.positions:
@@ -727,7 +717,7 @@ class _SegEval:
                 return empty
             slot_pos.append(
                 {
-                    d: (np.sort(np.concatenate(ls)) if len(ls) > 1 else ls[0])
+                    d: (merge(np.concatenate(ls)) if len(ls) > 1 else ls[0])
                     for d, ls in m.items()
                 }
             )
@@ -1399,14 +1389,14 @@ def _n_segs_span(index, n_docs: int, seg_size: int) -> int:
     return max(1, -(-max_id // seg_size))
 
 
-def _stub_rows(seg_ids: DataFrame, bm_type, field, term, df) -> DataFrame:
-    """Posting-less rows in the segments schema, one per row of
-    ``seg_ids`` (whose ``id`` column becomes seg_id)."""
-    return seg_ids.select(
+def _stub_rows(spark, n_segs: int, bm_type) -> DataFrame:
+    """One posting-less ``__stub__`` row in the segments schema per
+    segment of the id span [0, n_segs)."""
+    return spark.range(n_segs).select(
         F.col("id").cast("long").alias("seg_id"),
-        field.alias("field"),
-        term.alias("term"),
-        df.cast("long").alias("df"),
+        F.lit("__stub__").alias("field"),
+        F.lit("").alias("term"),
+        F.lit(0).cast("long").alias("df"),
         F.lit(b"").alias("doc_bin"),
         F.lit(b"").alias("tf_bin"),
         F.lit(b"").alias("pos_bin"),
@@ -1437,12 +1427,11 @@ def _plan_segments(
       uncapped range/match bounds pushed;
     - one ``__stub__`` row per segment of the id span when any query
       carries a MatchAll, so posting-less segments still score;
-    - global dfs fused into the scoring job (BM25), per query by the
-      shape's needs: flat term shapes read only locally present terms'
-      dfs, attached by a broadcast term_stats join (``gdf``); phrase and
-      span idf sums also cover terms absent from a segment, so their
-      terms ride to EVERY segment as ``__df__`` stub rows. TF-IDF
-      resolves dfs driver-side (qnorm needs them before the job);
+    - global dfs for every (field, term) pair of the batch, read on the
+      driver by ``index.doc_freqs`` (no Spark job) and pickled into the
+      scoring closure, so every segment — with or without postings for a
+      term — sees the same dfs; a pair absent from the dictionary reads
+      as 0 through ``dfs.get(..., 0)``. TF-IDF's qnorm reads the same map;
     - cached filter doc-id sets as packed ``__filt__`` rows;
     - deletes as packed ``__del__`` rows, persisted per deletes state.
 
@@ -1476,7 +1465,6 @@ def _plan_segments(
     n_docs = index.n_docs
     avgdl_map = dict(index.stats["avgdl"])
     seg_size = index.seg_size
-    n_segs = _n_segs_span(index, n_docs, seg_size)
     id_ranges = getattr(index, "id_ranges", None) or [[0, n_docs]]
 
     scan_cond = _exact_pair_cond(pairs) if pairs else None
@@ -1489,45 +1477,11 @@ def _plan_segments(
         F.lit(False) if scan_cond is None else scan_cond
     )
 
-    fuse_dfs = similarity == "bm25"
-    dfs = {} if fuse_dfs else index.doc_freqs(pairs)
-    absent, present = set(), set()
-    if fuse_dfs:
-        for _, rq in attached:
-            (absent if _needs_absent_dfs(rq) else present).update(
-                _collect_terms(rq)
-            )
-    has_gdf = bool(present)
-    if has_gdf:
-        gdf = index.term_stats.where(_exact_pair_cond(sorted(present))).select(
-            "field", "term", F.col("df").alias("gdf")
-        )
-        seg_rows = seg_rows.join(F.broadcast(gdf), ["field", "term"], "left")
+    dfs = index.doc_freqs(pairs)
     extra = []
     if needs_all:
-        extra.append(
-            _stub_rows(
-                spark.range(n_segs), bm_type,
-                F.lit("__stub__"), F.lit(""), F.lit(0),
-            )
-        )
-    if absent:
-        # stubs reach segments with no posting rows too; those return
-        # empty at once. The span MUST cover id_ranges' max (see
-        # _n_segs_span), or segments past a doc-id gap would score their
-        # phrase matches with idf_sum = 0.
-        ts_small = index.term_stats.where(_exact_pair_cond(sorted(absent)))
-        extra.append(
-            _stub_rows(
-                spark.range(n_segs).crossJoin(
-                    F.broadcast(ts_small.select("field", "term", "df"))
-                ),
-                bm_type,
-                F.concat(F.lit("__df__:"), F.col("field")),
-                F.col("term"),
-                F.col("df"),
-            )
-        )
+        n_segs = _n_segs_span(index, n_docs, seg_size)
+        extra.append(_stub_rows(spark, n_segs, bm_type))
     for tag, cdir in cached_filters.items():
         fdf = spark.read.parquet(cdir)
         extra.append(_pack_ids(fdf, seg_size, seg_schema, f"__filt__:{tag}"))
@@ -1551,8 +1505,6 @@ def _plan_segments(
                 index._packed_del_cache = (deleted_cache_key, del_rows)
         extra.append(del_rows)
     for rows in extra:
-        if has_gdf:
-            rows = rows.withColumn("gdf", F.lit(None).cast("long"))
         seg_rows = seg_rows.unionByName(rows)
 
     # interval block-max WAND pays off for small disjunctions; past ~32
@@ -1589,7 +1541,6 @@ def _plan_segments(
         from ferret_spark.segments import _row_to_codec
 
         base = int(key[0]) * seg_size
-        dfs_local = dict(dfs)
         rows_by_ft = {}
         filt_local: dict[str, np.ndarray] = {}
         del_local = None
@@ -1598,9 +1549,6 @@ def _plan_segments(
         for r in pdf.to_dict("records"):
             fld = r["field"]
             if fld == "__stub__":
-                continue
-            if fld.startswith("__df__:"):
-                dfs_local[(fld[7:], r["term"])] = int(r["df"])
                 continue
             if fld.startswith("__filt__:"):
                 ids = np.frombuffer(bytes(r["doc_bin"]), dtype=np.int64)
@@ -1613,11 +1561,9 @@ def _plan_segments(
                     dl2 if del_local is None else np.union1d(del_local, dl2)
                 )
                 continue
-            if has_gdf and not pd.isna(r["gdf"]):
-                dfs_local[(fld, r["term"])] = int(r["gdf"])
             rows_by_ft[(fld, r["term"])] = _row_to_codec(r)
         args = (
-            rows_by_ft, dfs_local, n_docs, avgdl_map, base, seg_size,
+            rows_by_ft, dfs, n_docs, avgdl_map, base, seg_size,
             id_ranges,
         )
         if similarity == "tfidf":

@@ -189,3 +189,50 @@ def test_batch_phrase_plan_shape(spark, tmp_path):
     n_py = plan.count("MapInPandas") + plan.count("ArrowEvalPython")
     assert n_py == 1, plan
     df.collect()  # and it actually runs
+
+
+# a slot that repeats an alternative: one slot, exact and sloppy, and an
+# exact / sloppy two-slot phrase
+DUP_ALTS = [
+    PhraseQuery.of("content", [("fox", "fox")]),
+    PhraseQuery.of("content", [("fox", "fox")], slop=1),
+    PhraseQuery.of("content", [("quick", "quick"), "brown"]),
+    PhraseQuery.of("content", [("quick", "quick"), "fox"], slop=2),
+]
+
+
+def test_phrase_duplicate_alternatives_match_oracle(spark, sidx, tmp_path):
+    """A repeated alternative adds its positions once per occurrence, as
+    the oracle's per-alternative merge does: a single slot counts every
+    occurrence, an exact multi-slot phrase intersects distinct positions.
+    The declarative planner, its batch and the segmented engine all
+    return the oracle's top-k."""
+    from ferret_spark.oracle import OracleIndex
+    from ferret_spark.segments import SegmentIndexBuilder
+    from ferret_spark.wand import segment_search
+
+    rows = golden_rows()
+    oracle = OracleIndex(rows, GOLDEN_FIELD_CONFIG)
+    seg = SegmentIndexBuilder(
+        spark, str(tmp_path / "seg"), GOLDEN_FIELD_CONFIG, seg_size=6
+    ).build(
+        spark.createDataFrame([dict(r, doc_id=i) for i, r in enumerate(rows)]),
+        doc_id_col="doc_id",
+    )
+    batch = batch_search(sidx, DUP_ALTS, k=K).collect()
+    for qid, q in enumerate(DUP_ALTS):
+        want = oracle.search(q, k=K)
+        assert want, q
+        engines = {
+            "plan_phrase": plan_topk(sidx, q, k=K).collect(),
+            "batch": sorted(
+                (r for r in batch if r["query_id"] == qid),
+                key=lambda r: r["rank"],
+            ),
+            "segments": segment_search(seg, q, k=K).collect(),
+        }
+        for name, got in engines.items():
+            assert [r["doc_id"] for r in got] == [d for d, _ in want], (name, q)
+            assert [np.float32(r["score"]) for r in got] == [
+                s for _, s in want
+            ], (name, q)

@@ -1,8 +1,9 @@
 """segment_batch_search parity: every query in a batch must return
 exactly segment_search's top-k (doc order AND float32 scores) — both
 run the same _SegEval fold per segment, so any drift is a bug.  Plus
-plan-shape guards (one segments scan + one term_stats scan for the
-whole batch, one applyInPandas; a single query has no window)."""
+plan-shape guards (one segments scan for the whole batch, one
+applyInPandas; a single query has no window, and on a cached index one
+job with no exchange)."""
 
 import numpy as np
 import pytest
@@ -18,8 +19,9 @@ from ferret_spark.query import (
     RangeQuery,
     TermQuery,
 )
-from ferret_spark.segments import SegmentIndexBuilder
+from ferret_spark.segments import SegmentIndex, SegmentIndexBuilder
 from ferret_spark.wand import segment_batch_search, segment_search, wand_rewrite
+from tests.conftest import jobs_in_group
 
 
 def T(t, field="content", boost=1.0):
@@ -160,14 +162,43 @@ def test_seg_batch_parity_every_shape(
                 )
 
 
-def test_single_query_plan_one_scoring_node_no_window(seg):
+def test_single_query_plan_one_scoring_node_no_window(spark, seg):
     """A single query is the planner's batch of one with the orderBy/limit
-    tail: exactly one Python scoring node and no per-query window."""
+    tail: exactly one Python scoring node and no per-query window. On a
+    cached index (segment rows clustered by seg_id) term, AND and phrase
+    queries plan no exchange below the scoring node — dfs come from the
+    driver, not a broadcast join — and run exactly one Spark job, with the
+    uncached index's hits."""
     for q in (T("word1"), PhraseQuery.of("content", ["brown", "fox"]), BATCH[7]):
         df = segment_search(seg, q, k=10)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("FlatMapGroupsInPandas") == 1, plan
         assert "Window" not in plan, plan
+
+    cached = SegmentIndex.load(spark, seg.path).cache()
+    sc = spark.sparkContext
+    try:
+        for i, q in enumerate(
+            (T("word1"), BATCH[3], PhraseQuery.of("content", ["brown", "fox"]))
+        ):
+            group = f"one_job_{i}"
+            sc.setJobGroup(group, group)
+            try:
+                df = segment_search(cached, q, k=10)
+                plan = df._jdf.queryExecution().executedPlan().toString()
+                got = df.collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            # below the scoring node, up to the cached relation (whose own
+            # build plan holds the clustering exchange)
+            below = plan.split("FlatMapGroupsInPandas", 1)[1]
+            below = below.split("InMemoryRelation", 1)[0]
+            assert "Exchange" not in below, plan  # also BroadcastExchange
+            assert len(jobs_in_group(sc, group)) == 1, q
+            assert got == segment_search(seg, q, k=10).collect(), q
+    finally:
+        cached.segments.unpersist()
+        cached.term_stats.unpersist()
 
 
 def test_seg_batch_facade_with_deletes(spark, tmp_path):
@@ -216,12 +247,12 @@ def test_seg_batch_term_budget_split(seg):
 
 
 def test_seg_batch_plan_shape(seg):
-    """The whole batch (no MatchAll) must be ONE segments scan + ONE
-    term_stats scan (the broadcast gdf join) and exactly one Python
+    """The whole batch (no MatchAll) must be ONE segments scan — dfs are
+    read on the driver, so no term_stats scan — and exactly one Python
     eval node, independent of batch size."""
     df = segment_batch_search(seg, BATCH[:7], k=10)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FileScan parquet") == 2, plan
+    assert plan.count("FileScan parquet") == 1, plan
     n_py = plan.count("FlatMapGroupsInPandas") + plan.count("MapInPandas")
     assert n_py == 1, plan
     df.collect()  # and it actually runs

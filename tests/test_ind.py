@@ -277,12 +277,12 @@ def test_all_keyword_field_config_stats(spark, tmp_path):
 
 def test_phrase_df_stubs_cover_gap_pushed_segments(spark, tmp_path):
     """Incremental adds align each batch to the next segment boundary, so
-    doc-id GAPS push the last segments past ceil(n_docs / seg_size).  The
-    phrase path ships global dfs as per-segment stub rows from a driver-side
-    range — if that range is derived from the doc COUNT instead of the id
-    SPAN, segments past the count-derived bound get no dfs and their phrase
-    matches silently score idf_sum = 0 (regression: spark.range(n_segs)
-    replacing the data-derived distinct())."""
+    doc-id GAPS push the last segments past ceil(n_docs / seg_size).  A
+    phrase match there must still score with the global dfs (idf_sum > 0):
+    any per-segment df delivery bounded by the doc COUNT instead of the id
+    SPAN would leave those segments with none (regression: the former
+    __df__ stub rows from spark.range(n_segs) replacing the data-derived
+    distinct())."""
     import numpy as np
 
     from ferret_spark.query import PhraseQuery
@@ -310,7 +310,7 @@ def test_phrase_df_stubs_cover_gap_pushed_segments(spark, tmp_path):
     oracle = OracleIndex(all_rows, fc)
     exp = oracle.search(PhraseQuery.of("content", ["grape", "kiwi"]), k=5)
     assert np.float32(hits[0]["score"]) == np.float32(exp[0][1])
-    # sloppy variant exercises the same stub plumbing
+    # sloppy variant exercises the same df plumbing
     sh = idx.search(
         PhraseQuery.of("content", ["grape", "lemon"], slop=1), k=5
     ).collect()

@@ -117,3 +117,14 @@ def test_tokenizer_null_mask_and_zero_token_docs():
     ]
     assert null.tolist() == [True, False, False, False, False, False]
     assert P._tokenize(texts)[0][3] == ["a\u00a0b", "c"]
+
+
+def test_tokenizer_splits_vertical_tab_like_spark(spark):  # noqa: F811
+    """The kernels' whitespace is Java's \\s (Spark's split), which holds
+    vertical tab; RE2's \\s (the DuckDB twins) does not."""
+    toks, null = P._tokenize(["a\x0bb c"])
+    assert toks == [["a", "b", "c"]] and null.tolist() == [False]
+    (row,) = spark.sql(
+        "select filter(split('a\\u000Bb c', '\\\\s+'), t -> t <> '') as t"
+    ).collect()
+    assert row["t"] == toks[0]

@@ -237,3 +237,24 @@ def test_typed_range_pushdown_no_full_collect(golden_seg):
         ).collect()
     }
     assert set(rw.terms) == expect and len(expect) > 0
+
+
+@pytest.mark.parametrize("aname", ["standard_hyphen", "hyphen_ws"])
+def test_hyphen_analyzer_rejected_before_any_stage(spark, tmp_path, aname):
+    """Neither engine's build can tokenize a hyphen pipeline (same-position
+    pairs): both reject the field_config on the driver, naming the field,
+    before a stage is written or a Python worker fails mid-build."""
+    from ferret_spark.index import SparkIndex
+
+    fc = {"content": "whitespace", "body": aname}
+    corpus = spark.createDataFrame(
+        [(0, "a b", "e-mail x")], "doc_id long, content string, body string"
+    )
+    path = tmp_path / "hyphen"
+    with pytest.raises(ValueError, match="'body'"):
+        SegmentIndexBuilder(spark, str(path), fc, seg_size=4).build(
+            corpus, doc_id_col="doc_id"
+        )
+    assert not path.exists()
+    with pytest.raises(ValueError, match="'body'"):
+        SparkIndex.build(spark, corpus, fc, doc_id_col="doc_id")
