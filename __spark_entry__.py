@@ -253,13 +253,11 @@ def _q_bool(kind: str, t1: str, t2: str):
 
 def _q_search_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Six queries (term / AND / OR / NOT / exact phrase / sloppy phrase)
-    answered by ONE Spark job: batch_search shares one pushed tf scan
-    across the term/bool queries, ONE positional scan across the phrases
-    (candidate semi-join from the rarest slots), and one (query_id,
-    doc_id) aggregation per scan kind. Per-query results are
-    bit-identical to the single-query planner, so the SQL twin is just
-    the six single-query twins stacked with a query_id column."""
-    from ferret_spark.batch import batch_search
+    answered by one batch_search: one df lookup for all six, the union
+    of their single-query plans, and one per-query top-k window. Each
+    query is planned by the single-query planner, so the SQL twin is
+    just the six single-query twins stacked with a query_id column."""
+    from ferret_spark.search import batch_search
     from ferret_spark.query import (
         MUST,
         MUST_NOT,

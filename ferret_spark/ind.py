@@ -32,8 +32,11 @@ from ferret_spark.segments import (
     SegmentIndex,
     SegmentIndexBuilder,
     append_manifest,
+    base_generation,
     build_segments,
     merge_segments,
+    term_stats_of,
+    write_generation,
 )
 
 
@@ -93,13 +96,7 @@ class FerretIndex:
             self._idx = b.build(df, id_cols=id_cols, doc_id_col=doc_id_col)
             meta = self._meta()
             meta["id_ranges"] = [[0, meta["stats"]["n_docs"]]]
-            meta["generations"] = [
-                {
-                    "merged": "merged",
-                    "term_stats": "term_stats",
-                    "rows": meta["stats"]["n_docs"],
-                }
-            ]
+            meta["generations"] = [base_generation(meta["stats"]["n_docs"])]
             self._write_meta(meta)
             self._reload_idx()
             return self
@@ -142,38 +139,19 @@ class FerretIndex:
         # O(index); tiers collapse geometrically in _maybe_merge_generations
         meta = self._meta()
         gens = meta.get("generations") or [
-            {
-                "merged": "merged",
-                "term_stats": "term_stats",
-                "rows": meta["stats"]["n_docs"],
-            }
+            base_generation(meta["stats"]["n_docs"])
         ]
-        gname = self._new_gname()
-        gdir = os.path.join(self.path, gname)
         batch_segs = self.spark.read.parquet(
             os.path.join(self.path, "segments")
         ).where(F.col("seg_id") >= base // self.seg_size)
-        gen_merged = merge_segments(batch_segs, self.salt_buckets)
-        gen_merged.sortWithinPartitions("field", "term").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(gdir, "merged"))
-        (
-            self.spark.read.parquet(os.path.join(gdir, "merged"))
-            .select(
-                "field",
-                "term",
-                "df",
-                F.expr("try_cast(term as double)").alias("term_num"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(gdir, "term_stats"))
-        )
         gens.append(
-            {
-                "merged": f"{gname}/merged",
-                "term_stats": f"{gname}/term_stats",
-                "rows": n_new,
-            }
+            write_generation(
+                self.spark,
+                self.path,
+                self._new_gname(),
+                merge_segments(batch_segs, self.salt_buckets),
+                n_new,
+            )
         )
         meta["generations"] = gens
         meta["id_ranges"] = ranges + [[base, base + n_new]]
@@ -227,35 +205,17 @@ class FerretIndex:
         ).parquet(os.path.join(self.path, "segments"))
 
         # the shifted source's global index becomes a new generation
-        gname = self._new_gname()
-        gdir = os.path.join(self.path, gname)
-        shift_posting_rows(o.merged, base).sortWithinPartitions(
-            "field", "term"
-        ).write.mode("overwrite").parquet(os.path.join(gdir, "merged"))
-        (
-            self.spark.read.parquet(os.path.join(gdir, "merged"))
-            .select(
-                "field",
-                "term",
-                "df",
-                F.expr("try_cast(term as double)").alias("term_num"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(gdir, "term_stats"))
-        )
         gens = meta.get("generations") or [
-            {
-                "merged": "merged",
-                "term_stats": "term_stats",
-                "rows": meta["stats"]["n_docs"],
-            }
+            base_generation(meta["stats"]["n_docs"])
         ]
         gens.append(
-            {
-                "merged": f"{gname}/merged",
-                "term_stats": f"{gname}/term_stats",
-                "rows": o.stats["n_docs"],
-            }
+            write_generation(
+                self.spark,
+                self.path,
+                self._new_gname(),
+                shift_posting_rows(o.merged, base),
+                o.stats["n_docs"],
+            )
         )
         meta["generations"] = gens
         meta["id_ranges"] = ranges + [
@@ -308,11 +268,10 @@ class FerretIndex:
 
     def _refresh_derived(self):
         segs = self.spark.read.parquet(os.path.join(self.path, "segments"))
-        ts = (
+        ts = term_stats_of(
             segs.where(F.col("term").isNotNull())  # skip doc-length markers
             .groupBy("field", "term")
             .agg(F.sum("df").alias("df"))
-            .withColumn("term_num", F.expr("try_cast(term as double)"))
         )
         # sorted by (field, term) like every build's term_stats, so the
         # driver-side doc_freqs read prunes by file and row-group stats
@@ -361,28 +320,14 @@ class FerretIndex:
                 union.repartition(n_part, "field", "term"),
                 ["field", "term"],
             )
-            gname = self._new_gname()
-            gdir = os.path.join(self.path, gname)
-            merged.sortWithinPartitions("field", "term").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(gdir, "merged"))
-            (
-                self.spark.read.parquet(os.path.join(gdir, "merged"))
-                .select(
-                    "field",
-                    "term",
-                    "df",
-                    F.expr("try_cast(term as double)").alias("term_num"),
-                )
-                .write.mode("overwrite")
-                .parquet(os.path.join(gdir, "term_stats"))
-            )
             keep.append(
-                {
-                    "merged": f"{gname}/merged",
-                    "term_stats": f"{gname}/term_stats",
-                    "rows": sum(g["rows"] for g in victims),
-                }
+                write_generation(
+                    self.spark,
+                    self.path,
+                    self._new_gname(),
+                    merged,
+                    sum(g["rows"] for g in victims),
+                )
             )
             # commit protocol: the new generation + meta are durable BEFORE
             # victim dirs go away — a crash in between leaves at worst an
@@ -589,10 +534,7 @@ class FerretIndex:
 
         _sh.rmtree(os.path.join(self.path, "generations"), ignore_errors=True)
         meta0 = self._meta()
-        meta0["generations"] = [
-            {"merged": "merged", "term_stats": "term_stats",
-             "rows": meta0["stats"]["n_docs"]}
-        ]
+        meta0["generations"] = [base_generation(meta0["stats"]["n_docs"])]
         self._write_meta(meta0)
         # remove deleted rows from the docs table + stats (anti-join — the
         # deleted set never reaches the driver)

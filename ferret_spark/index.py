@@ -148,8 +148,6 @@ class SparkIndex:
         return plan_topk(self, q, k, offset)
 
     def hits_df(self, q: Query) -> DataFrame:
-        from ferret_spark.search import plan_scores
-
-        from ferret_spark.search import spark_rewrite
+        from ferret_spark.search import plan_scores, spark_rewrite
 
         return plan_scores(self, spark_rewrite(self, q)).select("doc_id")

@@ -3,6 +3,10 @@
 Each node plans to a DataFrame (doc_id: long, score: double); the root is
 cast to float32 and TakeOrderedAndProject'd (orderBy score desc, doc_id asc
 limit k — the bounded-PQ collector analog, c/src/search.c:91-99,157-174).
+One planner serves single queries and batches: ``batch_search`` unions
+the single-query plans of its queries (tagged with their position) and
+ranks them with one per-query window, so a batched query scores exactly
+as it does alone.
 
 Score parity discipline: every arithmetic expression mirrors the oracle's
 operation order exactly (float64 throughout, float32 cast only at the root),
@@ -11,8 +15,8 @@ so Spark and oracle scores are bit-identical. Sum-reordering hazards
 sorted-term order on both sides.
 
 Scale notes:
-- per-term df/idf constants are ONE batched driver lookup per query
-  (pushdown filter on the range-partitioned term_stats parquet).
+- per-term df/idf constants are ONE batched driver lookup per query, or
+  per batch (pushdown filter on the range-partitioned term_stats parquet).
 - a query's postings scan carries a pushed-down `term IN (...)` predicate —
   parquet rowgroup stats prune like the .tii term-dict tier.
 - boolean MUST = inner joins (broadcastable when one side is a rare term),
@@ -27,7 +31,7 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -231,11 +235,12 @@ def _tf_part(tf_col, dl_col, avgdl: float):
 
 
 class _Planner:
-    def __init__(self, index, q: Query):
+    """Plans already-rewritten queries (``plan(q)``) against a df map of
+    their (field, term) pairs; a batch passes the union of its queries'."""
+
+    def __init__(self, index, dfs: dict):
         self.index = index
-        self.q = spark_rewrite(index, q)
-        # one batched driver lookup for all (field, term) dfs
-        self.dfs = index.doc_freqs(query_terms(self.q))
+        self.dfs = dfs
         self._uid = 0
 
     def uid(self) -> str:
@@ -643,15 +648,15 @@ def _phrase_has_repeats(q: PhraseQuery) -> bool:
 
 
 def plan_scores(index, q: Query) -> DataFrame:
-    """(doc_id, score: double) for an already-rewritten query."""
-    pl = _Planner(index, q)
-    return pl.plan(pl.q)
+    """(doc_id, score: double) for an already-rewritten query: one
+    batched driver lookup for all its (field, term) dfs, then one plan."""
+    return _Planner(index, index.doc_freqs(query_terms(q))).plan(q)
 
 
 def plan_topk(index, q: Query, k: int = 10, offset: int = 0) -> DataFrame:
     """Top-k with float32 rank semantics: cast to float BEFORE ordering
     (rank parity requires float32, FrtHit c/include/search.h:75-79)."""
-    scores = plan_scores(index, q)
+    scores = plan_scores(index, spark_rewrite(index, q))
     ranked = (
         scores.select("doc_id", F.col("score").cast("float").alias("score"))
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
@@ -659,3 +664,64 @@ def plan_topk(index, q: Query, k: int = 10, offset: int = 0) -> DataFrame:
     if offset:
         ranked = ranked.offset(offset)
     return ranked.limit(k)
+
+
+def batch_search(
+    index,
+    queries: list[Query],
+    k: int = 10,
+    score_round: int | None = None,
+) -> DataFrame:
+    """Top-k for every query in ``queries``: the union of the single-query
+    plans, ranked per query by one window.
+
+    Returns (query_id, rank, doc_id, score) where query_id is the
+    position in ``queries``. Every query is rewritten once, the dfs of
+    all their terms come from ONE driver lookup, and each query is
+    planned by _Planner, so its scores are plan_scores(index, q)'s.
+    ``score_round`` rounds the float64 score to that many decimals
+    BEFORE ranking (the driver-compare convention); default ranks on
+    the float32 cast like plan_topk.
+
+    Each query keeps its own scans and exchanges, so the plan grows with
+    the batch: this suits a handful of queries. A query log belongs to
+    the segmented engine's segment_batch_search, which scans once per
+    batch.
+    """
+    rewritten = [spark_rewrite(index, q) for q in queries]
+    pl = _Planner(
+        index,
+        index.doc_freqs(sorted({p for q in rewritten for p in query_terms(q)})),
+    )
+    # the empty frame fixes the schema when there is nothing to union
+    scored = index.spark.createDataFrame([], "qid int, doc_id long, score64 double")
+    for qid, rq in enumerate(rewritten):
+        scored = scored.unionByName(
+            pl.plan(rq).select(
+                F.lit(qid).alias("qid"), "doc_id", F.col("score").alias("score64")
+            )
+        )
+    return _rank_topk(scored, k, score_round)
+
+
+def _rank_topk(scored: DataFrame, k: int, score_round: int | None) -> DataFrame:
+    """Per-query top-k over (qid, doc_id, score64): one ranked window
+    keyed by query — float32 rank semantics like plan_topk (cast BEFORE
+    ordering; ties doc_id asc), or decimal rounding in score_round mode."""
+    if score_round is not None:
+        rank_score = F.round(F.col("score64"), score_round)
+    else:
+        rank_score = F.col("score64").cast("float")
+    w = Window.partitionBy("qid").orderBy(
+        rank_score.desc(), F.col("doc_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= k)
+        .select(
+            F.col("qid").alias("query_id"),
+            "rank",
+            "doc_id",
+            rank_score.alias("score"),
+        )
+    )

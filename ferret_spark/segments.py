@@ -436,6 +436,44 @@ def merge_segments(
     )
 
 
+def term_stats_of(postings: DataFrame) -> DataFrame:
+    """(field, term, df, term_num) of one-row-per-term postings. term_num
+    is the numeric shadow of the term: a typed RangeQuery rewrites to a
+    PUSHED parquet range predicate instead of collecting the whole term
+    dictionary to the driver."""
+    return postings.select(
+        "field", "term", "df",
+        F.expr("try_cast(term as double)").alias("term_num"),
+    )
+
+
+def base_generation(n_docs: int) -> dict:
+    """meta.json entry of the generation the builder itself wrote (the
+    index root's merged/ and term_stats/)."""
+    return {"merged": "merged", "term_stats": "term_stats", "rows": n_docs}
+
+
+def write_generation(
+    spark: SparkSession, root: str, gname: str, merged: DataFrame, rows: int
+) -> dict:
+    """Write one merge generation under ``root/gname``: ``merged`` sorted
+    by (field, term) within its partitions (rowgroup stats prune term
+    scans), then the term_stats of the written files. Returns its
+    meta.json entry."""
+    merged_dir = os.path.join(root, gname, "merged")
+    merged.sortWithinPartitions("field", "term").write.mode("overwrite").parquet(
+        merged_dir
+    )
+    term_stats_of(spark.read.parquet(merged_dir)).write.mode("overwrite").parquet(
+        os.path.join(root, gname, "term_stats")
+    )
+    return {
+        "merged": f"{gname}/merged",
+        "term_stats": f"{gname}/term_stats",
+        "rows": rows,
+    }
+
+
 # ---------------------------------------------------------------------------
 # manifest / staged build with resume
 
@@ -789,17 +827,9 @@ class SegmentIndexBuilder:
         ts_dir = os.path.join(path, "term_stats")
         if "term_stats" not in self._done():
             t0 = time.time()
-            merged = spark.read.parquet(merged_dir)
-            ts = merged.select(
-                "field",
-                "term",
-                "df",
-                # numeric shadow of the term: typed RangeQuery rewrites to a
-                # PUSHED parquet range predicate instead of collecting the
-                # whole term dictionary to the driver
-                F.expr("try_cast(term as double)").alias("term_num"),
-            )
-            ts.write.mode("overwrite").parquet(ts_dir)
+            term_stats_of(spark.read.parquet(merged_dir)).write.mode(
+                "overwrite"
+            ).parquet(ts_dir)
             self._finish("term_stats", parquet_rows(ts_dir), t0, ts_dir)
         if stop_after == "term_stats":
             return None
@@ -892,10 +922,8 @@ class SegmentIndex:
                 ts = t if ts is None else ts.unionByName(
                     t.select(*ts.columns)
                 )
-            term_stats = (
-                ts.groupBy("field", "term")
-                .agg(F.sum("df").alias("df"))
-                .withColumn("term_num", F.expr("try_cast(term as double)"))
+            term_stats = term_stats_of(
+                ts.groupBy("field", "term").agg(F.sum("df").alias("df"))
             )
         elif gens:  # exactly one generation — possibly a collapsed tier
             merged = spark.read.parquet(os.path.join(path, gens[0]["merged"]))

@@ -1,13 +1,12 @@
 """batch_search parity: every query in a batch must return exactly the
 single-query declarative planner's top-k (doc order AND float32 scores),
-since both fold the same float64 contributions in the same order. Plus
-plan-shape guards: the whole batch reads postings ONCE (union predicate
-pushed into the scan) and unsupported shapes raise."""
+since the batch is the union of the single-query plans. Every shape the
+single-query planner takes is accepted, and the whole batch looks up its
+dfs once."""
 
 import numpy as np
 import pytest
 
-from ferret_spark.batch import batch_search
 from ferret_spark.fixtures import GOLDEN_FIELD_CONFIG, golden_rows
 from ferret_spark.index import SparkIndex
 from ferret_spark.query import (
@@ -15,14 +14,22 @@ from ferret_spark.query import (
     MUST_NOT,
     SHOULD,
     BooleanQuery,
+    FilteredQuery,
     FuzzyQuery,
     MatchAllQuery,
     PhraseQuery,
     PrefixQuery,
+    RangeFilter,
+    RangeQuery,
     TermQuery,
     WildcardQuery,
 )
-from ferret_spark.search import plan_topk, spark_rewrite
+from ferret_spark.search import (
+    ConstantScoreMatch,
+    batch_search,
+    plan_topk,
+    spark_rewrite,
+)
 
 
 def T(t, field="content", boost=1.0):
@@ -43,7 +50,7 @@ BATCH = [
     PrefixQuery(field="content", prefix="word"),  # rewrite -> MultiTermQuery
     WildcardQuery(field="content", pattern="w*d2"),
     FuzzyQuery(field="content", term="worde", min_sim=0.5),
-    # phrases: their own positional scan + per-qid kernel dispatch
+    # phrases: every freq kernel of plan_phrase
     PhraseQuery.of("content", ["quick", "brown"]),              # exact 2-slot
     PhraseQuery.of("content", ["word1", "word3"], slop=4),      # sloppy 2-slot
     PhraseQuery.of("content", ["quick", "brown", "fox"], slop=3),  # k=3 sloppy
@@ -69,8 +76,7 @@ def sidx(spark):
     return SparkIndex.build(spark, corpus, GOLDEN_FIELD_CONFIG, doc_id_col="doc_id")
 
 
-def test_batch_matches_single_query_topk(sidx):
-    got = batch_search(sidx, BATCH, k=K).collect()
+def _assert_matches_single(sidx, queries, got):
     by_qid = {}
     for r in got:
         by_qid.setdefault(r["query_id"], []).append(r)
@@ -78,8 +84,8 @@ def test_batch_matches_single_query_topk(sidx):
         assert [r["rank"] for r in sorted(rows, key=lambda r: r["rank"])] == list(
             range(1, len(rows) + 1)
         )
-    for qid, q in enumerate(BATCH):
-        want = plan_topk(sidx, spark_rewrite(sidx, q), k=K).collect()
+    for qid, q in enumerate(queries):
+        want = plan_topk(sidx, q, k=K).collect()
         have = sorted(by_qid.get(qid, []), key=lambda r: r["rank"])
         assert [r["doc_id"] for r in have] == [r["doc_id"] for r in want], (
             qid,
@@ -87,6 +93,10 @@ def test_batch_matches_single_query_topk(sidx):
         )
         for h, w in zip(have, want):
             assert np.float32(h["score"]) == np.float32(w["score"]), (qid, q)
+
+
+def test_batch_matches_single_query_topk(sidx):
+    _assert_matches_single(sidx, BATCH, batch_search(sidx, BATCH, k=K).collect())
 
 
 def test_batch_empty_and_pure_not(sidx):
@@ -108,17 +118,23 @@ def test_batch_score_round_mode(sidx):
 
 @pytest.mark.parametrize("score_round", [None, 4])
 def test_batch_empty_schema_matches_scored(sidx, score_round):
-    """A batch that matches nothing declares the score type of the scored
-    path: float when ranking on the float32 cast, double when rounding."""
-    empty = batch_search(sidx, [T("zzzzz")], k=5, score_round=score_round)
+    """A batch that matches nothing, or holds no query, declares the score
+    type of the scored path: float when ranking on the float32 cast,
+    double when rounding."""
     scored = batch_search(sidx, [T("word2")], k=5, score_round=score_round)
-    assert empty.collect() == []
-    assert empty.schema == scored.schema
+    for queries in ([T("zzzzz")], []):
+        empty = batch_search(sidx, queries, k=5, score_round=score_round)
+        assert empty.collect() == []
+        assert empty.schema == scored.schema
 
 
-@pytest.mark.parametrize(
-    "bad",
-    [
+def test_batch_takes_every_single_query_shape(sidx, monkeypatch):
+    """Shapes outside flat term booleans and top-level phrases go through
+    the batch like any other query and score as they do alone."""
+    monkeypatch.setattr("ferret_spark.search.MAX_EXPANDED_TERMS", 1)
+    capped = PrefixQuery(field="content", prefix="word")
+    assert isinstance(spark_rewrite(sidx, capped), ConstantScoreMatch)
+    shapes = [
         MatchAllQuery(),
         # a single-clause inner boolean flattens in spark_rewrite, so the
         # genuinely-nested case needs >=2 inner clauses
@@ -126,69 +142,36 @@ def test_batch_empty_schema_matches_scored(sidx, score_round):
             (BooleanQuery.of((T("word1"), SHOULD), (T("word3"), SHOULD)), MUST),
             (T("word2"), MUST),
         ),
-        # phrases batch top-level only, not as boolean clauses
         BooleanQuery.of(
             (PhraseQuery.of("content", ["quick", "brown"]), MUST),
             (T("word2"), MUST),
         ),
-    ],
-)
-def test_batch_unsupported_raises(sidx, bad):
-    with pytest.raises(ValueError):
-        batch_search(sidx, [T("word1"), bad], k=5)
-
-
-def test_batch_single_postings_scan(spark, tmp_path):
-    """The whole batch must be ONE pushed postings scan: save/load the
-    index (postings become a parquet source) and count parquet scans of
-    the postings path in the executed plan."""
-    rows = golden_rows()
-    corpus = spark.createDataFrame(
-        [dict(r, doc_id=i) for i, r in enumerate(rows)]
-    )
-    idx = SparkIndex.build(spark, corpus, GOLDEN_FIELD_CONFIG, doc_id_col="doc_id")
-    path = str(tmp_path / "bidx")
-    idx.save(path)
-    loaded = SparkIndex.load(spark, path)
-    df = batch_search(loaded, [q for q in BATCH[:7] if True], k=10)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # the plan toString truncates the parquet Location path, so count scan
-    # NODES: BATCH[:7] has no MatchAll clause, so postings is the only
-    # parquet source in the plan and there must be exactly one scan of it
-    n_file_scans = plan.count("FileScan parquet")
-    assert n_file_scans == 1, plan
-    # the union term predicate reaches the scan (rowgroup pruning tier)
-    assert "term" in plan and " IN (" in plan, plan
-    df.collect()  # and it actually runs
-
-
-def test_batch_phrase_plan_shape(spark, tmp_path):
-    """A mixed term+phrase batch must stay bounded-scan: one tf-only
-    postings scan for the term queries, one positional scan for ALL
-    phrases, one candidate scan for the rarest-slot semi-join (3 total,
-    independent of batch size), and exactly one Python eval node (the
-    mapInPandas kernel dispatch) regardless of how many phrases batch."""
-    rows = golden_rows()
-    corpus = spark.createDataFrame(
-        [dict(r, doc_id=i) for i, r in enumerate(rows)]
-    )
-    idx = SparkIndex.build(spark, corpus, GOLDEN_FIELD_CONFIG, doc_id_col="doc_id")
-    path = str(tmp_path / "pidx")
-    idx.save(path)
-    loaded = SparkIndex.load(spark, path)
-    batch = [
-        T("word1"),
-        BooleanQuery.of((T("word2"), MUST), (T("word3"), SHOULD)),
-        PhraseQuery.of("content", ["quick", "brown"]),
-        PhraseQuery.of("content", ["word1", "word3"], slop=4),
-        PhraseQuery.of("content", ["quick", "brown", "fox"], slop=2),
+        RangeQuery(field="date", lower="20051006", upper="20051010"),
+        FilteredQuery(
+            query=T("word1"),
+            filter=RangeFilter(field="date", lower="20051006", upper="20051010"),
+        ),
+        capped,
     ]
-    df = batch_search(loaded, batch, k=10)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FileScan parquet") == 3, plan
-    n_py = plan.count("MapInPandas") + plan.count("ArrowEvalPython")
-    assert n_py == 1, plan
-    df.collect()  # and it actually runs
+    got = batch_search(sidx, shapes, k=K).collect()
+    assert {r["query_id"] for r in got} == set(range(len(shapes)))
+    _assert_matches_single(sidx, shapes, got)
+
+
+def test_batch_one_doc_freqs_lookup(sidx, monkeypatch):
+    """The whole batch reads its dfs in one driver lookup over the union
+    of its queries' terms."""
+    calls = []
+    real = sidx.doc_freqs
+
+    def spy(pairs):
+        calls.append(list(pairs))
+        return real(pairs)
+
+    monkeypatch.setattr(sidx, "doc_freqs", spy)
+    batch_search(sidx, BATCH, k=K)
+    assert len(calls) == 1, calls
+    assert ("content", "quick") in calls[0] and ("content", "word3") in calls[0]
 
 
 # a slot that repeats an alternative: one slot, exact and sloppy, and an

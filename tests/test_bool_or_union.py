@@ -17,12 +17,7 @@ SF = "/root/testdata/sf0.01"
 def _reference_or(idx, terms):
     """Pre-r7 shape: chained FULL OUTER joins + coalesce sum."""
     plans = []
-    pl = _Planner(
-        idx,
-        BooleanQuery.of(
-            *[(TermQuery(field="text", term=t), SHOULD) for t in terms]
-        ),
-    )
+    pl = _Planner(idx, idx.doc_freqs([("text", t) for t in terms]))
     cols = []
     base = None
     for i, t in enumerate(terms):
