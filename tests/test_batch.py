@@ -1,8 +1,8 @@
 """batch_search parity: every query in a batch must return exactly the
 single-query declarative planner's top-k (doc order AND float32 scores),
 since the batch is the union of the single-query plans. Every shape the
-single-query planner takes is accepted, and the whole batch looks up its
-dfs once."""
+single-query planner takes is accepted, one it does not take raises as
+it does alone, and the whole batch looks up its dfs once."""
 
 import numpy as np
 import pytest
@@ -19,6 +19,7 @@ from ferret_spark.query import (
     MatchAllQuery,
     PhraseQuery,
     PrefixQuery,
+    Query,
     RangeFilter,
     RangeQuery,
     TermQuery,
@@ -156,6 +157,25 @@ def test_batch_takes_every_single_query_shape(sidx, monkeypatch):
     got = batch_search(sidx, shapes, k=K).collect()
     assert {r["query_id"] for r in got} == set(range(len(shapes)))
     _assert_matches_single(sidx, shapes, got)
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        Query(),
+        # a filter is not a query: it goes through FilteredQuery
+        RangeFilter(field="date", lower="20051006", upper="20051010"),
+        # an unplannable clause fails the whole boolean
+        BooleanQuery.of((Query(), MUST), (T("word2"), MUST)),
+    ],
+)
+def test_batch_unsupported_raises(sidx, bad):
+    """A query no planner takes fails the batch as it fails plan_topk,
+    when the plan is built, and alongside supported queries."""
+    with pytest.raises(TypeError, match="unsupported query"):
+        plan_topk(sidx, bad, k=K)
+    with pytest.raises(TypeError, match="unsupported query"):
+        batch_search(sidx, [T("word2"), bad], k=K)
 
 
 def test_batch_one_doc_freqs_lookup(sidx, monkeypatch):
