@@ -9,8 +9,9 @@ Reference parity (WHAT, not HOW):
 
 Spark-first design notes (100 TB posture):
 - doc_id assignment is the only global ordering step: a two-phase
-  bucket-count + window trick — per-bucket row_number plus broadcast bucket
-  offsets — no single-partition window, no RDD round-trip.
+  bucket-count + window trick — per-bucket row_number plus bucket offsets
+  held in the plan as one array literal — no single-partition window, no
+  RDD round-trip.
 - tokenization is one vectorized pandas UDF (Arrow batches); positions ride
   for free as posexplode indices (stop-dropped slots are NULL so positional
   gaps survive).
@@ -130,23 +131,20 @@ def assign_doc_ids(
         r["_b"]: r["cnt"]
         for r in with_b.groupBy("_b").agg(F.count("*").alias("cnt")).collect()
     }
-    offsets, acc = {}, 0
+    offsets, acc = [], 0
     for b in range(buckets):
-        offsets[b] = acc
+        offsets.append(acc)
         acc += counts.get(b, 0)
-    spark = df.sparkSession
-    off_df = F.broadcast(
-        spark.createDataFrame(
-            [(b, o) for b, o in offsets.items() if counts.get(b)],
-            "_b long, _off long",
-        )
-    )
+    # the offsets as ONE array literal indexed by bucket, built as a single
+    # SQL string: a plan constant, where a join against a createDataFrame
+    # of them broadcast a LogicalRDD in its own job on every action, and
+    # F.lit(list) would cost one py4j call per bucket
+    off = F.expr(f"array({', '.join(f'{o}L' for o in offsets)})[_b]")
     w = Window.partitionBy("_b").orderBy(*cols)
     return (
         with_b.withColumn("_rn", F.row_number().over(w) - 1)
-        .join(off_df, "_b")
-        .withColumn("doc_id", (F.col("_off") + F.col("_rn")).cast("long"))
-        .drop("_b", "_rn", "_off")
+        .withColumn("doc_id", (off + F.col("_rn")).cast("long"))
+        .drop("_b", "_rn")
     )
 
 

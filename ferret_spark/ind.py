@@ -8,6 +8,16 @@ table applied at query time, c/src/index.c:5729-5745), and optimize()
 expunges deletes + rebuilds the merged generation (iw_optimize
 c/src/index.c:6439-6453).
 
+An add materialises its batch once: the batch's docs frame and its
+segments are each persisted for the length of the add, written, and fed
+to the next step, so no job re-reads what the add just wrote, recounts
+the batch or re-derives the segment span (the counts come from the new
+files' parquet footers). Its merge fans out by the batch's own size, like
+the reference's flush-then-merge-small-tiers (iw_add_document ->
+iw_maybe_merge_segments, c/src/index.c:6280-6309), and every table the
+library wrote is opened with the schema its footers record (no
+schema-inference job).
+
 Deviation from the reference (by design): doc_ids are stable forever —
 merges never remap them (the reference renumbers via doc_map + base;
 stable global ids are what make distributed rank-identity testable).
@@ -34,10 +44,24 @@ from ferret_spark.segments import (
     append_manifest,
     base_generation,
     build_segments,
+    concat_partitions,
+    data_files,
+    footer_rows,
+    merge_fanout,
     merge_segments,
+    parquet_rows,
+    read_table,
     term_stats_of,
     write_generation,
 )
+
+
+def _append(df: DataFrame, table: str) -> list[str]:
+    """Append ``df`` to a table directory; returns the data files this
+    write added (their footers hold its row count)."""
+    before = set(data_files(table))
+    df.write.mode("append").parquet(table)
+    return [f for f in data_files(table) if f not in before]
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -101,6 +125,7 @@ class FerretIndex:
             self._reload_idx()
             return self
 
+        t0 = time.time()
         meta = self._meta()
         ranges = meta.get("id_ranges", [[0, meta["stats"]["n_docs"]]])
         next_id = max(r[1] for r in ranges)
@@ -117,54 +142,62 @@ class FerretIndex:
             batch = B.assign_doc_ids(df, id_cols).withColumn(
                 "doc_id", F.col("doc_id") + F.lit(base)
             )
+        # the batch is computed ONCE: its docs frame and its segments are
+        # each persisted, written, and fed to the next step — never re-read
+        # from the appended tables or recounted by a job. Both caches hold
+        # only this batch and are released however the add ends.
         docs = B.build_docs(
             batch, self.field_config, doc_id_col="doc_id",
             keep_tokens=False, doc_lens=False,
-        )
-        keep = [c for c in docs.columns if not c.startswith("_toks_")]
-        n_new = docs.count()
-        docs.select(*keep).write.mode("append").parquet(
-            os.path.join(self.path, "docs")
-        )
-        segs = build_segments(
-            self.spark.read.parquet(os.path.join(self.path, "docs")).where(
-                F.col("doc_id") >= base
-            ),
-            self.field_config,
-            self.seg_size,
-        )
-        segs.write.mode("append").parquet(os.path.join(self.path, "segments"))
-        # the batch becomes its own merge GENERATION (tiered policy,
-        # iw_maybe_merge_segments analog): merge cost stays O(batch), not
-        # O(index); tiers collapse geometrically in _maybe_merge_generations
-        meta = self._meta()
-        gens = meta.get("generations") or [
-            base_generation(meta["stats"]["n_docs"])
-        ]
-        batch_segs = self.spark.read.parquet(
-            os.path.join(self.path, "segments")
-        ).where(F.col("seg_id") >= base // self.seg_size)
-        gens.append(
-            write_generation(
+        ).persist()
+        segs = None
+        try:
+            new_docs = _append(docs, os.path.join(self.path, "docs"))
+            n_new = footer_rows(new_docs)
+            n_segs = max(1, -(-n_new // self.seg_size))
+            segs = build_segments(
+                docs, self.field_config, self.seg_size, n_segments=n_segs
+            ).persist()
+            seg_rows = footer_rows(
+                _append(segs, os.path.join(self.path, "segments"))
+            )
+            # the batch becomes its own merge GENERATION (tiered policy,
+            # iw_maybe_merge_segments analog): merge cost and fan-out follow
+            # the batch, not the index; tiers collapse geometrically in
+            # _maybe_merge_generations
+            gen = write_generation(
                 self.spark,
                 self.path,
                 self._new_gname(),
-                merge_segments(batch_segs, self.salt_buckets),
+                merge_segments(
+                    segs, self.salt_buckets, n_segments=n_segs, n_rows=seg_rows
+                ),
                 n_new,
             )
-        )
-        meta["generations"] = gens
+        finally:
+            docs.unpersist()
+            if segs is not None:
+                segs.unpersist()
+        meta["generations"] = (
+            meta.get("generations") or [base_generation(meta["stats"]["n_docs"])]
+        ) + [gen]
         meta["id_ranges"] = ranges + [[base, base + n_new]]
         meta["stats"] = self._segment_stats()
         self._write_meta(meta)
-        self._maybe_merge_generations()
-        meta = self._meta()
         append_manifest(
             self.spark,
             self.path,
             f"add_batch_{int(time.time())}",
-            {"rows": n_new, "bytes": -1},
+            {
+                "rows": n_new,
+                "bytes": -1,
+                "partitions": merge_fanout(
+                    self.spark, self.salt_buckets, n_segs, seg_rows
+                ),
+                "elapsed_sec": time.time() - t0,
+            },
         )
+        self._maybe_merge_generations()
         self._reload_idx()
         return self
 
@@ -199,7 +232,7 @@ class FerretIndex:
         shifted_docs.write.mode("append").parquet(
             os.path.join(self.path, "docs")
         )
-        src_segs = self.spark.read.parquet(os.path.join(other.path, "segments"))
+        src_segs = read_table(self.spark, os.path.join(other.path, "segments"))
         shift_posting_rows(src_segs, base, seg_shift).write.mode(
             "append"
         ).parquet(os.path.join(self.path, "segments"))
@@ -247,7 +280,6 @@ class FerretIndex:
         from ferret_spark.segments import (
             corpus_stats_from_marker_files,
             corpus_stats_from_segments,
-            parquet_rows,
         )
 
         seg_dir = os.path.join(self.path, "segments")
@@ -260,14 +292,14 @@ class FerretIndex:
             seg_dir, self.field_config, n_docs_fallback=n_docs_fb
         )
         if stats is None:
-            segs = self.spark.read.parquet(seg_dir)
+            segs = read_table(self.spark, seg_dir)
             stats = corpus_stats_from_segments(
                 self.spark, segs, self.field_config, n_docs_fallback=n_docs_fb
             )
         return stats
 
     def _refresh_derived(self):
-        segs = self.spark.read.parquet(os.path.join(self.path, "segments"))
+        segs = read_table(self.spark, os.path.join(self.path, "segments"))
         ts = term_stats_of(
             segs.where(F.col("term").isNotNull())  # skip doc-length markers
             .groupBy("field", "term")
@@ -304,30 +336,31 @@ class FerretIndex:
                 return
             from ferret_spark.segments import _concat_stage
 
+            t0 = time.time()
             by_size = sorted(gens, key=lambda g: g["rows"])
             victims = by_size[:factor]
             keep = [g for g in gens if g not in victims]
             union = None
             for g in victims:
-                m = self.spark.read.parquet(
-                    os.path.join(self.path, g["merged"])
-                )
+                m = read_table(self.spark, os.path.join(self.path, g["merged"]))
                 union = m if union is None else union.unionByName(m)
-            n_part = max(
-                4, self.spark.sparkContext.defaultParallelism
+            # fan-out from the victims' size: one merged row per (field,
+            # term) = one term_stats row, counted in the footers
+            n_part = concat_partitions(
+                self.spark,
+                sum(
+                    parquet_rows(os.path.join(self.path, g["term_stats"]))
+                    for g in victims
+                ),
             )
             merged = _concat_stage(
                 union.repartition(n_part, "field", "term"),
                 ["field", "term"],
             )
+            gname = self._new_gname()
+            rows = sum(g["rows"] for g in victims)
             keep.append(
-                write_generation(
-                    self.spark,
-                    self.path,
-                    self._new_gname(),
-                    merged,
-                    sum(g["rows"] for g in victims),
-                )
+                write_generation(self.spark, self.path, gname, merged, rows)
             )
             # commit protocol: the new generation + meta are durable BEFORE
             # victim dirs go away — a crash in between leaves at worst an
@@ -335,6 +368,17 @@ class FerretIndex:
             # at deleted paths
             meta["generations"] = keep
             self._write_meta(meta)
+            append_manifest(
+                self.spark,
+                self.path,
+                f"tier_merge_{os.path.basename(gname)}",
+                {
+                    "rows": rows,
+                    "bytes": -1,
+                    "partitions": n_part,
+                    "elapsed_sec": time.time() - t0,
+                },
+            )
             import shutil
 
             for g in victims:
@@ -350,7 +394,7 @@ class FerretIndex:
         p = self._deleted_path()
         if not os.path.exists(p):
             return None
-        return self.spark.read.parquet(p).select("doc_id")
+        return read_table(self.spark, p).select("doc_id")
 
     def _deleted_state_key(self):
         """Fingerprint of the deletes parquet dir — keys the packed-deletes
@@ -437,7 +481,7 @@ class FerretIndex:
 
         deleted_df = self.deleted_df()
         has_deletes = deleted_df is not None
-        segs = self.spark.read.parquet(os.path.join(self.path, "segments"))
+        segs = read_table(self.spark, os.path.join(self.path, "segments"))
         if has_deletes:
             # deletions ride the seg_id shuffle as packed __del__ rows (the
             # same mechanism the search path uses) — a bulk delete never
@@ -518,8 +562,16 @@ class FerretIndex:
         os.rename(tmp, final)
 
         # rebuild merged + stats over the compacted segments
-        segs2 = self.spark.read.parquet(final)
-        merged = merge_segments(segs2, self.salt_buckets)
+        segs2 = read_table(self.spark, final)
+        m0 = self._meta()
+        ranges = m0.get("id_ranges", [[0, m0["stats"]["n_docs"]]])
+        span = max(hi for _lo, hi in ranges)
+        merged = merge_segments(
+            segs2,
+            self.salt_buckets,
+            n_segments=max(1, -(-span // self.seg_size)),
+            n_rows=parquet_rows(final),
+        )
         mtmp = os.path.join(self.path, "merged.tmp")
         # merge input is range-partitioned by (field, term); local sort only
         merged.sortWithinPartitions(
@@ -539,7 +591,7 @@ class FerretIndex:
         # remove deleted rows from the docs table + stats (anti-join — the
         # deleted set never reaches the driver)
         if has_deletes:
-            docs = self.spark.read.parquet(os.path.join(self.path, "docs"))
+            docs = read_table(self.spark, os.path.join(self.path, "docs"))
             kept = docs.join(deleted_df, "doc_id", "left_anti")
             dtmp = os.path.join(self.path, "docs.tmp")
             kept.write.mode("overwrite").parquet(dtmp)

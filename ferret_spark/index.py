@@ -107,13 +107,15 @@ class SparkIndex:
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "SparkIndex":
+        from ferret_spark.segments import read_table
+
         with open(os.path.join(path, "meta.json")) as f:
             meta = json.load(f)
         return cls(
             spark,
-            spark.read.parquet(os.path.join(path, "docs")),
-            spark.read.parquet(os.path.join(path, "postings")),
-            spark.read.parquet(os.path.join(path, "term_stats")),
+            read_table(spark, os.path.join(path, "docs")),
+            read_table(spark, os.path.join(path, "postings")),
+            read_table(spark, os.path.join(path, "term_stats")),
             meta["stats"],
             meta["field_config"],
         )

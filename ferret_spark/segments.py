@@ -266,7 +266,9 @@ def build_segments(
     src = docs.select(*cols).withColumn(
         "seg_id", (F.col("doc_id") / F.lit(seg_size)).cast("int")
     )
-    if n_segments and n_segments > 1:
+    if n_segments:
+        # one segment (a small add or build): one range partition, no
+        # sampling job, one task instead of spark.sql.shuffle.partitions.
         # cap shuffle partitions: one-partition-per-segment is ideal while
         # segments ≈ cores, but at corpus scale (doc_count/seg_size can be
         # millions) it would explode scheduler + shuffle metadata. Past the
@@ -376,32 +378,57 @@ def _concat_stage(df: DataFrame, keys: list[str]) -> DataFrame:
     return grouped.mapInPandas(concat_batches, out_schema)
 
 
+def concat_partitions(spark: SparkSession, n_rows: int | None) -> int:
+    """Fan-out of a single (field, term) concat stage over ``n_rows`` input
+    rows. 4x cores: the Zipf head makes (field, term) buckets skewed, and
+    at 1 task/core the stage wall is the slowest straggler — smaller quanta
+    smooth it (measured at 8 cores: 6.65s @1x -> 4.56s @4x; 8x reverses
+    the gain via per-file commit overhead). A known row count caps it at
+    ~2k rows per task, so tiny merges (small corpora, one add batch, a
+    tier of small generations) don't pay 4x-cores Python tasks."""
+    n_part = max(4, 4 * spark.sparkContext.defaultParallelism)
+    if n_rows is not None and n_rows > 0:
+        n_part = max(4, min(n_part, n_rows // 2000 + 1))
+    return n_part
+
+
+def _salted(n_segments: int, salt_buckets: int) -> bool:
+    return n_segments > salt_buckets * 8
+
+
+def merge_fanout(
+    spark: SparkSession, salt_buckets: int, n_segments: int, n_rows: int | None
+) -> int:
+    """Partitions of merge_segments' final concat stage for these
+    arguments (the manifest records it)."""
+    if _salted(n_segments, salt_buckets):
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return concat_partitions(spark, n_rows)
+
+
 def merge_segments(
     segments: DataFrame,
     salt_buckets: int = 8,
-    seg_per_bucket: int | None = None,
-    n_segments: int | None = None,
+    *,
+    n_segments: int,
     n_rows: int | None = None,
 ) -> DataFrame:
     """Hierarchical salted merge -> global (field, term) rows.
 
-    When the segment count is small a single concat stage suffices; past
-    ~8x salt_buckets segments, a salted first stage (salt = contiguous
-    seg_id bucket, so stage-2 concat stays doc-range monotonic) spreads a
-    hot term's rows over salt_buckets reducers first — the Zipf head
-    appears in EVERY segment, and without salting its entire posting list
-    would funnel through one task (skew handling required by north_rule).
+    ``n_segments`` is the segment span of ``segments`` (the caller knows it
+    from the doc count: a build's whole corpus, an add's own batch) and
+    ``n_rows`` their row count from parquet footers, when known. When the
+    span is small a single concat stage suffices; past ~8x salt_buckets
+    segments, a salted first stage (salt = contiguous seg_id bucket, so
+    stage-2 concat stays doc-range monotonic) spreads a hot term's rows
+    over salt_buckets reducers first — the Zipf head appears in EVERY
+    segment, and without salting its entire posting list would funnel
+    through one task (skew handling required by north_rule).
     """
     # doc-length marker rows (term NULL) are per-segment metadata — they
     # never merge into the global (field, term) index
     segments = segments.where(F.col("term").isNotNull())
-    if n_segments is None:
-        max_seg = segments.agg(F.max("seg_id")).collect()[0][0] or 0
-        n_segments = max_seg + 1
-    if seg_per_bucket is None:
-        seg_per_bucket = max(1, (n_segments + salt_buckets - 1) // salt_buckets)
-
-    if n_segments <= salt_buckets * 8:
+    if not _salted(n_segments, salt_buckets):
         # hash-partition the INPUT by (field, term): the groupBy reuses the
         # partitioning (one shuffle total) and the writer needs no output
         # repartition. NOT repartitionByRange — the RangePartitioner's
@@ -409,23 +436,14 @@ def merge_segments(
         # a second time; and not on the OUTPUT either, which would execute
         # the whole merge twice. Files stay sorted within partitions, so
         # parquet rowgroup min/max stats still prune term lookups.
-        spark = segments.sparkSession
-        # 4x cores: the Zipf head makes (field, term) buckets skewed, and
-        # at 1 task/core the stage wall is the slowest straggler — smaller
-        # quanta smooth it (measured at 8 cores: 6.65s @1x -> 4.56s @4x;
-        # 8x reverses the gain via per-file commit overhead). When the
-        # caller knows the input row count (manifest), cap the fan-out so
-        # tiny merges (small corpora / few segments) don't pay 4x-cores
-        # tasks for a few thousand rows — ~2k rows per task floor.
-        n_part = max(4, 4 * spark.sparkContext.defaultParallelism)
-        if n_rows is not None and n_rows > 0:
-            n_part = max(4, min(n_part, n_rows // 2000 + 1))
+        n_part = concat_partitions(segments.sparkSession, n_rows)
         src = segments.repartition(n_part, "field", "term")
         return _concat_stage(src, ["field", "term"]).select(
             "field", "term", "df",
             "doc_bin", "tf_bin", "pos_bin", "dl_bin", "block_meta",
         )
 
+    seg_per_bucket = max(1, (n_segments + salt_buckets - 1) // salt_buckets)
     salted = segments.withColumn(
         "salt", (F.col("seg_id") / F.lit(seg_per_bucket)).cast("int")
     )
@@ -464,7 +482,7 @@ def write_generation(
     merged.sortWithinPartitions("field", "term").write.mode("overwrite").parquet(
         merged_dir
     )
-    term_stats_of(spark.read.parquet(merged_dir)).write.mode("overwrite").parquet(
+    term_stats_of(read_table(spark, merged_dir)).write.mode("overwrite").parquet(
         os.path.join(root, gname, "term_stats")
     )
     return {
@@ -566,16 +584,55 @@ def append_manifest(spark: SparkSession, path: str, stage: str, metrics: dict):
     pq.write_table(table, os.path.join(mp, fn))
 
 
-def parquet_rows(path: str) -> int:
-    """Row count from parquet footers (driver-side, no Spark job)."""
+def data_files(path: str) -> list[str]:
+    """The parquet data files of a table directory, in name order (Spark's
+    hidden ``_``/``.`` files and directories such as ``_temporary``
+    skipped)."""
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        out += [
+            os.path.join(root, fn)
+            for fn in sorted(files)
+            if fn.endswith(".parquet") and not fn.startswith(("_", "."))
+        ]
+    return out
+
+
+def footer_rows(files) -> int:
+    """Summed row counts of parquet files, from their footers (driver-side,
+    no Spark job)."""
     import pyarrow.parquet as pq
 
-    total = 0
-    for root, _d, files in os.walk(path):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                total += pq.ParquetFile(os.path.join(root, fn)).metadata.num_rows
-    return total
+    return sum(pq.read_metadata(f).num_rows for f in files)
+
+
+def parquet_rows(path: str) -> int:
+    """Row count of a table directory from parquet footers (no Spark job)."""
+    return footer_rows(data_files(path))
+
+
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """Read a table this library wrote with the Spark schema recorded in
+    its data files' footers — the row-metadata key Spark's one-task
+    schema-inference job would read, here read on the driver with
+    pyarrow — so opening the table runs no Spark job. A plain (inferring)
+    read when there is no flat data file or no key. Caller-supplied inputs
+    keep a plain read."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    files = data_files(path)
+    raw = None
+    # no file yet, or a directory-partitioned layout: let Spark infer
+    if files and not any(os.sep in os.path.relpath(f, path) for f in files):
+        raw = (pq.read_metadata(files[0]).metadata or {}).get(_SPARK_ROW_METADATA)
+    if raw is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(StructType.fromJson(json.loads(raw))).parquet(path)
 
 
 def corpus_stats_from_marker_files(
@@ -779,7 +836,7 @@ class SegmentIndexBuilder:
         seg_dir = os.path.join(path, "segments")
         if "segments" not in self._done():
             t0 = time.time()
-            docs = spark.read.parquet(docs_dir)
+            docs = read_table(spark, docs_dir)
             n_docs_known = int(self._done().get("docs", {}).get("rows", 0))
             n_segs = max(1, (n_docs_known + self.seg_size - 1) // self.seg_size)
             segs = build_segments(
@@ -799,14 +856,10 @@ class SegmentIndexBuilder:
         merged_dir = os.path.join(path, "merged")
         if "merged" not in self._done():
             t0 = time.time()
-            segs = spark.read.parquet(seg_dir)
+            segs = read_table(spark, seg_dir)
             done_m = self._done()
-            n_docs_known = done_m.get("docs", {}).get("rows", -1)
-            n_segments = (
-                (int(n_docs_known) + self.seg_size - 1) // self.seg_size
-                if n_docs_known and n_docs_known > 0
-                else None
-            )
+            n_docs_known = int(done_m.get("docs", {}).get("rows", 0))
+            n_segments = max(1, -(-n_docs_known // self.seg_size))
             seg_rows_known = done_m.get("segments", {}).get("rows", None)
             merged = merge_segments(
                 segs, self.salt_buckets, n_segments=n_segments,
@@ -827,7 +880,7 @@ class SegmentIndexBuilder:
         ts_dir = os.path.join(path, "term_stats")
         if "term_stats" not in self._done():
             t0 = time.time()
-            term_stats_of(spark.read.parquet(merged_dir)).write.mode(
+            term_stats_of(read_table(spark, merged_dir)).write.mode(
                 "overwrite"
             ).parquet(ts_dir)
             self._finish("term_stats", parquet_rows(ts_dir), t0, ts_dir)
@@ -841,7 +894,7 @@ class SegmentIndexBuilder:
                 seg_dir, self.field_config, n_docs_fallback=n_docs
             )
             if stats is None:  # marker count too large for the driver
-                segs = spark.read.parquet(seg_dir)
+                segs = read_table(spark, seg_dir)
                 stats = corpus_stats_from_segments(
                     spark, segs, self.field_config, n_docs_fallback=n_docs
                 )
@@ -904,7 +957,7 @@ class SegmentIndex:
 
         with open(os.path.join(path, "meta.json")) as f:
             meta = json.load(f)
-        seg_raw = spark.read.parquet(os.path.join(path, "segments"))
+        seg_raw = read_table(spark, os.path.join(path, "segments"))
         gens = meta.get("generations")
         if gens and len(gens) > 1:
             # LSM view over merge generations (tiered merge policy,
@@ -916,8 +969,8 @@ class SegmentIndex:
             merged = None
             ts = None
             for g in gens:
-                m = spark.read.parquet(os.path.join(path, g["merged"]))
-                t = spark.read.parquet(os.path.join(path, g["term_stats"]))
+                m = read_table(spark, os.path.join(path, g["merged"]))
+                t = read_table(spark, os.path.join(path, g["term_stats"]))
                 merged = m if merged is None else merged.unionByName(m)
                 ts = t if ts is None else ts.unionByName(
                     t.select(*ts.columns)
@@ -926,17 +979,17 @@ class SegmentIndex:
                 ts.groupBy("field", "term").agg(F.sum("df").alias("df"))
             )
         elif gens:  # exactly one generation — possibly a collapsed tier
-            merged = spark.read.parquet(os.path.join(path, gens[0]["merged"]))
-            term_stats = spark.read.parquet(
-                os.path.join(path, gens[0]["term_stats"])
+            merged = read_table(spark, os.path.join(path, gens[0]["merged"]))
+            term_stats = read_table(
+                spark, os.path.join(path, gens[0]["term_stats"])
             )
         else:
-            merged = spark.read.parquet(os.path.join(path, "merged"))
-            term_stats = spark.read.parquet(os.path.join(path, "term_stats"))
+            merged = read_table(spark, os.path.join(path, "merged"))
+            term_stats = read_table(spark, os.path.join(path, "term_stats"))
         idx = cls(
             spark,
             path,
-            spark.read.parquet(os.path.join(path, "docs")),
+            read_table(spark, os.path.join(path, "docs")),
             # NULL-term rows are per-segment doc-length markers, not postings
             seg_raw.where(F.col("term").isNotNull()),
             merged,

@@ -1483,7 +1483,9 @@ def _plan_segments(
         n_segs = _n_segs_span(index, n_docs, seg_size)
         extra.append(_stub_rows(spark, n_segs, bm_type))
     for tag, cdir in cached_filters.items():
-        fdf = spark.read.parquet(cdir)
+        from ferret_spark.segments import read_table
+
+        fdf = read_table(spark, cdir)
         extra.append(_pack_ids(fdf, seg_size, seg_schema, f"__filt__:{tag}"))
     if deleted is not None:
         # the pack is a groupBy shuffle of the deletes parquet — persist
