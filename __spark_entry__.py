@@ -324,7 +324,7 @@ def _q_phrase_slop(t1: str, t2: str, slop: int):
 
 def _sql_phrase_slop(t1: str, t2: str, slop: int, k: int = K) -> str:
     """Sloppy 2-term phrase twin. Mirrors the engine's alternating-chain
-    form of the reference walk (phrase_np.sloppy_freq2_batch): events
+    form of the reference walk (phrase_np.sloppy_freq2_flat): events
     alternate between the two offset-adjusted position lists (first event
     at the max of the two first positions, ties to the larger-offset
     slot), each event contributing a window of

@@ -8,8 +8,7 @@ A from-scratch reimplementation of the *capabilities* of dbalmain/ferret
              segments with delta+varbyte compression, salted hierarchical
              merge, manifest-based checkpoint/resume
 - search:    Term/Boolean/Phrase/Prefix/Wildcard/Fuzzy/Range queries planned
-             as DataFrame joins + mapInArrow scorers, BM25 top-k with
-             block-max pruning
+             as DataFrame joins + mapInArrow scorers, BM25 top-k
 - oracle:    a pure-Python reference searcher (same operator semantics,
              same BM25) used for rank-identity tests
 

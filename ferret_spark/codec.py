@@ -6,8 +6,9 @@ Format semantics from the reference (WHAT):
 - doc ids delta-encoded; positions delta-encoded per doc
   (dw_flush c/src/index.c:5414-5447, .frq/.prx layout c/FileFormat.txt:68-110)
 - skip structure replaced by block-max metadata: per BLOCK_SIZE docs store
-  (first_doc, last_doc, max_tf, byte offsets) -> parquet-friendly and
-  feeds block-max WAND pruning (skip lists c/src/index.c:2999-3065)
+  (first_doc, last_doc, max_tf, min_dl, byte offsets) -> parquet-friendly
+  block bounds (skip lists c/src/index.c:2999-3065); the segment scorer
+  scores every hit and reads no bound today
 
 Layout per (term) row:
   doc_bin: per block, vbyte stream of [first_doc_delta0=first_doc-block_first

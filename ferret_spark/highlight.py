@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field as dfield
 
+import numpy as np
+
 from ferret_spark.analysis import get_analyzer
 from ferret_spark.oracle import bm25_idf, bm25_tf
 from ferret_spark.query import (
@@ -666,23 +668,20 @@ def _doc_postings_many(index, pairs, doc_ids):
     doc, from one pushed scan (seg_id/doc_id IN-filters)."""
     from pyspark.sql import functions as F
 
+    from ferret_spark.wand import _exact_pair_cond
+
     infos = {d: {} for d in doc_ids}
     if not pairs or not doc_ids:
         return infos
-    fields = sorted({f for f, _ in pairs})
-    terms = sorted({t for _, t in pairs})
+    pair_cond = _exact_pair_cond(pairs)
     if hasattr(index, "segments"):
-        import numpy as np
-
         from ferret_spark.codec import decode_posting_list
 
         by_seg: dict[int, list] = {}
         for d in doc_ids:
             by_seg.setdefault(d // index.seg_size, []).append(d)
         rows = index.segments.where(
-            F.col("seg_id").isin(sorted(by_seg))
-            & F.col("field").isin(fields)
-            & F.col("term").isin(terms)
+            F.col("seg_id").isin(sorted(by_seg)) & pair_cond
         ).collect()
         for r in rows:
             row = {
@@ -705,11 +704,7 @@ def _doc_postings_many(index, pairs, doc_ids):
                     }
     else:
         rows = (
-            index.postings.where(
-                F.col("field").isin(fields)
-                & F.col("term").isin(terms)
-                & F.col("doc_id").isin(doc_ids)
-            )
+            index.postings.where(pair_cond & F.col("doc_id").isin(doc_ids))
         ).collect()
         for r in rows:
             infos[r["doc_id"]][(r["field"], r["term"])] = {
@@ -768,14 +763,16 @@ def _explain_node(q, dfs, n, index, doc_info, doc_id) -> Explanation:
                 total += d.value
         return Explanation(q.boost * total, "sum of clauses", details)
     if isinstance(q, PhraseQuery):
-        # recompute phrase freq from positions
-        from ferret_spark.oracle import sloppy_phrase_freq
+        # recompute phrase freq from this doc's positions: each slot's
+        # alternatives merged (once per occurrence; distinct for an exact
+        # multi-slot phrase, as search merges them), then the search
+        # kernels' dispatcher on a batch of one row
+        from ferret_spark.phrase_np import has_repeats, phrase_freqs
 
         idf_sum = 0.0
-        adjusted = []
-        offsets = []
+        flats = []
         dl = None
-        for off, alts in q.positions:
+        for _, alts in q.positions:
             ps = []
             for t in alts:
                 df_ = dfs.get((q.field, t), 0)
@@ -787,12 +784,18 @@ def _explain_node(q, dfs, n, index, doc_info, doc_id) -> Explanation:
                     dl = hit["dl"]
             if not ps:
                 return Explanation(0.0, "phrase slot unmatched")
-            adjusted.append(sorted(p - off for p in ps))
-            offsets.append(off)
-        if q.slop == 0:
-            freq = float(len(set(adjusted[0]).intersection(*adjusted[1:])))
-        else:
-            freq = sloppy_phrase_freq(adjusted, offsets, q.slop, False)
+            if q.slop == 0 and len(q.positions) > 1:
+                ps = set(ps)
+            flats.append(np.sort(np.fromiter(ps, dtype=np.int64)))
+        freq = float(
+            phrase_freqs(
+                flats,
+                [np.array([len(f)]) for f in flats],
+                [off for off, _ in q.positions],
+                q.slop,
+                has_repeats(q.positions),
+            )[0]
+        )
         if freq <= 0 or dl is None:
             return Explanation(0.0, "phrase not aligned")
         tfp = bm25_tf(freq, dl, index.avgdl(q.field))

@@ -54,26 +54,36 @@ intersection of offset-adjusted position sets; since positions are
 distinct within a slot, an adjusted value matched by all k slots forms a
 merged-order group of exactly k equal elements — a flat vectorized count.
 
-All kernels take flat (values, per-row lengths) pairs or sequences of
-per-row arrays and return one float64 freq per row, so one call scores an
-entire Arrow batch (the declarative planner) or an entire segment's
-candidate set (the fused evaluator).  Rows where either slot is empty
-score 0.  Window contributions accumulate in chronological (merged-order)
-sequence, so the float64 sums are bit-identical to the reference walk.
+Every caller goes through ONE dispatcher, ``phrase_freqs``: the
+segmented evaluator (one call per segment's candidate set), the
+declarative planner's sloppy pandas UDF (one call per Arrow batch) and
+``explain`` (one row per explained doc), so a phrase fix lands once.
+Inputs are per-slot flat (values, per-row lengths) pairs of RAW token
+positions (slot offsets are applied inside); a slot with several
+alternatives arrives already merged into one sorted stream.  The choice:
+
+  - one slot: the slot's position count;
+  - exact (slop == 0): the k-way group count (``exact_freqk_flat``);
+  - repeated terms: the per-doc reference walk (the repeat
+    reconciliation, sphsc_check_repeats, is genuinely sequential);
+  - two slots: the static alternating chain (``sloppy_freq2_flat``);
+  - three or more slots: the lockstep heap walk (``sloppy_freqk_flat``).
+
+Every kernel returns one float64 freq per row; rows where a slot is
+empty score 0.  Window contributions accumulate in chronological
+(merged-order) sequence, so the float64 sums are bit-identical to the
+reference walk.
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
 __all__ = [
-    "sloppy_freq2_batch",
+    "phrase_freqs",
+    "has_repeats",
     "sloppy_freq2_flat",
-    "sloppy_freqk_batch",
     "sloppy_freqk_flat",
-    "exact_freqk_batch",
     "exact_freqk_flat",
     "chunk_rows",
 ]
@@ -86,7 +96,57 @@ __all__ = [
 # are scored independently, so the dispatch slices row blocks of ~this
 # many positions — temporaries stay cache-resident and the per-call numpy
 # overhead (~100 ufunc dispatches) amortizes over thousands of rows.
-CHUNK_TARGET = int(os.environ.get("FERRET_PHRASE_CHUNK", str(1 << 15)))
+CHUNK_TARGET = 1 << 15
+
+
+def has_repeats(positions) -> bool:
+    """True when a term occurs more than once across a phrase's
+    (offset, alternatives) slots — the walk then reconciles repeats."""
+    seen: set[str] = set()
+    for _, alts in positions:
+        for t in alts:
+            if t in seen:
+                return True
+            seen.add(t)
+    return False
+
+
+def phrase_freqs(flats, lens, offsets, slop: int, repeats: bool):
+    """Phrase frequency per row: ``flats[j]`` holds slot j's raw
+    positions concatenated across rows (sorted within a row), ``lens[j]``
+    the per-row counts, ``offsets[j]`` the slot's phrase offset.  An exact
+    phrase of >= 2 slots needs distinct positions within a row's slot.
+    Kernel choice: see the module docstring."""
+    k = len(flats)
+    if k == 1:
+        return np.asarray(lens[0], dtype=np.float64)
+    if slop == 0:
+        return exact_freqk_flat(flats, lens, offsets)
+    if repeats:
+        return _walk_freqs(flats, lens, offsets, slop)
+    if k == 2:
+        return sloppy_freq2_flat(
+            flats[0], lens[0], flats[1], lens[1], offsets[0], offsets[1], slop
+        )
+    return sloppy_freqk_flat(flats, lens, offsets, slop)
+
+
+def _walk_freqs(flats, lens, offsets, slop: int):
+    """Repeated-term sloppy phrases: the reference walk per row."""
+    from ferret_spark.oracle import sloppy_phrase_freq
+
+    k = len(flats)
+    n = len(lens[0])
+    out = np.zeros(n, dtype=np.float64)
+    bnds = [np.concatenate(([0], np.cumsum(l))) for l in lens]
+    for i in range(n):
+        runs = [
+            np.asarray(flats[j][bnds[j][i] : bnds[j][i + 1]]) for j in range(k)
+        ]
+        if all(len(r) for r in runs):
+            adjusted = [(runs[j] - offsets[j]).tolist() for j in range(k)]
+            out[i] = sloppy_phrase_freq(adjusted, offsets, slop, True)
+    return out
 
 
 def chunk_rows(lens_list, target: int | None = None):
@@ -134,24 +194,14 @@ def _flatten(arrs):
     return flat, lens
 
 
-def sloppy_freq2_batch(arrs_a, arrs_b, off_a: int, off_b: int, slop: int):
-    """Sloppy phrase freq for a batch of documents, 2 slots, no repeats.
-
-    ``arrs_a[i]`` / ``arrs_b[i]`` are the sorted position arrays of the
-    two phrase slots in document i (raw token positions; slot offsets are
-    applied here).  Returns float64 per-document freqs, bit-identical to
-    oracle.sloppy_phrase_freq run per document."""
-    fa, la = _flatten(arrs_a)
-    fb, lb = _flatten(arrs_b)
-    return sloppy_freq2_flat(fa, la, fb, lb, off_a, off_b, slop)
-
-
 def sloppy_freq2_flat(fa, la, fb, lb, off_a: int, off_b: int, slop: int):
-    """Flat-input form of sloppy_freq2_batch: ``fa``/``fb`` are the two
-    slots' position values concatenated across rows, ``la``/``lb`` the
-    per-row lengths (same number of rows).  Static event formulation —
-    see the module docstring.  Dispatches in cache-sized row blocks
-    (rows are independent; see CHUNK_TARGET)."""
+    """Sloppy phrase freq per row, 2 slots, no repeated terms: ``fa`` /
+    ``fb`` are the two slots' raw positions concatenated across rows,
+    ``la``/``lb`` the per-row lengths (same number of rows); slot offsets
+    are applied here.  Static event formulation — see the module
+    docstring; bit-identical to oracle.sloppy_phrase_freq run per row.
+    Dispatches in cache-sized row blocks (rows are independent; see
+    CHUNK_TARGET)."""
     fa, fb = np.asarray(fa, dtype=np.int64), np.asarray(fb, dtype=np.int64)
     la, lb = np.asarray(la, dtype=np.int64), np.asarray(lb, dtype=np.int64)
     return _chunked(
@@ -332,18 +382,6 @@ def _sloppy_freq2_core(fa, la, fb, lb, off_a: int, off_b: int, slop: int):
     return res
 
 
-def sloppy_freqk_batch(slot_arrs, offsets, slop: int):
-    """Sloppy phrase freq for a batch of documents, k slots, no repeated
-    terms: ``slot_arrs[j][i]`` is slot j's sorted raw position array for
-    document i.  Returns float64 per-document freqs, bit-identical to
-    oracle.sloppy_phrase_freq run per document."""
-    k = len(slot_arrs)
-    pairs = [_flatten(slot_arrs[j]) for j in range(k)]
-    return sloppy_freqk_flat(
-        [p[0] for p in pairs], [p[1] for p in pairs], offsets, slop
-    )
-
-
 def sloppy_freqk_flat(flats_in, lens_in, offsets, slop: int):
     """k-slot sloppy phrase frequencies, whole batch, no repeats: a
     LOCKSTEP vectorization of the reference heap walk (sphsc_phrase_freq,
@@ -468,29 +506,15 @@ def _sloppy_freqk_core(flats_in, lens_in, offsets, slop: int):
     return out
 
 
-def exact_freqk_batch(slot_arrs, offsets):
-    """Exact (slop=0) phrase freq for a batch: size of the k-way
-    intersection of offset-adjusted position sets per document.
-
-    ``slot_arrs[j][i]`` is slot j's position array for document i.
-    Positions are distinct within a slot, so an adjusted value present in
-    all k slots is a merged-order group of exactly k equal elements."""
-    k = len(slot_arrs)
-    n = len(slot_arrs[0]) if k else 0
-    if n == 0:
-        return np.zeros(0, dtype=np.float64)
-    pairs = [_flatten(slot_arrs[j]) for j in range(k)]
-    return exact_freqk_flat(
-        [p[0] for p in pairs], [p[1] for p in pairs], offsets
-    )
-
-
 def exact_freqk_flat(flats_in, lens_in, offsets):
-    """Flat-input form of exact_freqk_batch: per slot j, ``flats_in[j]``
-    holds the positions concatenated across rows and ``lens_in[j]`` the
-    per-row lengths.  Dispatches in cache-sized row blocks (rows are
-    independent; see CHUNK_TARGET) — also caps the lexsort at block
-    size."""
+    """Exact (slop=0) phrase freq per row: the size of the k-way
+    intersection of offset-adjusted position sets.  Per slot j,
+    ``flats_in[j]`` holds the positions concatenated across rows and
+    ``lens_in[j]`` the per-row lengths.  Positions are distinct within a
+    slot, so an adjusted value present in all k slots is a merged-order
+    group of exactly k equal elements.  Dispatches in cache-sized row
+    blocks (rows are independent; see CHUNK_TARGET) — also caps the
+    lexsort at block size."""
     k = len(flats_in)
     n = len(lens_in[0]) if k else 0
     if n == 0:

@@ -29,13 +29,13 @@ import logging
 import math
 from collections import Counter
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ferret_spark.oracle import K1, B, bm25_idf
+from ferret_spark.phrase_np import _flatten, has_repeats, phrase_freqs
 from ferret_spark.query import (
     MUST,
     MUST_NOT,
@@ -425,7 +425,7 @@ class _Planner:
 
         offsets = [off for off, _ in q.positions]
         slop = q.slop
-        repeats = _phrase_has_repeats(q)
+        repeats = has_repeats(q.positions)
 
         if len(q.positions) == 1:
             freq = F.size(F.col("p0")).cast("double")
@@ -445,70 +445,25 @@ class _Planner:
                 adj = _shift(F.col(f"p{i}"), offsets[i])
                 inter = adj if inter is None else F.array_intersect(inter, adj)
             freq = F.size(inter).cast("double")
-        elif len(q.positions) == 2 and not repeats:
-            # sloppy 2-term phrase (the dominant case): whole-batch numpy
-            # kernel — one alternating-chain walk over the Arrow batch's
-            # flattened position arrays, no per-row Python
-            # (phrase_np.sloppy_freq2_batch, bit-identical to the oracle
-            # walk by property test)
-            from ferret_spark.phrase_np import sloppy_freq2_batch
-
-            o0, o1 = offsets
-
+        else:
+            # sloppy phrase: one whole-batch pandas UDF over the Arrow
+            # batch's flattened position arrays, through the same kernel
+            # dispatcher as the segmented evaluator (phrase_np.phrase_freqs,
+            # bit-identical to the oracle walk by property test)
             @F.pandas_udf("double")
-            def phrase_freq2(pa: pd.Series, pb: pd.Series) -> pd.Series:
+            def phrase_freq(*cols: pd.Series) -> pd.Series:
+                flat = [_flatten(c.to_numpy()) for c in cols]
                 return pd.Series(
-                    sloppy_freq2_batch(pa.to_numpy(), pb.to_numpy(), o0, o1, slop)
+                    phrase_freqs(
+                        [f for f, _ in flat], [l for _, l in flat],
+                        offsets, slop, repeats,
+                    )
                 )
 
             # explode(array(udf)) puts a Generate barrier between the UDF
             # and the freq>0 filter: Catalyst cannot push the filter
             # through it, so the batch kernel runs ONCE per row instead of
             # once for the filter and again for the score projection
-            freq = F.explode(F.array(phrase_freq2(F.col("p0"), F.col("p1"))))
-        elif not repeats:
-            # >=3-slot sloppy phrase, no repeated terms: lockstep
-            # vectorization of the k-way heap walk — every doc in the
-            # Arrow batch advances one heap event per iteration
-            # (phrase_np.sloppy_freqk_batch, bit-identical to the oracle
-            # walk by property test); no per-row Python
-            from ferret_spark.phrase_np import sloppy_freqk_batch
-
-            @F.pandas_udf("double")
-            def phrase_freqk(*cols: pd.Series) -> pd.Series:
-                return pd.Series(
-                    sloppy_freqk_batch(
-                        [c.to_numpy() for c in cols], offsets, slop
-                    )
-                )
-
-            freq = F.explode(
-                F.array(
-                    phrase_freqk(*[F.col(f"p{i}") for i in range(len(q.positions))])
-                )
-            )
-        else:
-            # repeated-term sloppy phrases: the heap walk's repeat
-            # reconciliation (sphsc_check_repeats, c/src/q_phrase.c:427-452)
-            # mutates sibling iterators mid-pop and is genuinely
-            # sequential — Arrow-batched pandas UDF, per-doc oracle walk
-            from ferret_spark.oracle import sloppy_phrase_freq
-
-            @F.pandas_udf("double")
-            def phrase_freq(*cols: pd.Series) -> pd.Series:
-                m = len(cols[0])
-                arrs = [c.to_numpy() for c in cols]
-                out = np.zeros(m)
-                for r in range(m):
-                    adjusted = [
-                        np.asarray(arrs[i][r], dtype=np.int64) - offsets[i]
-                        for i in range(len(offsets))
-                    ]
-                    out[r] = sloppy_phrase_freq(
-                        [a.tolist() for a in adjusted], offsets, slop, repeats
-                    )
-                return pd.Series(out)
-
             freq = F.explode(
                 F.array(
                     phrase_freq(*[F.col(f"p{i}") for i in range(len(q.positions))])
@@ -635,16 +590,6 @@ class _Planner:
         return self.index.spark.createDataFrame(
             [], "doc_id long, score double"
         )
-
-
-def _phrase_has_repeats(q: PhraseQuery) -> bool:
-    seen: set[str] = set()
-    for _, alts in q.positions:
-        for t in alts:
-            if t in seen:
-                return True
-            seen.add(t)
-    return False
 
 
 def plan_scores(index, q: Query) -> DataFrame:

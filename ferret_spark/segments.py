@@ -19,7 +19,8 @@ Layout on disk (<path>/):
   docs/        parquet (doc_id, original cols, doc_len_*, sha256_*)
   segments/    parquet partitioned by seg_id bucket — the SCORING layout:
                a query ships its terms to every segment (doc-range shard),
-               scores locally with block-max pruning, then global top-k —
+               scores every hit locally, cuts a local top-k, then global
+               top-k —
                the MultiSearcher shape (c/src/search.c:1443-1840)
   merged/      parquet hash-partitioned by (field, term), sorted within
                partitions — the global index / term dictionary (term-dict
@@ -1037,7 +1038,6 @@ class SegmentIndex:
         q,
         k: int = 10,
         offset: int = 0,
-        prune: bool = True,
         similarity: str = "bm25",
         doc_boosts: dict[int, float] | None = None,
         post_filter=None,
@@ -1049,7 +1049,6 @@ class SegmentIndex:
             q,
             k=k,
             offset=offset,
-            prune=prune,
             similarity=similarity,
             doc_boosts=doc_boosts,
             post_filter=post_filter,

@@ -1,4 +1,4 @@
-"""Segment-parallel scoring with block-max pruning.
+"""Segment-parallel scoring: exact dense BM25 per segment, local top-k.
 
 Execution shape (the reference's own distributed blueprint — MultiSearcher
 with global df via CachedDFSearcher, c/src/search.c:1443-1840,1305-1441):
@@ -6,22 +6,22 @@ with global df via CachedDFSearcher, c/src/search.c:1443-1840,1305-1441):
 1. driver: rewrite query against term_stats (global df/N/avgdl constants)
 2. ship the query's terms to the segments table (parquet term pushdown)
 3. groupBy(seg_id).applyInPandas: each segment (a doc-range shard) decodes
-   its posting rows and computes EXACT BM25 scores for its doc range,
-   block-max pruning where the query shape allows (skip lists analog,
-   c/src/index.c:2999-3065, upgraded to block-max WAND), emits local top-k
+   its posting rows, scores every hit of its doc range into dense arrays
+   (the reference's searcher likewise scores every hit into a bounded
+   priority queue, isea_search_w c/src/search.c:1049-1127) and emits its
+   local top-k
 4. global top-k: orderBy(float32 score desc, doc_id asc).limit(k)
+
+The posting blocks keep their block-max bounds (``block_meta`` max_tf /
+min_dl); no scorer reads them today.
 
 Score parity: every float64 operation mirrors the oracle
 (term contributions added in sorted-term order, clause sums in clause
 order, boost applied at the same node), so float32 ranks are identical.
-Pruning uses a strict (1 - 1e-6) margin below the current kth f32 score,
-which exceeds float32 rounding error, so pruning can never drop a doc that
-could enter the top-k or change a tie.
 """
 
 from __future__ import annotations
 
-import heapq
 from dataclasses import dataclass
 
 import numpy as np
@@ -30,7 +30,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ferret_spark.codec import decode_posting_list
-from ferret_spark.oracle import K1, B, bm25_idf, sloppy_phrase_freq
+from ferret_spark.oracle import K1, B, bm25_idf
+from ferret_spark.phrase_np import has_repeats, phrase_freqs
 from ferret_spark.query import (
     MUST,
     MUST_NOT,
@@ -636,10 +637,7 @@ class _SegEval:
                 df = self.dfs.get((field, t), 0)
                 if df > 0:
                     idf_sum += bm25_idf(df, self.n_docs)
-        out = self._phrase_freqs_flat(q)
-        if out is None:
-            out = self._phrase_freqs_dict(q)
-        docs, freq_arr, dl = out
+        docs, freq_arr, dl = self._phrase_freqs_flat(q)
         if docs.size == 0:
             return mask, score
         avgdl = self.avgdl[field]
@@ -660,18 +658,21 @@ class _SegEval:
 
     def _phrase_freqs_flat(self, q: PhraseQuery):
         """Vectorized phrase frequencies over this segment:
-        (cand_local_ids, freqs, doc_lens) — or None when a slot has
-        multiple segment-live alternatives (the rare multi-term-position
-        case keeps the dict path).
+        (cand_local_ids, freqs, doc_lens).
 
         No per-posting Python anywhere: flat position decode (one cumsum
-        per posting list), candidate set via sorted np.intersect1d, the
-        candidates' position runs extracted with a ragged gather, then
-        the whole-segment batch kernels (phrase_np) score every doc at
-        once.  Only repeated-term phrases walk per doc (genuinely
+        per posting list), a slot's live alternatives merged into one
+        flat stream (_merge_alts), the candidate set via sorted
+        np.intersect1d, the candidates' position runs extracted with a
+        ragged gather, then phrase_np.phrase_freqs scores every doc at
+        once.  Only repeated-term sloppy phrases walk per doc (genuinely
         sequential semantics)."""
         field = q.field
         empty = (np.empty(0, dtype=np.int64), np.zeros(0), np.zeros(0))
+        # an exact multi-slot phrase intersects DISTINCT positions (the
+        # k-way kernel assumes them), so a repeated alternative collapses;
+        # one slot counts, and the sloppy walk sees, every occurrence
+        dedup = q.slop == 0 and len(q.positions) > 1
         decs = []
         for _, alts in q.positions:
             live = [
@@ -683,127 +684,44 @@ class _SegEval:
             ]
             if not live:
                 return empty
-            if len(live) > 1:
-                return None
-            decs.append(live[0])
+            decs.append(live[0] if len(live) == 1 else _merge_alts(live, dedup))
         return _phrase_freqs_from_decs(q, decs)
 
-    def _phrase_freqs_dict(self, q: PhraseQuery):
-        """Dict-built phrase frequencies — the multi-alternative-slot
-        path (per-doc position-list merge across a slot's terms)."""
-        field = q.field
-        empty = (np.empty(0, dtype=np.int64), np.zeros(0), np.zeros(0))
-        # an exact multi-slot phrase intersects DISTINCT positions (the
-        # k-way kernel assumes them), so a repeated alternative collapses;
-        # one slot counts, and the sloppy walk sees, every occurrence
-        merge = np.unique if q.slop == 0 and len(q.positions) > 1 else np.sort
-        slot_pos: list[dict[int, np.ndarray]] = []
-        slot_dls: dict[int, int] = {}
-        for _, alts in q.positions:
-            m: dict[int, list] = {}
-            for t in alts:
-                dec = self.decoded(field, t, with_positions=True)
-                if dec is None:
-                    continue
-                local, tfs, pos, dls = dec
-                for i, d in enumerate(local):
-                    plist = pos[i]
-                    if d in m:
-                        m[d].append(plist)
-                    else:
-                        m[d] = [plist]
-                    slot_dls[int(d)] = int(dls[i])
-            if not m:
-                return empty
-            slot_pos.append(
-                {
-                    d: (merge(np.concatenate(ls)) if len(ls) > 1 else ls[0])
-                    for d, ls in m.items()
-                }
-            )
-        cand = set(slot_pos[0].keys())
-        for m in slot_pos[1:]:
-            cand &= m.keys()
-        if not cand:
-            return empty
-        offsets = [off for off, _ in q.positions]
-        repeats = _phrase_repeats(q)
-        docs = np.fromiter(sorted(cand), dtype=np.int64, count=len(cand))
-        if len(q.positions) == 1:
-            freq_arr = np.fromiter(
-                (float(len(slot_pos[0][int(d)])) for d in docs),
-                dtype=np.float64, count=len(docs),
-            )
-        else:
-            freq_arr = _phrase_freq_vec(q, slot_pos, offsets, repeats, docs)
-        dl = np.fromiter(
-            (slot_dls[int(d)] for d in docs), dtype=np.float64, count=len(docs)
-        )
-        return docs, freq_arr, dl
 
-
-def _phrase_freq_vec(q, slot_pos, offsets, repeats, docs):
-    """Per-candidate-doc phrase freqs, vectorized where the shape allows:
-    exact phrases batch through the k-way group-count kernel, 2-term
-    sloppy phrases through the alternating-chain kernel (phrase_np) —
-    one numpy pass over the whole segment's candidates instead of a
-    Python walk per doc.  >=3-slot sloppy / repeated-term phrases keep
-    the per-doc oracle walk (heap + repeat reconciliation is genuinely
-    sequential)."""
-    from ferret_spark.phrase_np import exact_freqk_batch, sloppy_freq2_batch
-
-    k = len(q.positions)
-    if q.slop == 0:
-        return exact_freqk_batch(
-            [[slot_pos[i][int(d)] for d in docs] for i in range(k)], offsets
-        )
-    if k == 2 and not repeats:
-        return sloppy_freq2_batch(
-            [slot_pos[0][int(d)] for d in docs],
-            [slot_pos[1][int(d)] for d in docs],
-            offsets[0],
-            offsets[1],
-            q.slop,
-        )
-    out = np.zeros(len(docs), dtype=np.float64)
-    for j, d in enumerate(docs):
-        adjusted = [
-            [int(p) - offsets[i] for p in slot_pos[i][int(d)]]
-            for i in range(k)
-        ]
-        out[j] = sloppy_phrase_freq(adjusted, offsets, q.slop, repeats)
-    return out
-
-
-def _phrase_repeats(q: PhraseQuery) -> bool:
-    seen = set()
-    for _, alts in q.positions:
-        for t in alts:
-            if t in seen:
-                return True
-            seen.add(t)
-    return False
+def _merge_alts(decs, dedup: bool):
+    """One slot's live alternatives -> one flat decoded posting list
+    (ids, lens, (pos_flat, bounds), dls), the shape decoded(...,"flat")
+    returns. Each alternative adds its positions once per occurrence in
+    the slot (``("fox", "fox")`` counts twice, as the oracle's
+    per-alternative merge does); ``dedup`` keeps one of each equal
+    (doc, position) pair."""
+    ids = np.concatenate([np.repeat(d[0], d[1]) for d in decs])
+    pos = np.concatenate([d[2][0] for d in decs])
+    order = np.lexsort((pos, ids))
+    ids, pos = ids[order], pos[order]
+    if dedup and len(ids) > 1:
+        keep = np.ones(len(ids), dtype=bool)
+        keep[1:] = (ids[1:] != ids[:-1]) | (pos[1:] != pos[:-1])
+        ids, pos = ids[keep], pos[keep]
+    docs, lens = np.unique(ids, return_counts=True)
+    bounds = np.concatenate(([0], np.cumsum(lens)))
+    all_ids = np.concatenate([d[0] for d in decs])
+    _, first = np.unique(all_ids, return_index=True)
+    dls = np.concatenate([d[3] for d in decs])[first]
+    return docs, lens.astype(np.int64), (pos, bounds), dls
 
 
 def _phrase_freqs_from_decs(q: PhraseQuery, decs):
-    """Kernel dispatch over per-slot decoded postings: ``decs[j]`` is
-    (ids sorted, tfs, (pos_flat, bounds), dls) in segment-local ids
+    """Candidate gather over per-slot decoded postings, then the
+    phrase_np dispatcher: ``decs[j]`` is (ids sorted, tfs,
+    (pos_flat, bounds), dls) in segment-local ids
     -> (cand_ids, freqs, dls)."""
-    from ferret_spark.phrase_np import (
-        exact_freqk_flat,
-        sloppy_freq2_flat,
-        sloppy_freqk_flat,
-    )
-
     empty = (np.empty(0, dtype=np.int64), np.zeros(0), np.zeros(0))
     cand = decs[0][0]
     for d in decs[1:]:
         cand = np.intersect1d(cand, d[0], assume_unique=True)
     if cand.size == 0:
         return empty
-    offsets = [off for off, _ in q.positions]
-    repeats = _phrase_repeats(q)
-    k = len(decs)
     flats, lens = [], []
     dl = None
     for j, (local, tfs, (pflat, bounds), dls) in enumerate(decs):
@@ -827,32 +745,8 @@ def _phrase_freqs_from_decs(q: PhraseQuery, decs):
         lens.append(ln)
         if j == 0:
             dl = dls[idx].astype(np.float64)
-    if k == 1:
-        freq = lens[0].astype(np.float64)
-    elif q.slop == 0:
-        freq = exact_freqk_flat(flats, lens, offsets)
-    elif k == 2 and not repeats:
-        freq = sloppy_freq2_flat(
-            flats[0], lens[0], flats[1], lens[1],
-            offsets[0], offsets[1], q.slop,
-        )
-    elif not repeats:
-        # k>=3 sloppy, no repeated terms: lockstep vectorization of
-        # the heap walk — all candidate docs advance one event per
-        # iteration, no per-doc Python
-        freq = sloppy_freqk_flat(flats, lens, offsets, q.slop)
-    else:
-        # repeated-term slots keep the per-doc walk: the repeat
-        # reconciliation (sphsc_check_repeats) mutates sibling
-        # iterators mid-pop and is genuinely sequential
-        freq = np.zeros(len(cand), dtype=np.float64)
-        bnds = [np.concatenate(([0], np.cumsum(l))) for l in lens]
-        for i in range(len(cand)):
-            adjusted = [
-                (flats[j][bnds[j][i] : bnds[j][i + 1]] - offsets[j]).tolist()
-                for j in range(k)
-            ]
-            freq[i] = sloppy_phrase_freq(adjusted, offsets, q.slop, repeats)
+    offsets = [off for off, _ in q.positions]
+    freq = phrase_freqs(flats, lens, offsets, q.slop, has_repeats(q.positions))
     return cand, freq, dl
 
 
@@ -990,10 +884,7 @@ class _SegEvalTFIDF(_SegEval):
 
     def _phrase_freqs_local(self, q: PhraseQuery):
         """doc(local) -> phrase_freq, plus dl map (mirrors oracle)."""
-        out = self._phrase_freqs_flat(q)
-        if out is None:
-            out = self._phrase_freqs_dict(q)
-        docs, freq_arr, dl = out
+        docs, freq_arr, dl = self._phrase_freqs_flat(q)
         freqs = {
             int(d): float(f)
             for d, f in zip(docs.tolist(), freq_arr.tolist())
@@ -1003,334 +894,6 @@ class _SegEvalTFIDF(_SegEval):
             int(d): int(x) for d, x in zip(docs.tolist(), dl.tolist())
         }
         return freqs, dls_map
-
-
-# ---------------------------------------------------------------------------
-# block-max WAND for top-level disjunctions
-
-
-def _wand_multiterm_topk(
-    ev: _SegEval, q: MultiTermQuery, k: int, del_local=None
-):
-    """Interval block-max WAND: build the piecewise upper-bound function
-    from block metadata, visit intervals in decreasing ub order, stop when
-    the bound can no longer beat the kth score."""
-    terms = []
-    for term, tboost in sorted(q.terms):
-        df = ev.dfs.get((q.field, term), 0)
-        row = ev.rows.get((q.field, term))
-        if df == 0 or row is None:
-            continue
-        idf = bm25_idf(df, ev.n_docs)
-        terms.append((term, tboost, idf, row))
-    if not terms:
-        return [], []
-    avgdl = ev.avgdl[q.field]
-    events: dict[int, float] = {}
-    for term, tboost, idf, row in terms:
-        for bm in row["block_meta"]:
-            mtf = float(bm["max_tf"])
-            mdl = float(max(bm.get("min_dl", 0), 0))
-            ub = (
-                tboost
-                * idf
-                * (mtf * (K1 + 1.0))
-                / (mtf + K1 * (1.0 - B + B * mdl / avgdl))
-            )
-            lo = int(bm["first"]) - ev.base
-            hi = int(bm["last"]) - ev.base + 1
-            events[lo] = events.get(lo, 0.0) + ub
-            events[hi] = events.get(hi, 0.0) - ub
-    bounds = sorted(events.keys())
-    intervals = []  # (ub_sum, lo, hi)
-    acc = 0.0
-    for i, b in enumerate(bounds):
-        acc += events[b]
-        if i + 1 < len(bounds) and acc > 0:
-            intervals.append((acc, b, bounds[i + 1]))
-    intervals.sort(key=lambda t: -t[0])
-
-    heap: list[tuple[np.float32, int]] = []  # (score_f32, -doc_id) min-heap
-    exact: dict[int, float] = {}  # doc -> exact float64 score
-    decoded = {}
-    for term, tboost, idf, row in terms:
-        local, tfs, _, dls = ev.decoded(q.field, term)
-        decoded[term] = (local, tboost * idf * _bm25_tf_np(tfs, dls, avgdl))
-
-    for ub_sum, lo, hi in intervals:
-        if len(heap) >= k:
-            theta = float(heap[0][0])
-            if q.boost * ub_sum < theta * (1.0 - 1e-6):
-                break
-        width = hi - lo
-        acc_s = np.zeros(width, dtype=np.float64)
-        seen = np.zeros(width, dtype=bool)
-        for term, _, _, _ in terms:
-            local, contrib = decoded[term]
-            sel = (local >= lo) & (local < hi)
-            if sel.any():
-                idxs = local[sel] - lo
-                acc_s[idxs] += contrib[sel]
-                seen[idxs] = True
-        docs_here = np.flatnonzero(seen)
-        if del_local is not None and len(del_local):
-            dl_in = del_local[(del_local >= lo) & (del_local < hi)] - lo
-            if len(dl_in):
-                keep = ~np.isin(docs_here, dl_in)
-                docs_here = docs_here[keep]
-        if len(docs_here) == 0:
-            continue
-        # identical adds as _eval_multi (sorted-term order), so these ARE
-        # the exact unpruned float64 scores
-        scores_here = q.boost * acc_s[docs_here]
-        f32 = scores_here.astype(np.float32)
-        for i in range(len(docs_here)):
-            d = int(docs_here[i]) + lo
-            item = (f32[i], -d)
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-                exact[d] = float(scores_here[i])
-            elif item > heap[0]:
-                _, nd_old = heapq.heapreplace(heap, item)
-                exact.pop(-nd_old, None)
-                exact[d] = float(scores_here[i])
-    out = sorted(((-nd, float(s)) for s, nd in heap), key=lambda t: (-t[1], t[0]))
-    docs = [d for d, _ in out]
-    return docs, [exact[d] for d in docs]
-
-
-# ---------------------------------------------------------------------------
-# block-max WAND for boolean trees of term-like clauses
-
-
-def _bool_wandable(q: Query) -> bool:
-    """Boolean trees whose clauses are all term-like (Term / MultiTerm /
-    ConstantScoreTerms) take the interval block-max path: MUST clauses
-    prune intervals they don't cover (leapfrog analog, skip_to
-    c/src/index.c:2999-3065), SHOULD clauses contribute upper bounds."""
-    if not isinstance(q, BooleanQuery) or not q.clauses:
-        return False
-    if q.boost <= 0.0:
-        # WAND's theta comparison assumes positive scores; zero/negative
-        # boosts take the dense exact path (which returns such hits)
-        return False
-    n_terms = 0
-    has_scoring = False
-    for c in q.clauses:
-        cq = c.query
-        if cq.boost <= 0.0:
-            return False
-        if isinstance(cq, TermQuery):
-            n_terms += 1
-        elif isinstance(cq, MultiTermQuery):
-            if any(tb <= 0.0 for _, tb in cq.terms):
-                return False
-            n_terms += len(cq.terms)
-        elif isinstance(cq, ConstantScoreTerms):
-            n_terms += len(cq.terms)
-        else:
-            return False
-        if c.occur != MUST_NOT:
-            has_scoring = True
-    return has_scoring and 0 < n_terms <= 32
-
-
-def _clause_terms(cq) -> list[tuple[str, float]]:
-    if isinstance(cq, TermQuery):
-        return [(cq.term, 1.0)]
-    if isinstance(cq, MultiTermQuery):
-        return sorted(cq.terms)
-    return [(t, 1.0) for t in cq.terms]  # ConstantScoreTerms
-
-
-def _win_eval_clause(ev: _SegEval, cq, lo: int, hi: int):
-    """(mask, score) for one term-like clause restricted to local doc-id
-    window [lo, hi). Per-doc float64 ops are IDENTICAL to the full-segment
-    _eval_term/_eval_multi/_eval_const (windowing only subsets docs), so
-    scores stay bit-equal to the unpruned path."""
-    width = hi - lo
-    mask = np.zeros(width, dtype=bool)
-    score = np.zeros(width, dtype=np.float64)
-    avgdl = ev.avgdl[cq.field]
-    if isinstance(cq, TermQuery):
-        dec = ev.decoded(cq.field, cq.term)
-        df = ev.dfs.get((cq.field, cq.term), 0)
-        if dec is None or df == 0:
-            return mask, score
-        local, tfs, _, dls = dec
-        a, b = np.searchsorted(local, (lo, hi))
-        idx = local[a:b] - lo
-        idf = bm25_idf(df, ev.n_docs)
-        score[idx] = cq.boost * idf * _bm25_tf_np(tfs[a:b], dls[a:b], avgdl)
-        mask[idx] = True
-        return mask, score
-    if isinstance(cq, MultiTermQuery):
-        for term, tboost in sorted(cq.terms):
-            df = ev.dfs.get((cq.field, term), 0)
-            dec = ev.decoded(cq.field, term)
-            if df == 0 or dec is None:
-                continue
-            local, tfs, _, dls = dec
-            a, b = np.searchsorted(local, (lo, hi))
-            idx = local[a:b] - lo
-            idf = bm25_idf(df, ev.n_docs)
-            score[idx] += tboost * idf * _bm25_tf_np(
-                tfs[a:b], dls[a:b], avgdl
-            )
-            mask[idx] = True
-        score[mask] *= cq.boost
-        score[~mask] = 0.0
-        return mask, score
-    # ConstantScoreTerms
-    for term in cq.terms:
-        dec = ev.decoded(cq.field, term)
-        if dec is None:
-            continue
-        local = dec[0]
-        a, b = np.searchsorted(local, (lo, hi))
-        mask[local[a:b] - lo] = True
-    score[mask] = cq.boost * 1.0
-    return mask, score
-
-
-def _clause_block_events(ev: _SegEval, cq):
-    """(ub_events, cov_events) piecewise maps over local doc ids: ub_events
-    accumulates the clause's block-max BM25 upper bound; cov_events counts
-    covering blocks (feasibility for MUST pruning). ConstantScoreTerms has
-    a flat bound = boost wherever covered."""
-    ub_events: dict[int, float] = {}
-    cov_events: dict[int, int] = {}
-    const = isinstance(cq, ConstantScoreTerms)
-    avgdl = ev.avgdl[cq.field]
-    for term, tboost in _clause_terms(cq):
-        row = ev.rows.get((cq.field, term))
-        df = ev.dfs.get((cq.field, term), 0)
-        if row is None or (df == 0 and not const):
-            continue
-        idf = 0.0 if const else bm25_idf(df, ev.n_docs)
-        for bm in row["block_meta"]:
-            lo = int(bm["first"]) - ev.base
-            hi = int(bm["last"]) - ev.base + 1
-            cov_events[lo] = cov_events.get(lo, 0) + 1
-            cov_events[hi] = cov_events.get(hi, 0) - 1
-            if not const:
-                mtf = float(bm["max_tf"])
-                mdl = float(max(bm.get("min_dl", 0), 0))
-                ub = (
-                    tboost
-                    * idf
-                    * (mtf * (K1 + 1.0))
-                    / (mtf + K1 * (1.0 - B + B * mdl / avgdl))
-                )
-                ub_events[lo] = ub_events.get(lo, 0.0) + ub
-                ub_events[hi] = ub_events.get(hi, 0.0) - ub
-    return ub_events, cov_events, cq.boost
-
-
-def _wand_bool_topk(ev: _SegEval, q: BooleanQuery, k: int, del_local=None):
-    """Interval block-max WAND over a boolean tree of term-like clauses.
-    Intervals where any MUST clause has no block coverage are infeasible
-    and skipped outright; remaining intervals are visited in decreasing
-    upper-bound order until the bound can't beat the kth score. Exact
-    per-interval evaluation mirrors _eval_bool's clause order float64
-    arithmetic. Returns (docs, scores, intervals_skipped)."""
-    musts = [c.query for c in q.clauses if c.occur == MUST]
-    shoulds = [c.query for c in q.clauses if c.occur == SHOULD]
-    nots = [c.query for c in q.clauses if c.occur == MUST_NOT]
-    scoring = [(cq, True) for cq in musts] + [(cq, False) for cq in shoulds]
-
-    per_clause = []
-    for cq, is_must in scoring:
-        ub_ev, cov_ev, boost = _clause_block_events(ev, cq)
-        if is_must and not cov_ev:
-            return [], [], 0  # a MUST clause matches nothing here
-        per_clause.append((cq, is_must, ub_ev, cov_ev, boost))
-
-    bounds = sorted(
-        {b for _, _, u, c, _ in per_clause for b in (*u, *c)}
-    )
-    if not bounds:
-        return [], [], 0
-    # walk elementary intervals accumulating each clause's ub + coverage
-    accs = [0.0] * len(per_clause)
-    covs = [0] * len(per_clause)
-    intervals = []  # (ub_sum, lo, hi)
-    for i, pt in enumerate(bounds[:-1]):
-        for j, (cq, is_must, ub_ev, cov_ev, boost) in enumerate(per_clause):
-            accs[j] += ub_ev.get(pt, 0.0)
-            covs[j] += cov_ev.get(pt, 0)
-        feasible = all(
-            covs[j] > 0
-            for j, (_, is_must, _, _, _) in enumerate(per_clause)
-            if is_must
-        )
-        if not feasible:
-            continue
-        ub = 0.0
-        for j, (cq, is_must, ub_ev, cov_ev, boost) in enumerate(per_clause):
-            if covs[j] <= 0:
-                continue
-            if isinstance(cq, ConstantScoreTerms):
-                ub += cq.boost
-            else:
-                # clause bound = (sum of per-term block bounds) * clause
-                # boost (Term and MultiTerm both scale by cq.boost)
-                ub += accs[j] * cq.boost
-        if ub > 0.0:
-            intervals.append((ub, pt, bounds[i + 1]))
-    intervals.sort(key=lambda t: -t[0])
-
-    heap: list[tuple[np.float32, int]] = []
-    exact: dict[int, float] = {}
-    skipped = 0
-    for n_i, (ub_sum, lo, hi) in enumerate(intervals):
-        if len(heap) >= k:
-            theta = float(heap[0][0])
-            if q.boost * ub_sum < theta * (1.0 - 1e-6):
-                skipped += len(intervals) - n_i
-                break
-        width = hi - lo
-        total = np.zeros(width, dtype=np.float64)
-        if musts:
-            mask = np.ones(width, dtype=bool)
-            for m in musts:
-                mm, ms = _win_eval_clause(ev, m, lo, hi)
-                mask &= mm
-                total += ms
-            for s in shoulds:
-                _sm, ss = _win_eval_clause(ev, s, lo, hi)
-                total += ss
-        else:
-            mask = np.zeros(width, dtype=bool)
-            for s in shoulds:
-                sm, ss = _win_eval_clause(ev, s, lo, hi)
-                mask |= sm
-                total += ss
-        for n_ in nots:
-            nm, _ns = _win_eval_clause(ev, n_, lo, hi)
-            mask &= ~nm
-        if del_local is not None and len(del_local):
-            d_in = del_local[(del_local >= lo) & (del_local < hi)] - lo
-            if len(d_in):
-                mask[d_in] = False
-        docs_here = np.flatnonzero(mask)
-        if len(docs_here) == 0:
-            continue
-        scores_here = q.boost * total[docs_here]
-        f32 = scores_here.astype(np.float32)
-        for i in range(len(docs_here)):
-            d = int(docs_here[i]) + lo
-            item = (f32[i], -d)
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-                exact[d] = float(scores_here[i])
-            elif item > heap[0]:
-                _, nd_old = heapq.heapreplace(heap, item)
-                exact.pop(-nd_old, None)
-                exact[d] = float(scores_here[i])
-    out = sorted(((-nd, float(s)) for s, nd in heap), key=lambda t: (-t[1], t[0]))
-    docs = [d for d, _ in out]
-    return docs, [exact[d] for d in docs], skipped
 
 
 # ---------------------------------------------------------------------------
@@ -1409,7 +972,6 @@ def _plan_segments(
     index,
     queries: list,
     local_k: int | None,
-    prune: bool = True,
     deleted=None,
     deleted_cache_key=None,
     similarity: str = "bm25",
@@ -1437,9 +999,8 @@ def _plan_segments(
 
     ONE groupBy(seg_id).applyInPandas closure parses a segment's rows
     once and builds one evaluator, so each posting list decodes once no
-    matter how many queries read it. Each query then takes block-max
-    WAND (flat disjunctions), boolean WAND (term-like boolean trees) or
-    the exact ev.eval, followed by deletes, ``post_filter`` and the local
+    matter how many queries read it. Each query then runs the exact
+    dense ``ev.eval``, followed by deletes, ``post_filter`` and the local
     top-k cut.
     """
     attached, cached_filters = [], {}
@@ -1509,35 +1070,14 @@ def _plan_segments(
     for rows in extra:
         seg_rows = seg_rows.unionByName(rows)
 
-    # interval block-max WAND pays off for small disjunctions; past ~32
-    # terms the vectorized dense-accumulator exact path is faster (one
-    # np.add.at per term vs per-interval × per-term slicing). It needs
-    # positive BM25 scores and a top-k, and a post_filter must see every
-    # hit (the reference's scorer loop likewise visits every hit).
-    may_prune = (
-        prune
-        and similarity == "bm25"
-        and post_filter is None
-        and local_k is not None
-    )
-    plans = []  # (qid, query, pruner or None, tfidf qnorm or None)
+    plans = []  # (qid, query, tfidf qnorm or None)
     for qid, rq in attached:
-        pruner = qnorm = None
+        qnorm = None
         if similarity == "tfidf":
             from ferret_spark import similarity as S
 
             qnorm = S.query_norm(S.sum_sq_weights(rq, dfs, n_docs, None))
-        elif (
-            may_prune
-            and isinstance(rq, MultiTermQuery)
-            and len(rq.terms) <= 32
-            and rq.boost > 0.0
-            and all(tb > 0.0 for _, tb in rq.terms)
-        ):
-            pruner = _wand_multiterm_topk
-        elif may_prune and _bool_wandable(rq):
-            pruner = _wand_bool_topk
-        plans.append((qid, rq, pruner, qnorm))
+        plans.append((qid, rq, qnorm))
 
     def score_segment(key, pdf):  # no hints: pyspark warns on partial grouped-map hints
         from ferret_spark.segments import _row_to_codec
@@ -1574,32 +1114,26 @@ def _plan_segments(
             ev = _SegEval(*args)
         ev.cached_filters = filt_local
         out_q, out_d, out_s = [], [], []
-        for qid, rq, pruner, qnorm in plans:
-            if pruner is not None:
-                docs, scores = pruner(ev, rq, local_k, del_local)[:2]
-                locs = np.asarray(docs, dtype=np.int64)
-                s = np.asarray(scores, dtype=np.float64)
-            else:
-                if qnorm is not None:
-                    ev.qnorm = qnorm
-                mask, score = ev.eval(rq)
-                if del_local is not None and len(del_local):
-                    mask[del_local] = False
-                if post_filter is not None:
-                    for d in np.flatnonzero(mask):
-                        f = post_filter(int(d) + base, float(score[d]))
-                        if not f:
-                            mask[d] = False
-                        elif f < 1.0:
-                            score[d] = score[d] * f
-                locs = np.flatnonzero(mask)
-                if local_k is not None and len(locs) > local_k:
-                    f32 = score[locs].astype(np.float32)
-                    locs = locs[np.lexsort((locs, -f32))[:local_k]]
-                s = score[locs]
+        for qid, rq, qnorm in plans:
+            if qnorm is not None:
+                ev.qnorm = qnorm
+            mask, score = ev.eval(rq)
+            if del_local is not None and len(del_local):
+                mask[del_local] = False
+            if post_filter is not None:
+                for d in np.flatnonzero(mask):
+                    f = post_filter(int(d) + base, float(score[d]))
+                    if not f:
+                        mask[d] = False
+                    elif f < 1.0:
+                        score[d] = score[d] * f
+            locs = np.flatnonzero(mask)
+            if local_k is not None and len(locs) > local_k:
+                f32 = score[locs].astype(np.float32)
+                locs = locs[np.lexsort((locs, -f32))[:local_k]]
             out_q.append(np.full(len(locs), qid, dtype=np.int32))
             out_d.append(locs + base)
-            out_s.append(s)
+            out_s.append(score[locs])
         return pd.DataFrame(
             {
                 "qid": np.concatenate(out_q),
@@ -1618,7 +1152,6 @@ def segment_search(
     q: Query,
     k: int | None = 10,
     offset: int = 0,
-    prune: bool = True,
     deleted=None,
     similarity: str = "bm25",
     doc_boosts: dict[int, float] | None = None,
@@ -1637,15 +1170,14 @@ def segment_search(
     (FrtPostFilter, c/include/search.h:763-769 applied in isea_search_w
     c/src/search.c:1078-1092): callable(doc_id, score) -> factor; falsy
     drops the hit, factor < 1.0 scales the score. It is pickled into the
-    scoring closure and runs executor-side BEFORE per-segment top-k, so
-    pruned results stay correct. Block-max pruning is disabled under a
-    post_filter (the reference's scorer loop likewise visits every hit).
+    scoring closure and runs executor-side on every hit BEFORE the
+    per-segment top-k cut (the reference's scorer loop likewise visits
+    every hit).
     """
     scored = _plan_segments(
         index,
         [(0, wand_rewrite(index, q))],
         None if k is None else offset + k,
-        prune=prune,
         deleted=deleted,
         deleted_cache_key=deleted_cache_key,
         similarity=similarity,

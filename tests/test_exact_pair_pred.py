@@ -134,3 +134,34 @@ def test_term_dict_filter_prunes_row_groups(tmp_path):
         filter=_term_dict_filter(pairs)
     )
     assert sorted(got["term"].to_pylist()) == ["t00005", "t01505"]
+
+
+def test_explain_pushes_exact_pairs_in_both_engines(spark):  # noqa: F811
+    """explain's postings fetch pushes the exact (field, term) pairs on
+    both engines, like doc_freqs: the cross-field trap rows must not
+    pass its scan condition."""
+    from types import SimpleNamespace
+
+    from ferret_spark.highlight import _doc_postings_many
+
+    trap = spark.createDataFrame(
+        [
+            (0, 0, "text", "a"), (0, 0, "lang", "en"),
+            (0, 0, "lang", "a"), (0, 0, "text", "en"),  # cross-product traps
+        ],
+        "seg_id long, doc_id long, field string, term string",
+    )
+    pairs = [("text", "a"), ("lang", "en")]
+    conds = []
+
+    class Spy:
+        def where(self, cond):
+            conds.append(cond)
+            return SimpleNamespace(collect=lambda: [])
+
+    _doc_postings_many(SimpleNamespace(segments=Spy(), seg_size=4), pairs, [0])
+    _doc_postings_many(SimpleNamespace(postings=Spy()), pairs, [0])
+    assert len(conds) == 2
+    for cond in conds:
+        got = sorted((r["field"], r["term"]) for r in trap.where(cond).collect())
+        assert got == sorted(pairs)

@@ -147,3 +147,47 @@ def test_mapped_analyzer_highlights():
     q = TermQuery(field="field", term="aha")
     ex = highlight(a, q, "big åhå moment", field="field", excerpt_length=40)
     assert ex and "<b>åhå</b>" in ex[0]
+
+
+REPEAT_DOCS = [
+    "a b a x a b a", "a b x a", "b a b a", "a x b x a", "x y z", "a b a",
+    "fox fox fox", "fox",
+]
+REPEAT_PHRASES = [
+    PhraseQuery.of("content", ["a", "b", "a"], slop=2),
+    PhraseQuery.of("content", [("fox", "fox")]),
+    PhraseQuery.of("content", [("fox", "fox")], slop=1),
+    PhraseQuery.of("content", ["fox"], slop=1),
+]
+
+
+@pytest.mark.parametrize("engine", ["segments", "declarative"])
+def test_explain_phrase_matches_search_repeated_terms(
+    spark, tmp_path, engine
+):
+    """explain recomputes a phrase freq with the search kernels'
+    dispatcher: repeated terms walk with repeat reconciliation, a single
+    slot counts every occurrence of every alternative, and a one-slot
+    sloppy phrase is a count (not a walk), on both engines."""
+    from ferret_spark.highlight import explain_many
+    from ferret_spark.index import SparkIndex
+    from ferret_spark.segments import SegmentIndexBuilder
+
+    fc = {"content": "whitespace"}
+    df = spark.createDataFrame(
+        [{"doc_id": i, "content": t} for i, t in enumerate(REPEAT_DOCS)]
+    )
+    if engine == "segments":
+        idx = SegmentIndexBuilder(spark, str(tmp_path), fc, seg_size=4).build(
+            df, doc_id_col="doc_id"
+        )
+    else:
+        idx = SparkIndex.build(spark, df, fc, doc_id_col="doc_id")
+    for q in REPEAT_PHRASES:
+        hits = idx.search(q, k=10).collect()
+        assert hits, q
+        ex = explain_many(idx, q, [r["doc_id"] for r in hits])
+        for r in hits:
+            assert np.float32(ex[r["doc_id"]].value) == np.float32(
+                r["score"]
+            ), (q, r["doc_id"], ex[r["doc_id"]].to_s())

@@ -95,48 +95,43 @@ def test_exact_phrase_plan_has_no_python_udf(saved_idx):
     assert len(df.collect()) > 0
 
 
+def _assert_one_sloppy_udf(plan: str):
+    """The one sloppy-phrase pandas UDF (phrase_freq, whose kernel choice
+    is phrase_np.phrase_freqs — pinned in tests/test_phrase_np.py): one
+    Arrow-batched UDF over the whole batch, no row-at-a-time Python."""
+    assert "phrase_freq" in plan, plan
+    assert "BatchEvalPython" not in plan
+    assert plan.count("ArrowEvalPython") == 1
+
+
 def test_sloppy2_phrase_routes_to_batch_kernel(saved_idx):
-    """Declarative slop>0 two-term phrases must score through the
-    whole-batch numpy kernel (phrase_freq2 / phrase_np.sloppy_freq2_batch),
-    never the per-row oracle-walk fallback (phrase_freq): one Arrow-batched
-    UDF evaluating the whole batch at once, no row-at-a-time Python."""
+    """Declarative slop>0 two-term phrases score through the sloppy
+    pandas UDF, never a row-at-a-time Python UDF."""
     from ferret_spark.query import PhraseQuery
 
     q = PhraseQuery.of("content", ["word1", "word2"], slop=2)
     df = saved_idx.search(q, k=10)
-    plan = _executed_plan(df)
-    assert "phrase_freq2" in plan, plan
-    assert "BatchEvalPython" not in plan
-    assert plan.count("ArrowEvalPython") == 1
+    _assert_one_sloppy_udf(_executed_plan(df))
     assert len(df.collect()) > 0
 
 
 def test_sloppy3_phrase_routes_to_lockstep_kernel(saved_idx):
-    """>=3-slot sloppy phrases (no repeats) score through the lockstep
-    batch kernel (phrase_freqk / phrase_np.sloppy_freqk_batch), not the
-    per-row oracle-walk fallback — one Arrow-batched UDF for the whole
-    batch."""
+    """>=3-slot sloppy phrases (no repeats) take the same one UDF."""
     from ferret_spark.query import PhraseQuery
 
     q = PhraseQuery.of("content", ["word1", "word2", "word3"], slop=3)
     df = saved_idx.search(q, k=10)
-    plan = _executed_plan(df)
-    assert "phrase_freqk" in plan, plan
-    assert "BatchEvalPython" not in plan
-    assert plan.count("ArrowEvalPython") == 1
+    _assert_one_sloppy_udf(_executed_plan(df))
 
 
 def test_repeated_term_sloppy_phrase_keeps_per_doc_walk(saved_idx):
-    """Repeated-term slots keep the per-doc walk (sphsc_check_repeats is
-    genuinely sequential)."""
+    """Repeated-term slots take the same one UDF too (its dispatcher
+    walks them per doc: sphsc_check_repeats is genuinely sequential)."""
     from ferret_spark.query import PhraseQuery
 
     q = PhraseQuery.of("content", ["word1", "word2", "word1"], slop=3)
     df = saved_idx.search(q, k=10)
-    plan = _executed_plan(df)
-    assert "phrase_freq(" in plan or (
-        "phrase_freq" in plan and "phrase_freqk" not in plan
-    ), plan
+    _assert_one_sloppy_udf(_executed_plan(df))
 
 
 def test_phrase_join_broadcasts_rare_side(saved_idx):

@@ -58,12 +58,12 @@ def test_prefix_fallback_results_match_expanded(pre_idx, monkeypatch):
 
     q = PrefixQuery(field="content", prefix="tag00")
     expanded = {
-        r["doc_id"] for r in pre_idx.search(q, k=None, prune=False).collect()
+        r["doc_id"] for r in pre_idx.search(q, k=None).collect()
     }
     monkeypatch.setattr(S, "MAX_EXPANDED_TERMS", 4)
     pre_idx.filter_cache.clear()
     fallback = {
-        r["doc_id"] for r in pre_idx.search(q, k=None, prune=False).collect()
+        r["doc_id"] for r in pre_idx.search(q, k=None).collect()
     }
     assert fallback == expanded == set(range(10))
 
@@ -73,7 +73,7 @@ def test_wildcard_fallback_results_match_expanded(pre_idx, monkeypatch):
 
     q = WildcardQuery(field="content", pattern="tag*5")
     expanded = {
-        r["doc_id"] for r in pre_idx.search(q, k=None, prune=False).collect()
+        r["doc_id"] for r in pre_idx.search(q, k=None).collect()
     }
     monkeypatch.setattr(S, "MAX_EXPANDED_TERMS", 2)
     pre_idx.filter_cache.clear()
@@ -81,7 +81,7 @@ def test_wildcard_fallback_results_match_expanded(pre_idx, monkeypatch):
     assert isinstance(rq, ConstantScoreMatch)
     assert rq.prefix == "tag"  # literal prefix pruned into the scan
     fallback = {
-        r["doc_id"] for r in pre_idx.search(q, k=None, prune=False).collect()
+        r["doc_id"] for r in pre_idx.search(q, k=None).collect()
     }
     assert fallback == expanded == {5, 15, 25, 35, 45, 55}
 

@@ -139,7 +139,7 @@ def test_random_fallback_docset_identity(pair, seed, monkeypatch):
     monkeypatch.setattr(S, "MAX_EXPANDED_TERMS", 1)
     sidx.filter_cache.clear()
     got = {
-        r["doc_id"] for r in sidx.search(q, k=None, prune=False).collect()
+        r["doc_id"] for r in sidx.search(q, k=None).collect()
     }
     assert got == exp, f"seed={seed} query={q}"
 

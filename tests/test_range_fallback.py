@@ -56,13 +56,13 @@ def test_fallback_results_match_expanded(num_idx, monkeypatch):
     q = RangeQuery(field="num", lower=110, upper=130, typed=True)
     expanded = {
         r["doc_id"]
-        for r in num_idx.search(q, k=None, prune=False).collect()
+        for r in num_idx.search(q, k=None).collect()
     }
     monkeypatch.setattr(W, "RANGE_EXPAND_CAP", 4)
     num_idx.filter_cache.clear()
     fallback = {
         r["doc_id"]
-        for r in num_idx.search(q, k=None, prune=False).collect()
+        for r in num_idx.search(q, k=None).collect()
     }
     assert fallback == expanded == set(range(10, 31))
 

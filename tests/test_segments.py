@@ -1,6 +1,6 @@
 """Segmented compressed index: rank-identity vs oracle, merge correctness,
-manifest/resume, WAND-prune parity (north_rule: segments + compression +
-hierarchical salted merge + resume + block-max pruning)."""
+manifest/resume (north_rule: segments + compression + hierarchical salted
+merge + resume)."""
 
 import numpy as np
 import pytest
@@ -39,12 +39,9 @@ def golden_seg(spark, tmp_path_factory):
     return oracle, sidx
 
 
-def assert_seg_rank_identical(oracle, sidx, q, k=25, prune=True):
+def assert_seg_rank_identical(oracle, sidx, q, k=25):
     expected = oracle.search(q, k=k)
-    got = [
-        (r["doc_id"], r["score"])
-        for r in sidx.search(q, k=k, prune=prune).collect()
-    ]
+    got = [(r["doc_id"], r["score"]) for r in sidx.search(q, k=k).collect()]
     assert [d for d, _ in got] == [d for d, _ in expected], (
         f"doc order mismatch: {got} vs {expected}"
     )
@@ -112,12 +109,10 @@ def test_synth_segment_rank_identity(synth_seg, name, q):
 
 def test_wand_prune_parity(synth_seg):
     oracle, sidx = synth_seg
-    # multi-term disjunction is the pruned path; compare against unpruned
+    # a prefix expands to a multi-term disjunction, cut to a top-k inside
+    # every segment
     q = PrefixQuery(field="content", prefix="re")
-    pruned = [(r["doc_id"], r["score"]) for r in sidx.search(q, k=10, prune=True).collect()]
-    exact = [(r["doc_id"], r["score"]) for r in sidx.search(q, k=10, prune=False).collect()]
-    assert pruned == exact
-    assert_seg_rank_identical(oracle, sidx, q, k=10, prune=True)
+    assert_seg_rank_identical(oracle, sidx, q, k=10)
 
 
 def test_resume_after_crash(spark, tmp_path_factory):
