@@ -115,7 +115,10 @@ def jvm_tokens_expr(analyzer_name, col: str):
 
 
 def assign_doc_ids(
-    df: DataFrame, order_cols: Sequence[str], buckets: int = DOC_ID_BUCKETS
+    df: DataFrame,
+    order_cols: Sequence[str],
+    buckets: int = DOC_ID_BUCKETS,
+    seg_size: int | None = None,
 ) -> DataFrame:
     """Deterministic dense global doc_id without a single-partition sort.
 
@@ -124,6 +127,10 @@ def assign_doc_ids(
     window; bucket base offsets are a tiny driver-side cumulative sum.
     Stable across parallelism levels (N vs 4N) because the order is purely
     data-dependent.
+
+    With ``seg_size`` the window runs one partition per ``seg_size`` rows
+    of the batch, at most ``spark.sql.shuffle.partitions``: a one-segment
+    add runs one task and writes one docs file.
     """
     cols = [F.col(c) for c in order_cols]
     with_b = df.withColumn("_b", F.pmod(F.xxhash64(*cols), F.lit(buckets)))
@@ -140,6 +147,12 @@ def assign_doc_ids(
     # of them broadcast a LogicalRDD in its own job on every action, and
     # F.lit(list) would cost one py4j call per bucket
     off = F.expr(f"array({', '.join(f'{o}L' for o in offsets)})[_b]")
+    if seg_size:
+        # hash partitioning on _b satisfies the window's distribution, so
+        # this is its only exchange
+        cap = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        n_part = min(cap, max(1, -(-acc // seg_size)))
+        with_b = with_b.repartition(n_part, "_b")
     w = Window.partitionBy("_b").orderBy(*cols)
     return (
         with_b.withColumn("_rn", F.row_number().over(w) - 1)
@@ -155,6 +168,7 @@ def build_docs(
     doc_id_col: str | None = None,
     keep_tokens: bool = True,
     doc_lens: bool = True,
+    seg_size: int | None = None,
 ) -> DataFrame:
     """Docs table: doc_id + original columns + sha256 of each tokenized
     field (input_hint invariant), plus per-field doc_len when requested.
@@ -163,13 +177,14 @@ def build_docs(
     arrays. ``keep_tokens=False, doc_lens=True`` computes doc_len via a
     count-only UDF. ``doc_lens=False`` (segment build path) skips
     tokenization entirely — the segment inverter is the ONLY tokenize pass
-    and emits per-segment doc-length marker rows itself.
+    and emits per-segment doc-length marker rows itself. ``seg_size`` sizes
+    doc-id assignment's partitions by the batch (see assign_doc_ids).
     """
     if doc_id_col:
         df = corpus.withColumn("doc_id", F.col(doc_id_col).cast("long"))
     else:
         assert id_cols, "need id_cols or doc_id_col"
-        df = assign_doc_ids(corpus, id_cols)
+        df = assign_doc_ids(corpus, id_cols, seg_size=seg_size)
     for field, aname in field_config.items():
         if aname == "keyword":
             continue

@@ -16,8 +16,8 @@ Layout per (term) row:
            deltas are relative to block_meta.first_doc, first entry delta 0]
   Actually: block deltas are [doc_i - doc_{i-1}] with doc_{-1} =
   block_meta.first_doc and the first stored doc IS first_doc, so the first
-  delta is 0 — blocks are self-contained and concatenation across segments
-  needs no re-encoding.
+  delta is 0 — blocks are self-contained, so shifting a row's doc ids
+  (add_index) rewrites only block_meta, never the streams.
   tf_bin:  vbyte stream of tf per doc (block-aligned offsets)
   pos_bin: per doc, vbyte stream of position deltas (first absolute)
   block_meta: list of dicts/structs
@@ -413,46 +413,3 @@ def encode_segment_terms(
             )
         )
     return out
-
-
-def concat_posting_rows(rows: list[dict]) -> dict:
-    """Merge same-term rows from doc-range-disjoint segments: pure byte
-    concatenation + offset-shifted block_meta (no re-encoding — the merge
-    hot path is O(bytes memcpy), sm_append_postings analog
-    c/src/index.c:5922-5974)."""
-    rows = sorted(rows, key=lambda r: r["block_meta"][0]["first"])
-    doc_parts, tf_parts, pos_parts, dl_parts, metas = [], [], [], [], []
-    d_off = t_off = p_off = l_off = 0
-    df = 0
-    last = -1
-    for r in rows:
-        bm0 = r["block_meta"][0]
-        assert bm0["first"] > last, "segments must be doc-range disjoint"
-        last = r["block_meta"][-1]["last"]
-        doc_parts.append(r["doc_bin"])
-        tf_parts.append(r["tf_bin"])
-        pos_parts.append(r["pos_bin"])
-        dl_parts.append(r.get("dl_bin", b""))
-        for bm in r["block_meta"]:
-            metas.append(
-                dict(
-                    bm,
-                    doc_off=bm["doc_off"] + d_off,
-                    tf_off=bm["tf_off"] + t_off,
-                    pos_off=bm["pos_off"] + p_off,
-                    dl_off=bm.get("dl_off", 0) + l_off,
-                )
-            )
-        d_off += len(r["doc_bin"])
-        t_off += len(r["tf_bin"])
-        p_off += len(r["pos_bin"])
-        l_off += len(r.get("dl_bin", b""))
-        df += r["df"]
-    return {
-        "doc_bin": b"".join(doc_parts),
-        "tf_bin": b"".join(tf_parts),
-        "pos_bin": b"".join(pos_parts),
-        "dl_bin": b"".join(dl_parts),
-        "block_meta": metas,
-        "df": df,
-    }

@@ -5,18 +5,20 @@ c/src/ind.c) — open/add/search/delete/optimize with auto-flush. Our LSM
 shape: every add_documents() batch becomes fresh doc-range segments
 (appended parquet), deletions are lazy (BitVector analog: a deleted-ids
 table applied at query time, c/src/index.c:5729-5745), and optimize()
-expunges deletes + rebuilds the merged generation (iw_optimize
+expunges deletes + rebuilds the base term dictionary (iw_optimize
 c/src/index.c:6439-6453).
 
 An add materialises its batch once: the batch's docs frame and its
 segments are each persisted for the length of the add, written, and fed
 to the next step, so no job re-reads what the add just wrote, recounts
 the batch or re-derives the segment span (the counts come from the new
-files' parquet footers). Its merge fans out by the batch's own size, like
-the reference's flush-then-merge-small-tiers (iw_add_document ->
-iw_maybe_merge_segments, c/src/index.c:6280-6309), and every table the
-library wrote is opened with the schema its footers record (no
-schema-inference job).
+files' parquet footers). The batch's own term_stats become a new merge
+generation, like the reference's flush-then-merge-small-tiers
+(iw_add_document -> iw_maybe_merge_segments, c/src/index.c:6280-6309); a
+tier merge sums its victims' dfs, so no posting byte is written twice.
+Corpus stats fold the batch's doc-length sums into the exact sums kept in
+meta.json. Every table the library wrote is opened with the schema its
+footers record (no schema-inference job).
 
 Deviation from the reference (by design): doc_ids are stable forever —
 merges never remap them (the reference renumbers via doc_map + base;
@@ -41,17 +43,19 @@ from ferret_spark.query import Query, TermQuery
 from ferret_spark.segments import (
     SegmentIndex,
     SegmentIndexBuilder,
+    add_sums,
     append_manifest,
     base_generation,
     build_segments,
-    concat_partitions,
     data_files,
     footer_rows,
-    merge_fanout,
-    merge_segments,
+    marker_sums,
     parquet_rows,
     read_table,
-    term_stats_of,
+    stats_from_sums,
+    sums_of,
+    term_stats_frame,
+    term_stats_partitions,
     write_generation,
 )
 
@@ -80,13 +84,11 @@ class FerretIndex:
         path: str,
         field_config: dict[str, str] | None = None,
         seg_size: int = 4096,
-        salt_buckets: int = 8,
         merge_factor: int = 10,
     ):
         self.spark = spark
         self.path = path
         self.seg_size = seg_size
-        self.salt_buckets = salt_buckets
         self.merge_factor = merge_factor
         self._idx: SegmentIndex | None = None
         if os.path.exists(os.path.join(path, "meta.json")):
@@ -115,7 +117,6 @@ class FerretIndex:
                 self.path,
                 self.field_config,
                 seg_size=self.seg_size,
-                salt_buckets=self.salt_buckets,
             )
             self._idx = b.build(df, id_cols=id_cols, doc_id_col=doc_id_col)
             meta = self._meta()
@@ -139,9 +140,9 @@ class FerretIndex:
             )
         else:
             assert id_cols
-            batch = B.assign_doc_ids(df, id_cols).withColumn(
-                "doc_id", F.col("doc_id") + F.lit(base)
-            )
+            batch = B.assign_doc_ids(
+                df, id_cols, seg_size=self.seg_size
+            ).withColumn("doc_id", F.col("doc_id") + F.lit(base))
         # the batch is computed ONCE: its docs frame and its segments are
         # each persisted, written, and fed to the next step — never re-read
         # from the appended tables or recounted by a job. Both caches hold
@@ -158,21 +159,14 @@ class FerretIndex:
             segs = build_segments(
                 docs, self.field_config, self.seg_size, n_segments=n_segs
             ).persist()
-            seg_rows = footer_rows(
-                _append(segs, os.path.join(self.path, "segments"))
-            )
-            # the batch becomes its own merge GENERATION (tiered policy,
-            # iw_maybe_merge_segments analog): merge cost and fan-out follow
-            # the batch, not the index; tiers collapse geometrically in
-            # _maybe_merge_generations
+            new_segs = _append(segs, os.path.join(self.path, "segments"))
+            seg_rows = footer_rows(new_segs)
+            # the batch's term_stats become its own merge GENERATION (tiered
+            # policy, iw_maybe_merge_segments analog): their cost and
+            # fan-out follow the batch, not the index; tiers collapse
+            # geometrically in _maybe_merge_generations
             gen = write_generation(
-                self.spark,
-                self.path,
-                self._new_gname(),
-                merge_segments(
-                    segs, self.salt_buckets, n_segments=n_segs, n_rows=seg_rows
-                ),
-                n_new,
+                self.path, self._new_gname(), segs, seg_rows, n_new
             )
         finally:
             docs.unpersist()
@@ -182,7 +176,7 @@ class FerretIndex:
             meta.get("generations") or [base_generation(meta["stats"]["n_docs"])]
         ) + [gen]
         meta["id_ranges"] = ranges + [[base, base + n_new]]
-        meta["stats"] = self._segment_stats()
+        meta["stats"] = self._fold_stats(meta["stats"], new_segs, n_new)
         self._write_meta(meta)
         append_manifest(
             self.spark,
@@ -191,9 +185,7 @@ class FerretIndex:
             {
                 "rows": n_new,
                 "bytes": -1,
-                "partitions": merge_fanout(
-                    self.spark, self.salt_buckets, n_segs, seg_rows
-                ),
+                "partitions": term_stats_partitions(self.spark, seg_rows),
                 "elapsed_sec": time.time() - t0,
             },
         )
@@ -206,9 +198,9 @@ class FerretIndex:
         (iw_add_readers analog, c/src/index.c:6530-6750): compressed
         posting bytes copy verbatim; only the absolute ids in block_meta
         shift by the id base (the codec's delta streams are
-        block-relative). The appended index becomes one new merge
-        generation; global stats refresh from the shifted doc-length
-        markers."""
+        block-relative). The other index's summed term_stats become one
+        new merge generation (a df does not change when doc ids shift);
+        global stats fold in the shifted doc-length markers."""
         from ferret_spark.segments import shift_posting_rows
 
         assert self._idx is not None, "add documents first"
@@ -229,24 +221,23 @@ class FerretIndex:
         shifted_docs = o.docs.withColumn(
             "doc_id", F.col("doc_id") + F.lit(base)
         )
-        shifted_docs.write.mode("append").parquet(
-            os.path.join(self.path, "docs")
+        n_new = footer_rows(
+            _append(shifted_docs, os.path.join(self.path, "docs"))
         )
         src_segs = read_table(self.spark, os.path.join(other.path, "segments"))
-        shift_posting_rows(src_segs, base, seg_shift).write.mode(
-            "append"
-        ).parquet(os.path.join(self.path, "segments"))
-
-        # the shifted source's global index becomes a new generation
+        new_segs = _append(
+            shift_posting_rows(src_segs, base, seg_shift),
+            os.path.join(self.path, "segments"),
+        )
         gens = meta.get("generations") or [
             base_generation(meta["stats"]["n_docs"])
         ]
         gens.append(
             write_generation(
-                self.spark,
                 self.path,
                 self._new_gname(),
-                shift_posting_rows(o.merged, base),
+                o.term_stats,
+                sum(d.count_rows() for d in o._term_dicts),
                 o.stats["n_docs"],
             )
         )
@@ -254,7 +245,7 @@ class FerretIndex:
         meta["id_ranges"] = ranges + [
             [lo + base, hi + base] for lo, hi in o.id_ranges
         ]
-        meta["stats"] = self._segment_stats()
+        meta["stats"] = self._fold_stats(meta["stats"], new_segs, n_new)
         self._write_meta(meta)
         self._maybe_merge_generations()
         append_manifest(
@@ -277,49 +268,46 @@ class FerretIndex:
         )
 
     def _segment_stats(self) -> dict:
-        from ferret_spark.segments import (
-            corpus_stats_from_marker_files,
-            corpus_stats_from_segments,
-        )
-
-        seg_dir = os.path.join(self.path, "segments")
+        """Corpus stats from one decode of every segment file's markers."""
         # doc-length markers exist only for TOKENIZED fields; an all-keyword
         # field_config has none, so n_docs must fall back to the docs-table
         # row count (parquet footers, no Spark job) — a 0 fallback would
         # turn bm25_idf(df, 0) negative and invert ranking
-        n_docs_fb = parquet_rows(os.path.join(self.path, "docs"))
-        stats = corpus_stats_from_marker_files(
-            seg_dir, self.field_config, n_docs_fallback=n_docs_fb
+        return stats_from_sums(
+            marker_sums(
+                self.spark, data_files(os.path.join(self.path, "segments"))
+            ),
+            self.field_config,
+            n_docs_fallback=parquet_rows(os.path.join(self.path, "docs")),
         )
-        if stats is None:
-            segs = read_table(self.spark, seg_dir)
-            stats = corpus_stats_from_segments(
-                self.spark, segs, self.field_config, n_docs_fallback=n_docs_fb
-            )
-        return stats
 
-    def _refresh_derived(self):
-        segs = read_table(self.spark, os.path.join(self.path, "segments"))
-        ts = term_stats_of(
-            segs.where(F.col("term").isNotNull())  # skip doc-length markers
-            .groupBy("field", "term")
-            .agg(F.sum("df").alias("df"))
+    def _fold_stats(self, stats: dict, new_seg_files, n_new: int) -> dict:
+        """Corpus stats after appending ``new_seg_files`` (``n_new`` docs):
+        the exact sums ``stats`` keeps plus those of the new files'
+        markers, so an add decodes only its own batch. Stats written
+        before the sums were kept get them from one full decode."""
+        old = sums_of(stats)
+        if old is None:
+            return self._segment_stats()
+        return stats_from_sums(
+            add_sums(old, marker_sums(self.spark, new_seg_files)),
+            self.field_config,
+            n_docs_fallback=stats["n_docs"] + n_new,
         )
-        # sorted by (field, term) like every build's term_stats, so the
-        # driver-side doc_freqs read prunes by file and row-group stats
-        ts.orderBy("field", "term").write.mode("overwrite").parquet(
-            os.path.join(self.path, "term_stats.tmp")
-        )
-        # atomic-ish swap
+
+    def _drop_generation(self, g: dict):
+        """Delete a generation no meta.json entry names any more. The base
+        generation's term_stats/ is the index root's and stays for
+        optimize() to rewrite; an older layout's root merged/ goes."""
         import shutil
 
-        final = os.path.join(self.path, "term_stats")
-        shutil.rmtree(final, ignore_errors=True)
-        os.rename(os.path.join(self.path, "term_stats.tmp"), final)
-        # merged generation is rebuilt lazily by optimize(); mark stale
-        meta = self._meta()
-        meta["merged_stale"] = True
-        self._write_meta(meta)
+        if g["term_stats"] == "term_stats":
+            shutil.rmtree(os.path.join(self.path, "merged"), ignore_errors=True)
+        else:
+            shutil.rmtree(
+                os.path.dirname(os.path.join(self.path, g["term_stats"])),
+                ignore_errors=True,
+            )
 
     def _maybe_merge_generations(self, merge_factor: int | None = None):
         """Collapse the smallest generations while more than merge_factor
@@ -327,41 +315,26 @@ class FerretIndex:
         c/src/index.c:6280-6309 with the reference default factor 10).
         Only the chosen small tiers are rewritten — big generations are
         untouched, so K incremental adds cost O(K * batch * log), never
-        O(index) per add."""
+        O(index) per add. A merge sums the victims' term_stats; no
+        posting byte moves."""
         factor = merge_factor or self.merge_factor
         while True:
             meta = self._meta()
             gens = meta.get("generations", [])
             if len(gens) <= factor:
                 return
-            from ferret_spark.segments import _concat_stage
-
             t0 = time.time()
             by_size = sorted(gens, key=lambda g: g["rows"])
             victims = by_size[:factor]
             keep = [g for g in gens if g not in victims]
-            union = None
-            for g in victims:
-                m = read_table(self.spark, os.path.join(self.path, g["merged"]))
-                union = m if union is None else union.unionByName(m)
-            # fan-out from the victims' size: one merged row per (field,
-            # term) = one term_stats row, counted in the footers
-            n_part = concat_partitions(
-                self.spark,
-                sum(
-                    parquet_rows(os.path.join(self.path, g["term_stats"]))
-                    for g in victims
-                ),
-            )
-            merged = _concat_stage(
-                union.repartition(n_part, "field", "term"),
-                ["field", "term"],
-            )
+            dirs = [os.path.join(self.path, g["term_stats"]) for g in victims]
+            union = read_table(self.spark, dirs[0])
+            for d in dirs[1:]:
+                union = union.unionByName(read_table(self.spark, d))
+            n_rows = sum(parquet_rows(d) for d in dirs)
             gname = self._new_gname()
             rows = sum(g["rows"] for g in victims)
-            keep.append(
-                write_generation(self.spark, self.path, gname, merged, rows)
-            )
+            keep.append(write_generation(self.path, gname, union, n_rows, rows))
             # commit protocol: the new generation + meta are durable BEFORE
             # victim dirs go away — a crash in between leaves at worst an
             # orphaned (unreferenced) directory, never a meta.json pointing
@@ -375,16 +348,12 @@ class FerretIndex:
                 {
                     "rows": rows,
                     "bytes": -1,
-                    "partitions": n_part,
+                    "partitions": term_stats_partitions(self.spark, n_rows),
                     "elapsed_sec": time.time() - t0,
                 },
             )
-            import shutil
-
             for g in victims:
-                gd = os.path.dirname(os.path.join(self.path, g["merged"]))
-                if os.path.basename(gd) != self.path and g["merged"] != "merged":
-                    shutil.rmtree(gd, ignore_errors=True)
+                self._drop_generation(g)
 
     # -------------------------------------------------------------- deletes
     def _deleted_path(self) -> str:
@@ -469,15 +438,10 @@ class FerretIndex:
     # ------------------------------------------------------------- optimize
     def optimize(self):
         """Expunge deletions by rewriting segments (decode -> drop ->
-        re-encode), rebuild the merged generation + stats, clear the
+        re-encode), rebuild one base term_stats + stats, clear the
         deletion list. Doc ids are preserved."""
         from ferret_spark.codec import decode_posting_list, encode_posting_list
-        from ferret_spark.segments import (
-            MERGED_SCHEMA,
-            SEGMENT_SCHEMA,
-            _bm_dicts,
-            _bm_tuples,
-        )
+        from ferret_spark.segments import SEGMENT_SCHEMA, _bm_dicts, _bm_tuples
 
         deleted_df = self.deleted_df()
         has_deletes = deleted_df is not None
@@ -561,33 +525,14 @@ class FerretIndex:
         shutil.rmtree(final, ignore_errors=True)
         os.rename(tmp, final)
 
-        # rebuild merged + stats over the compacted segments
-        segs2 = read_table(self.spark, final)
-        m0 = self._meta()
-        ranges = m0.get("id_ranges", [[0, m0["stats"]["n_docs"]]])
-        span = max(hi for _lo, hi in ranges)
-        merged = merge_segments(
-            segs2,
-            self.salt_buckets,
-            n_segments=max(1, -(-span // self.seg_size)),
-            n_rows=parquet_rows(final),
-        )
-        mtmp = os.path.join(self.path, "merged.tmp")
-        # merge input is range-partitioned by (field, term); local sort only
-        merged.sortWithinPartitions(
-            "field", "term"
-        ).write.mode("overwrite").parquet(mtmp)
-        mfinal = os.path.join(self.path, "merged")
-        shutil.rmtree(mfinal, ignore_errors=True)
-        os.rename(mtmp, mfinal)
-        self._refresh_derived()
-        # all generations collapse into the rebuilt base
-        import shutil as _sh
-
-        _sh.rmtree(os.path.join(self.path, "generations"), ignore_errors=True)
-        meta0 = self._meta()
-        meta0["generations"] = [base_generation(meta0["stats"]["n_docs"])]
-        self._write_meta(meta0)
+        # one base term_stats over the compacted segments
+        tstmp = os.path.join(self.path, "term_stats.tmp")
+        term_stats_frame(
+            read_table(self.spark, final), parquet_rows(final)
+        ).write.mode("overwrite").parquet(tstmp)
+        ts_final = os.path.join(self.path, "term_stats")
+        shutil.rmtree(ts_final, ignore_errors=True)
+        os.rename(tstmp, ts_final)
         # remove deleted rows from the docs table + stats (anti-join — the
         # deleted set never reaches the driver)
         if has_deletes:
@@ -601,15 +546,19 @@ class FerretIndex:
         shutil.rmtree(self._deleted_path(), ignore_errors=True)
         meta = self._meta()
         meta["stats"] = self._segment_stats()
-        meta["merged_stale"] = False
+        meta["generations"] = [base_generation(meta["stats"]["n_docs"])]
+        meta.pop("merged_stale", None)  # an older layout's flag
         self._write_meta(meta)
+        # all generations (and an older layout's merged/ copy) collapsed
+        # into the base; meta.json no longer names them
+        for d in ("generations", "merged"):
+            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
         append_manifest(
             self.spark, self.path, f"optimize_{int(time.time())}",
             {"rows": n_del, "bytes": -1},
         )
         self._reload_idx()
         return self
-
 
     def _reload_idx(self):
         """Swap in a fresh SegmentIndex after a mutation, releasing the

@@ -1,39 +1,43 @@
-"""Segmented compressed index: build + hierarchical merge + resume.
+"""Segmented compressed index: build + term dictionary + resume.
 
 The scale architecture (SURVEY §7):
 
   corpus --assign doc_id--> docs --seg_id = doc_id // seg_size-->
   B3  groupBy(seg).applyInPandas(invert+encode)  -> segments table
       (seg_id, field, term, df, doc_bin, tf_bin, pos_bin, dl_bin, block_meta)
-  B4  two-stage salted merge:
-        stage 1: groupBy(field, term, salt)  salt = contiguous seg bucket
-                 -> partial concat rows (spreads a hot term's n_segments
-                    rows over `salt_buckets` reducers)
-        stage 2: groupBy(field, term) -> final rows (global index)
-      Both stages are pure byte concatenation (codec blocks are
-      self-contained) — reference sm_append_postings analog without
-      re-encoding (c/src/index.c:5922-5974).
-  B5  term_stats from segment rows; manifest rows per stage/partition.
+  B4  term dictionary: groupBy(field, term).sum(df) over the segment rows'
+      (field, term, df) columns -> term_stats. Spark's map-side partial
+      aggregation makes it a hierarchical merge keyed by the (field, term)
+      hash, one row per term per map task, so the Zipf head is no skew.
+      No posting byte moves: the segments are the only copy of the
+      postings.
+  B5  corpus stats from the segments' doc-length marker rows; manifest
+      rows per stage.
 
 Layout on disk (<path>/):
-  docs/        parquet (doc_id, original cols, doc_len_*, sha256_*)
+  docs/        parquet (doc_id, original cols, sha256_*)
   segments/    parquet partitioned by seg_id bucket — the SCORING layout:
                a query ships its terms to every segment (doc-range shard),
                scores every hit locally, cuts a local top-k, then global
                top-k —
                the MultiSearcher shape (c/src/search.c:1443-1840)
-  merged/      parquet hash-partitioned by (field, term), sorted within
-               partitions — the global index / term dictionary (term-dict
-               ops, merge proof); under FerretIndex incremental adds this
-               is generation 0 of the tiered-merge LSM (generations/g*)
-  term_stats/  parquet (field, term, df, term_num)
+  term_stats/  parquet (field, term, df, term_num), sorted by (field, term)
+               within each file — the term dictionary; under FerretIndex
+               incremental adds this is generation 0 of the tiered-merge
+               LSM (generations/g*/term_stats)
   manifest/    parquet: (stage, part, rows, bytes, status, ts) — lineage +
                metrics; resume skips stages whose manifest says 'done'
-  meta.json    stats + field_config + build params
+  meta.json    stats (with the exact doc-length sums) + field_config +
+               build params
 
-Segments are doc-range partitions, so merge = concat and doc ids never
-remap (the reference remaps via doc_map + base, c/src/index.c:6008-6065;
-our global doc_id makes that unnecessary).
+Indexes written by older builds also hold merged/ (one row of
+concatenated posting bytes per term), named by their generations'
+"merged" keys. Readers ignore it; FerretIndex deletes it when its
+generation is merged away, and at optimize.
+
+Segments are doc-range partitions, so doc ids never remap (the reference
+remaps via doc_map + base, c/src/index.c:6008-6065; our global doc_id
+makes that unnecessary).
 """
 
 from __future__ import annotations
@@ -49,11 +53,7 @@ from pyspark.sql import functions as F
 
 from ferret_spark import build as B
 from ferret_spark.analysis import get_analyzer
-from ferret_spark.codec import (
-    concat_posting_rows,
-    encode_posting_list_flat,
-    encode_segment_terms,
-)
+from ferret_spark.codec import encode_segment_terms
 
 BLOCK_META_TYPE = (
     "array<struct<first:long,last:long,count:int,max_tf:int,"
@@ -65,7 +65,6 @@ SEGMENT_SCHEMA = (
     "doc_bin binary, tf_bin binary, pos_bin binary, dl_bin binary, "
     f"block_meta {BLOCK_META_TYPE}"
 )
-MERGED_SCHEMA = SEGMENT_SCHEMA.replace("seg_id int, ", "")
 
 _BM_KEYS = [
     "first", "last", "count", "max_tf", "min_dl",
@@ -308,151 +307,16 @@ def _row_to_codec(r) -> dict:
     }
 
 
-_PARTS_FIELDS = ["df", "doc_bin", "tf_bin", "pos_bin", "dl_bin", "block_meta"]
-
-
-def _parts_struct():
-    # 'first' leads the struct so sort_array orders parts by doc range
-    return F.struct(
-        F.expr("block_meta[0].first").alias("first"),
-        *[F.col(c) for c in _PARTS_FIELDS],
-    )
-
-
-def _concat_stage(df: DataFrame, keys: list[str]) -> DataFrame:
-    """groupBy(keys) -> one merged posting row per group. The group's rows
-    are gathered with collect_list (map-side combinable, one shuffle of
-    compressed bytes) and concatenated in a BATCHED mapInPandas — one
-    Python invocation per Arrow batch of terms, not per term."""
-    grouped = df.groupBy(*keys).agg(
-        F.sort_array(F.collect_list(_parts_struct())).alias("parts")
-    )
-    out_schema = ", ".join(
-        ["field string", "term string"]
-        + (["salt int"] if "salt" in keys else [])
-        + [
-            "df long",
-            "doc_bin binary",
-            "tf_bin binary",
-            "pos_bin binary",
-            "dl_bin binary",
-            f"block_meta {BLOCK_META_TYPE}",
-        ]
-    )
-
-    key_cols = list(keys)
-
-    def concat_batches(batches):
-        for pdf in batches:
-            rows_out = []
-            for i in range(len(pdf)):
-                parts = pdf["parts"].iloc[i]
-                rows = [
-                    {
-                        "doc_bin": bytes(p["doc_bin"]),
-                        "tf_bin": bytes(p["tf_bin"]),
-                        "pos_bin": bytes(p["pos_bin"]),
-                        "dl_bin": bytes(p["dl_bin"]),
-                        "block_meta": _bm_dicts(p["block_meta"]),
-                        "df": int(p["df"]),
-                    }
-                    for p in parts
-                ]
-                m = concat_posting_rows(rows)
-                rows_out.append(
-                    tuple(pdf[k].iloc[i] for k in key_cols)
-                    + (
-                        int(m["df"]),
-                        m["doc_bin"],
-                        m["tf_bin"],
-                        m["pos_bin"],
-                        m["dl_bin"],
-                        _bm_tuples(m["block_meta"]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows_out,
-                columns=key_cols
-                + ["df", "doc_bin", "tf_bin", "pos_bin", "dl_bin", "block_meta"],
-            )
-
-    return grouped.mapInPandas(concat_batches, out_schema)
-
-
-def concat_partitions(spark: SparkSession, n_rows: int | None) -> int:
-    """Fan-out of a single (field, term) concat stage over ``n_rows`` input
-    rows. 4x cores: the Zipf head makes (field, term) buckets skewed, and
-    at 1 task/core the stage wall is the slowest straggler — smaller quanta
-    smooth it (measured at 8 cores: 6.65s @1x -> 4.56s @4x; 8x reverses
-    the gain via per-file commit overhead). A known row count caps it at
-    ~2k rows per task, so tiny merges (small corpora, one add batch, a
-    tier of small generations) don't pay 4x-cores Python tasks."""
+def term_stats_partitions(spark: SparkSession, n_rows: int | None) -> int:
+    """Partitions (and files) of a term_stats write over ``n_rows`` input
+    rows: 4x cores, capped at ~2k input rows per task, so a small write (an
+    add batch, a tier of small generations) runs a few tasks.
+    term_stats_frame coalesces to it, so spark.sql.shuffle.partitions
+    caps it."""
     n_part = max(4, 4 * spark.sparkContext.defaultParallelism)
     if n_rows is not None and n_rows > 0:
         n_part = max(4, min(n_part, n_rows // 2000 + 1))
     return n_part
-
-
-def _salted(n_segments: int, salt_buckets: int) -> bool:
-    return n_segments > salt_buckets * 8
-
-
-def merge_fanout(
-    spark: SparkSession, salt_buckets: int, n_segments: int, n_rows: int | None
-) -> int:
-    """Partitions of merge_segments' final concat stage for these
-    arguments (the manifest records it)."""
-    if _salted(n_segments, salt_buckets):
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return concat_partitions(spark, n_rows)
-
-
-def merge_segments(
-    segments: DataFrame,
-    salt_buckets: int = 8,
-    *,
-    n_segments: int,
-    n_rows: int | None = None,
-) -> DataFrame:
-    """Hierarchical salted merge -> global (field, term) rows.
-
-    ``n_segments`` is the segment span of ``segments`` (the caller knows it
-    from the doc count: a build's whole corpus, an add's own batch) and
-    ``n_rows`` their row count from parquet footers, when known. When the
-    span is small a single concat stage suffices; past ~8x salt_buckets
-    segments, a salted first stage (salt = contiguous seg_id bucket, so
-    stage-2 concat stays doc-range monotonic) spreads a hot term's rows
-    over salt_buckets reducers first — the Zipf head appears in EVERY
-    segment, and without salting its entire posting list would funnel
-    through one task (skew handling required by north_rule).
-    """
-    # doc-length marker rows (term NULL) are per-segment metadata — they
-    # never merge into the global (field, term) index
-    segments = segments.where(F.col("term").isNotNull())
-    if not _salted(n_segments, salt_buckets):
-        # hash-partition the INPUT by (field, term): the groupBy reuses the
-        # partitioning (one shuffle total) and the writer needs no output
-        # repartition. NOT repartitionByRange — the RangePartitioner's
-        # sampling job reads the entire child (posting binaries included)
-        # a second time; and not on the OUTPUT either, which would execute
-        # the whole merge twice. Files stay sorted within partitions, so
-        # parquet rowgroup min/max stats still prune term lookups.
-        n_part = concat_partitions(segments.sparkSession, n_rows)
-        src = segments.repartition(n_part, "field", "term")
-        return _concat_stage(src, ["field", "term"]).select(
-            "field", "term", "df",
-            "doc_bin", "tf_bin", "pos_bin", "dl_bin", "block_meta",
-        )
-
-    seg_per_bucket = max(1, (n_segments + salt_buckets - 1) // salt_buckets)
-    salted = segments.withColumn(
-        "salt", (F.col("seg_id") / F.lit(seg_per_bucket)).cast("int")
-    )
-    partial = _concat_stage(salted, ["field", "term", "salt"])
-    return _concat_stage(partial.drop("salt"), ["field", "term"]).select(
-        "field", "term", "df",
-        "doc_bin", "tf_bin", "pos_bin", "dl_bin", "block_meta",
-    )
 
 
 def term_stats_of(postings: DataFrame) -> DataFrame:
@@ -466,31 +330,44 @@ def term_stats_of(postings: DataFrame) -> DataFrame:
     )
 
 
+def term_stats_frame(rows: DataFrame, n_rows: int | None) -> DataFrame:
+    """The term dictionary of ``rows`` — segment posting rows or other
+    term_stats rows: one (field, term, df, term_num) row per term, its df
+    summed. Only (field, term, df) are read, so no posting byte moves.
+    Spark's map-side partial aggregation makes the sum a hierarchical
+    merge keyed by the (field, term) hash: each map task sends one row per
+    term, so a Zipf-head term present in every segment is no skew.
+    ``n_rows`` (the input's footer row count) sets the partitions by
+    term_stats_partitions; each is sorted by (field, term), so file and
+    row-group min/max statistics bound the driver-side doc_freqs read."""
+    summed = (
+        rows.where(F.col("term").isNotNull())  # doc-length markers
+        .groupBy("field", "term")
+        .agg(F.sum("df").alias("df"))
+    )
+    return (
+        term_stats_of(summed)
+        .coalesce(term_stats_partitions(rows.sparkSession, n_rows))
+        .sortWithinPartitions("field", "term")
+    )
+
+
 def base_generation(n_docs: int) -> dict:
     """meta.json entry of the generation the builder itself wrote (the
-    index root's merged/ and term_stats/)."""
-    return {"merged": "merged", "term_stats": "term_stats", "rows": n_docs}
+    index root's term_stats/)."""
+    return {"term_stats": "term_stats", "rows": n_docs}
 
 
 def write_generation(
-    spark: SparkSession, root: str, gname: str, merged: DataFrame, rows: int
+    root: str, gname: str, rows: DataFrame, n_rows: int | None, docs: int
 ) -> dict:
-    """Write one merge generation under ``root/gname``: ``merged`` sorted
-    by (field, term) within its partitions (rowgroup stats prune term
-    scans), then the term_stats of the written files. Returns its
-    meta.json entry."""
-    merged_dir = os.path.join(root, gname, "merged")
-    merged.sortWithinPartitions("field", "term").write.mode("overwrite").parquet(
-        merged_dir
-    )
-    term_stats_of(read_table(spark, merged_dir)).write.mode("overwrite").parquet(
+    """Write one merge generation, the term_stats of ``rows`` (see
+    term_stats_frame), under ``root/gname`` and return its meta.json
+    entry; ``docs`` is the doc count the tier policy sizes it by."""
+    term_stats_frame(rows, n_rows).write.mode("overwrite").parquet(
         os.path.join(root, gname, "term_stats")
     )
-    return {
-        "merged": f"{gname}/merged",
-        "term_stats": f"{gname}/term_stats",
-        "rows": rows,
-    }
+    return {"term_stats": f"{gname}/term_stats", "rows": docs}
 
 
 # ---------------------------------------------------------------------------
@@ -636,71 +513,38 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(StructType.fromJson(json.loads(raw))).parquet(path)
 
 
-def corpus_stats_from_marker_files(
-    seg_dir: str, field_config: dict, n_docs_fallback: int = 0
-) -> dict | None:
-    """Driver-side fast path for small indexes: decode the doc-length
-    marker rows straight from the parquet foot-filtered files (no Spark
-    job — job-launch latency is serial fraction against the scaling
-    gate). Returns None if the marker count is too big for the driver
-    (the Spark path handles those)."""
+def _driver_marker_sums(files) -> dict | None:
+    """marker_sums decoded on the driver with pyarrow (no Spark job — job
+    launch latency is serial fraction against the scaling gate); None
+    when the marker count is too big for the driver."""
     import pyarrow.dataset as ds
 
     from ferret_spark.codec import decode_posting_list
 
-    dataset = ds.dataset(seg_dir, format="parquet")
-    tbl = dataset.to_table(
+    tbl = ds.dataset(files, format="parquet").to_table(
         columns=["field", "df", "doc_bin", "tf_bin", "pos_bin", "dl_bin",
                  "block_meta"],
         filter=ds.field("term").is_null(),
     )
     if tbl.num_rows > 100_000:
         return None
-    agg: dict[str, list] = {}
+    sums: dict[str, list] = {}
     for r in tbl.to_pylist():
         _ids, _tfs, _pos, dls = decode_posting_list(
-            {
-                "doc_bin": r["doc_bin"],
-                "tf_bin": r["tf_bin"],
-                "pos_bin": r["pos_bin"],
-                "dl_bin": r["dl_bin"],
-                "block_meta": _bm_dicts(r["block_meta"]),
-                "df": r["df"],
-            },
-            with_positions=False,
+            _row_to_codec(r), with_positions=False
         )
-        a = agg.setdefault(r["field"], [0, 0, 0, 1 << 62])
+        a = sums.setdefault(r["field"], [0, 0, 0, 1 << 62])
         a[0] += len(dls)
         a[1] += int(dls.sum())
         a[2] = max(a[2], int(dls.max()))
         a[3] = min(a[3], int(dls.min()))
-    n_docs = max((a[0] for a in agg.values()), default=n_docs_fallback)
-    stats = {"n_docs": n_docs, "avgdl": {}, "dl_max": {}, "dl_min": {}}
-    for field, aname in field_config.items():
-        if aname == "keyword" or field not in agg:
-            stats["avgdl"][field] = 1.0
-            stats["dl_max"][field] = 1
-            stats["dl_min"][field] = 1
-            continue
-        a = agg[field]
-        stats["avgdl"][field] = float(a[1]) / max(a[0], 1)
-        stats["dl_max"][field] = a[2]
-        stats["dl_min"][field] = a[3]
-    return stats
+    return sums
 
 
-def corpus_stats_from_segments(
-    spark: SparkSession,
-    segments: DataFrame,
-    field_config: dict,
-    n_docs_fallback: int = 0,
-) -> dict:
-    """Exact corpus stats (n_docs, per-field avgdl / dl_max / dl_min) from
-    the doc-length marker rows — one small distributed decode over one row
-    per (segment, field); no docs-table scan, no extra tokenize pass."""
+def _spark_marker_sums(segments: DataFrame) -> dict:
+    """marker_sums as one small distributed decode over one row per
+    (segment, field)."""
     from ferret_spark.codec import decode_posting_list
-
-    markers = segments.where(F.col("term").isNull())
 
     def dec(batches):
         for pdf in batches:
@@ -723,9 +567,8 @@ def corpus_stats_from_segments(
             )
 
     agg = (
-        markers.mapInPandas(
-            dec, "field string, n long, s long, mx long, mn long"
-        )
+        segments.where(F.col("term").isNull())
+        .mapInPandas(dec, "field string, n long, s long, mx long, mn long")
         .groupBy("field")
         .agg(
             F.sum("n").alias("n"),
@@ -735,20 +578,74 @@ def corpus_stats_from_segments(
         )
         .collect()
     )
-    by_field = {r["field"]: r for r in agg}
-    n_docs = max((int(r["n"]) for r in agg), default=n_docs_fallback)
-    stats = {"n_docs": n_docs, "avgdl": {}, "dl_max": {}, "dl_min": {}}
+    return {
+        r["field"]: [int(r["n"]), int(r["s"]), int(r["mx"]), int(r["mn"])]
+        for r in agg
+    }
+
+
+def marker_sums(spark: SparkSession, files: list[str]) -> dict:
+    """Exact per-field doc-length sums ``{field: [docs, dl_sum, dl_max,
+    dl_min]}`` over the doc-length marker rows of these segment files — no
+    docs-table scan, no extra tokenize pass. Decoded on the driver up to
+    100k markers, past that by Spark."""
+    if not files:
+        return {}
+    sums = _driver_marker_sums(files)
+    if sums is None:
+        sums = _spark_marker_sums(spark.read.parquet(*files))
+    return sums
+
+
+def add_sums(a: dict, b: dict) -> dict:
+    """marker_sums of the union of two disjoint doc sets."""
+    out = {f: list(v) for f, v in a.items()}
+    for f, (n, s, mx, mn) in b.items():
+        o = out.get(f)
+        out[f] = (
+            [n, s, mx, mn] if o is None
+            else [o[0] + n, o[1] + s, max(o[2], mx), min(o[3], mn)]
+        )
+    return out
+
+
+def stats_from_sums(
+    sums: dict, field_config: dict, n_docs_fallback: int = 0
+) -> dict:
+    """meta.json corpus stats: n_docs and per-field avgdl / dl_max /
+    dl_min, plus the exact sums they come from (``dl_docs``, ``dl_sum``)
+    so an add can fold in its own batch (see sums_of). Keyword fields and
+    an all-keyword config have no markers: n_docs falls back to
+    ``n_docs_fallback``, the docs row count."""
+    n_docs = max((a[0] for a in sums.values()), default=n_docs_fallback)
+    stats = {
+        "n_docs": n_docs, "avgdl": {}, "dl_max": {}, "dl_min": {},
+        "dl_docs": {}, "dl_sum": {},
+    }
     for field, aname in field_config.items():
-        if aname == "keyword" or field not in by_field:
+        if aname == "keyword" or field not in sums:
             stats["avgdl"][field] = 1.0
             stats["dl_max"][field] = 1
             stats["dl_min"][field] = 1
             continue
-        r = by_field[field]
-        stats["avgdl"][field] = float(r["s"]) / max(int(r["n"]), 1)
-        stats["dl_max"][field] = int(r["mx"])
-        stats["dl_min"][field] = int(r["mn"])
+        n, s, mx, mn = sums[field]
+        stats["avgdl"][field] = float(s) / max(n, 1)
+        stats["dl_max"][field] = mx
+        stats["dl_min"][field] = mn
+        stats["dl_docs"][field] = n
+        stats["dl_sum"][field] = s
     return stats
+
+
+def sums_of(stats: dict) -> dict | None:
+    """The marker_sums a stats dict keeps; None for stats written before
+    the sums were kept."""
+    if "dl_sum" not in stats:
+        return None
+    return {
+        f: [stats["dl_docs"][f], s, stats["dl_max"][f], stats["dl_min"][f]]
+        for f, s in stats["dl_sum"].items()
+    }
 
 
 def _dir_bytes(p: str) -> int:
@@ -770,9 +667,13 @@ def _dir_bytes(p: str) -> int:
 class SegmentIndexBuilder:
     """Staged, resumable build. Each stage writes its parquet output then a
     manifest row; a re-run (after a crash) skips stages already 'done' —
-    the segments_N commit-point protocol analog (c/src/index.c:1129-1167)."""
+    the segments_N commit-point protocol analog (c/src/index.c:1129-1167).
 
-    STAGES = ["docs", "segments", "merged", "term_stats", "meta"]
+    ``salt_buckets`` is accepted and unused: it sized the salted merge of
+    posting bytes that the term_stats stage replaced, and callers that
+    still pass it keep working."""
+
+    STAGES = ["docs", "segments", "term_stats", "meta"]
 
     def __init__(
         self,
@@ -787,7 +688,6 @@ class SegmentIndexBuilder:
         self.path = path
         self.field_config = field_config
         self.seg_size = seg_size
-        self.salt_buckets = salt_buckets
 
     def _done(self) -> dict:
         return read_manifest(self.spark, self.path)
@@ -825,7 +725,7 @@ class SegmentIndexBuilder:
             # doc_id assignment + content sha256 + write
             docs = B.build_docs(
                 corpus, self.field_config, id_cols, doc_id_col,
-                keep_tokens=False, doc_lens=False,
+                keep_tokens=False, doc_lens=False, seg_size=self.seg_size,
             )
             keep = [c for c in docs.columns if not c.startswith("_toks_")]
             docs.select(*keep).write.mode("overwrite").parquet(docs_dir)
@@ -854,36 +754,13 @@ class SegmentIndexBuilder:
         if stop_after == "segments":
             return None
 
-        merged_dir = os.path.join(path, "merged")
-        if "merged" not in self._done():
-            t0 = time.time()
-            segs = read_table(spark, seg_dir)
-            done_m = self._done()
-            n_docs_known = int(done_m.get("docs", {}).get("rows", 0))
-            n_segments = max(1, -(-n_docs_known // self.seg_size))
-            seg_rows_known = done_m.get("segments", {}).get("rows", None)
-            merged = merge_segments(
-                segs, self.salt_buckets, n_segments=n_segments,
-                n_rows=int(seg_rows_known) if seg_rows_known else None,
-            )
-            # merged rows are already partitioned by (field, term) — merge
-            # input was range-partitioned — so only a partition-local sort
-            # is needed for parquet rowgroup stats (term-dict pruning)
-            (
-                merged.sortWithinPartitions("field", "term")
-                .write.mode("overwrite")
-                .parquet(merged_dir)
-            )
-            self._finish("merged", parquet_rows(merged_dir), t0, merged_dir)
-        if stop_after == "merged":
-            return None
-
         ts_dir = os.path.join(path, "term_stats")
         if "term_stats" not in self._done():
             t0 = time.time()
-            term_stats_of(read_table(spark, merged_dir)).write.mode(
-                "overwrite"
-            ).parquet(ts_dir)
+            # reads only (field, term, df) of the segment rows
+            term_stats_frame(
+                read_table(spark, seg_dir), self._done()["segments"]["rows"]
+            ).write.mode("overwrite").parquet(ts_dir)
             self._finish("term_stats", parquet_rows(ts_dir), t0, ts_dir)
         if stop_after == "term_stats":
             return None
@@ -891,19 +768,15 @@ class SegmentIndexBuilder:
         if "meta" not in self._done():
             t0 = time.time()
             n_docs = int(self._done().get("docs", {}).get("rows", 0))
-            stats = corpus_stats_from_marker_files(
-                seg_dir, self.field_config, n_docs_fallback=n_docs
+            stats = stats_from_sums(
+                marker_sums(spark, data_files(seg_dir)),
+                self.field_config,
+                n_docs_fallback=n_docs,
             )
-            if stats is None:  # marker count too large for the driver
-                segs = read_table(spark, seg_dir)
-                stats = corpus_stats_from_segments(
-                    spark, segs, self.field_config, n_docs_fallback=n_docs
-                )
             meta = {
                 "stats": stats,
                 "field_config": self.field_config,
                 "seg_size": self.seg_size,
-                "salt_buckets": self.salt_buckets,
             }
             with open(os.path.join(path, "meta.json"), "w") as f:
                 json.dump(meta, f)
@@ -929,12 +802,11 @@ def _term_dict_filter(pairs):
 class SegmentIndex:
     """Read side of the segmented index."""
 
-    def __init__(self, spark, path, docs, segments, merged, term_stats, meta):
+    def __init__(self, spark, path, docs, segments, term_stats, meta):
         self.spark = spark
         self.path = path
         self.docs = docs
         self.segments = segments
-        self.merged = merged
         self.term_stats = term_stats
         self.stats = meta["stats"]
         self.field_config = meta["field_config"]
@@ -959,41 +831,29 @@ class SegmentIndex:
         with open(os.path.join(path, "meta.json")) as f:
             meta = json.load(f)
         seg_raw = read_table(spark, os.path.join(path, "segments"))
-        gens = meta.get("generations")
-        if gens and len(gens) > 1:
-            # LSM view over merge generations (tiered merge policy,
-            # iw_maybe_merge_segments analog c/src/index.c:6280-6309):
-            # merged = union of per-generation global indexes (each
-            # internally one row per (field, term)); term_stats = lazily
-            # aggregated union — a term filter pushes below the union and
-            # the aggregate, so df lookups stay cheap
-            merged = None
-            ts = None
-            for g in gens:
-                m = read_table(spark, os.path.join(path, g["merged"]))
-                t = read_table(spark, os.path.join(path, g["term_stats"]))
-                merged = m if merged is None else merged.unionByName(m)
-                ts = t if ts is None else ts.unionByName(
-                    t.select(*ts.columns)
-                )
+        # one term_stats per merge generation (tiered merge policy,
+        # iw_maybe_merge_segments analog c/src/index.c:6280-6309). A
+        # generation's "merged" key, written by older builds, names a copy
+        # of the postings that nothing reads
+        ts_dirs = [
+            os.path.join(path, g["term_stats"])
+            for g in meta.get("generations") or [{"term_stats": "term_stats"}]
+        ]
+        term_stats = read_table(spark, ts_dirs[0])
+        if len(ts_dirs) > 1:
+            # lazily aggregated union: a term filter pushes below the union
+            # and the aggregate, so df lookups stay cheap
+            for d in ts_dirs[1:]:
+                term_stats = term_stats.unionByName(read_table(spark, d))
             term_stats = term_stats_of(
-                ts.groupBy("field", "term").agg(F.sum("df").alias("df"))
+                term_stats.groupBy("field", "term").agg(F.sum("df").alias("df"))
             )
-        elif gens:  # exactly one generation — possibly a collapsed tier
-            merged = read_table(spark, os.path.join(path, gens[0]["merged"]))
-            term_stats = read_table(
-                spark, os.path.join(path, gens[0]["term_stats"])
-            )
-        else:
-            merged = read_table(spark, os.path.join(path, "merged"))
-            term_stats = read_table(spark, os.path.join(path, "term_stats"))
         idx = cls(
             spark,
             path,
             read_table(spark, os.path.join(path, "docs")),
             # NULL-term rows are per-segment doc-length markers, not postings
             seg_raw.where(F.col("term").isNotNull()),
-            merged,
             term_stats,
             meta,
         )
@@ -1001,10 +861,7 @@ class SegmentIndex:
         # the generations' term dictionaries as driver-side pyarrow
         # datasets for doc_freqs (file listing once per reader open; each
         # file's footer is read on its first lookup and kept)
-        idx._term_dicts = [
-            ds.dataset(os.path.join(path, g["term_stats"]), format="parquet")
-            for g in (gens or [{"term_stats": "term_stats"}])
-        ]
+        idx._term_dicts = [ds.dataset(d, format="parquet") for d in ts_dirs]
         return idx
 
     @property

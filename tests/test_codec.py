@@ -1,4 +1,4 @@
-"""Codec round-trip + merge-concat tests (delta+varbyte,
+"""Codec round-trip tests (delta+varbyte,
 reference format semantics c/src/store.c:545-561, c/src/index.c:5414-5447)."""
 
 import numpy as np
@@ -6,7 +6,6 @@ import pytest
 
 from ferret_spark.codec import (
     BLOCK_SIZE,
-    concat_posting_rows,
     decode_posting_list,
     encode_posting_list,
     vbyte_decode,
@@ -66,36 +65,3 @@ def test_block_meta_max_tf():
     assert row["block_meta"][0]["first"] == 0
     assert row["block_meta"][1]["first"] == BLOCK_SIZE
     assert row["block_meta"][-1]["last"] == 299
-
-
-def test_concat_rows_equals_single_encode():
-    rng = np.random.default_rng(7)
-    n = 500
-    doc_ids = np.sort(rng.choice(5000, size=n, replace=False)).astype(np.int64)
-    tfs = rng.integers(1, 9, size=n).astype(np.int64)
-    positions = [
-        np.sort(rng.choice(300, size=int(t), replace=False)).astype(np.int64)
-        for t in tfs
-    ]
-    # split into 3 doc-range-disjoint "segments"
-    cuts = [0, 150, 400, n]
-    rows = [
-        encode_posting_list(
-            doc_ids[a:b], tfs[a:b], positions[a:b]
-        )
-        for a, b in zip(cuts[:-1], cuts[1:])
-    ]
-    merged = concat_posting_rows(rows)
-    assert merged["df"] == n
-    d, t, p, _ = decode_posting_list(merged)
-    assert np.array_equal(d, doc_ids)
-    assert np.array_equal(t, tfs)
-    for a, b in zip(p, positions):
-        assert np.array_equal(a, b)
-
-
-def test_concat_rejects_overlap():
-    r1 = encode_posting_list(np.array([0, 5]), np.array([1, 1]), None)
-    r2 = encode_posting_list(np.array([3, 9]), np.array([1, 1]), None)
-    with pytest.raises(AssertionError):
-        concat_posting_rows([r1, r2])

@@ -72,10 +72,12 @@ def test_empty_docs_counted_in_stats(pair):
 
 def test_huge_tf_block_meta(pair):
     _, sidx = pair
-    r = sidx.merged.where(
-        (sidx.merged.field == "content") & (sidx.merged.term == "hello")
-    ).collect()[0]
-    assert r["df"] == 4
+    seg = sidx.segments
+    rows = seg.where((seg.field == "content") & (seg.term == "hello")).collect()
+    assert sum(r["df"] for r in rows) == 4
+    assert sidx.doc_freqs([("content", "hello")]) == {("content", "hello"): 4}
+    r = next(r for r in rows if r["seg_id"] == 1)  # doc 3 alone
+    assert r["df"] == 1
     assert max(bm["max_tf"] for bm in r["block_meta"]) == 500
 
 

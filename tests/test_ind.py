@@ -153,8 +153,8 @@ def test_geometric_merge_policy_tier_local(spark, tmp_path):
     )
     idx.add_documents(batch(0, 512), doc_id_col="doc_id")
     base_meta = idx._meta()
-    assert base_meta["generations"][0]["merged"] == "merged"
-    base_mtime = os.path.getmtime(str(tmp_path / "geo" / "merged"))
+    assert base_meta["generations"][0]["term_stats"] == "term_stats"
+    base_mtime = os.path.getmtime(str(tmp_path / "geo" / "term_stats"))
 
     for k in range(3):  # three incremental adds with factor 2
         b = batch(0, 40)  # ids re-based internally
@@ -162,8 +162,9 @@ def test_geometric_merge_policy_tier_local(spark, tmp_path):
         gens = idx._meta()["generations"]
         assert len(gens) <= 2, gens
         # the base generation is never rewritten by tier-local merges
-        assert os.path.getmtime(str(tmp_path / "geo" / "merged")) == base_mtime
-        assert any(g["merged"] == "merged" for g in gens)
+        ts_mtime = os.path.getmtime(str(tmp_path / "geo" / "term_stats"))
+        assert ts_mtime == base_mtime
+        assert any(g["term_stats"] == "term_stats" for g in gens)
 
     # global df/search correctness vs a from-scratch rebuild
     got = {
@@ -315,3 +316,84 @@ def test_phrase_df_stubs_cover_gap_pushed_segments(spark, tmp_path):
         PhraseQuery.of("content", ["grape", "lemon"], slop=1), k=5
     ).collect()
     assert [r["doc_id"] for r in sh] == [12] and sh[0]["score"] > 0
+
+
+def _assert_oracle_ranks(idx, rows, ids, queries):
+    """``idx`` ranks like an OracleIndex over ``rows`` (in doc-id order,
+    ``ids`` their engine doc ids): same ids, float32-identical scores."""
+    import numpy as np
+
+    oracle = OracleIndex(rows, FC)
+    for q in queries:
+        exp = [(ids[d], s) for d, s in oracle.search(q, k=10)]
+        got = [(r["doc_id"], r["score"]) for r in idx.search(q, k=10).collect()]
+        assert [d for d, _ in got] == [d for d, _ in exp], q
+        for (_, gs), (_, es) in zip(got, exp):
+            assert np.float32(gs) == np.float32(es), q
+
+
+def test_older_layout_index_opens_adds_and_optimizes(spark, tmp_path):
+    """An index in the layout older builds wrote — a merged/ posting copy at
+    the root and in each generation, generations naming them, a 'merged'
+    manifest row and stats without the exact doc-length sums — opens with
+    no Spark job, ranks like the oracle, takes an add that tier-merges, and
+    optimizes. No merged/ directory outlives its generation or optimize."""
+    import json
+    import os
+
+    from ferret_spark.segments import append_manifest, read_table
+    from tests.conftest import jobs_in_group
+
+    path = str(tmp_path / "old")
+    idx = FerretIndex(spark, path, FC, seg_size=2, merge_factor=2)
+    idx.add_documents(spark.createDataFrame(ROWS_A), doc_id_col="doc_id")
+    idx.add_documents(spark.createDataFrame(ROWS_B), doc_id_col="doc_id")
+    meta = idx._meta()
+    postings = read_table(spark, os.path.join(path, "segments")).drop("seg_id")
+    for g in meta["generations"]:
+        g["merged"] = os.path.join(os.path.dirname(g["term_stats"]), "merged")
+        postings.write.parquet(os.path.join(path, g["merged"]))
+    old_gen_merged = os.path.join(path, meta["generations"][1]["merged"])
+    for k in ("dl_docs", "dl_sum"):
+        del meta["stats"][k]
+    meta["merged_stale"] = False
+    with open(os.path.join(path, "meta.json"), "w") as f:
+        json.dump(meta, f)
+    append_manifest(spark, path, "merged", {"rows": 1})
+
+    sc = spark.sparkContext
+    sc.setJobGroup("old_open", "old_open")
+    try:
+        old = FerretIndex(spark, path, merge_factor=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs_in_group(sc, "old_open") == []
+
+    rows = [{"content": r["content"]} for r in ROWS_A + ROWS_B]
+    ids = [0, 1, 2, 4, 5]
+    queries = [
+        T("apple"), T("fig"),
+        BooleanQuery.of((T("apple"), MUST), (T("egg"), MUST)),
+    ]
+    _assert_oracle_ranks(old, rows, ids, queries)
+
+    rows_c = [
+        {"doc_id": 0, "content": "apple kiwi"},
+        {"doc_id": 1, "content": "kiwi lemon apple apple"},
+    ]
+    old.add_documents(spark.createDataFrame(rows_c), doc_id_col="doc_id")
+    gens = old._meta()["generations"]
+    assert len(gens) == 2  # base + the tier merge of the two small ones
+    assert not os.path.exists(old_gen_merged)
+    assert "dl_sum" in old._meta()["stats"]
+    rows += [{"content": r["content"]} for r in rows_c]
+    ids += [6, 7]
+    _assert_oracle_ranks(old, rows, ids, queries + [T("kiwi")])
+
+    old.optimize()
+    leftovers = [
+        d for d, sub, _f in os.walk(path) if os.path.basename(d) == "merged"
+    ]
+    assert leftovers == []
+    assert old._meta()["generations"] == [{"term_stats": "term_stats", "rows": 7}]
+    _assert_oracle_ranks(old, rows, ids, queries + [T("kiwi")])

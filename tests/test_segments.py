@@ -1,6 +1,6 @@
-"""Segmented compressed index: rank-identity vs oracle, merge correctness,
-manifest/resume (north_rule: segments + compression + hierarchical salted
-merge + resume)."""
+"""Segmented compressed index: rank-identity vs oracle, postings
+correctness, manifest/resume (north_rule: segments + compression +
+hierarchical term-dictionary merge + resume)."""
 
 import numpy as np
 import pytest
@@ -20,7 +20,12 @@ from ferret_spark.query import (
     RangeQuery,
     TermQuery,
 )
-from ferret_spark.segments import SegmentIndex, SegmentIndexBuilder, read_manifest
+from ferret_spark.segments import (
+    SegmentIndex,
+    SegmentIndexBuilder,
+    append_manifest,
+    read_manifest,
+)
 
 from tests.test_search_spark import GOLDEN_QUERIES, SYNTH_QUERIES, T
 
@@ -56,12 +61,12 @@ def test_golden_segment_rank_identity(golden_seg, name, q):
 
 
 def test_merged_postings_match_oracle(golden_seg):
+    """Each term's segment rows, decoded and concatenated in seg_id
+    order, are the oracle's global posting list; term_stats holds its df."""
     oracle, sidx = golden_seg
-    rows = sidx.merged.where(
-        (sidx.merged.field == "content")
-    ).collect()
+    rows = sidx.segments.where(sidx.segments.field == "content").collect()
     got = {}
-    for r in rows:
+    for r in sorted(rows, key=lambda r: r["seg_id"]):
         row = {
             "doc_bin": bytes(r["doc_bin"]),
             "tf_bin": bytes(r["tf_bin"]),
@@ -71,8 +76,13 @@ def test_merged_postings_match_oracle(golden_seg):
             "df": r["df"],
         }
         ids, tfs, pos, dls = decode_posting_list(row)
-        got[r["term"]] = (ids.tolist(), tfs.tolist(), [p.tolist() for p in pos])
+        g = got.setdefault(r["term"], ([], [], []))
+        g[0].extend(ids.tolist())
+        g[1].extend(tfs.tolist())
+        g[2].extend(p.tolist() for p in pos)
     want = oracle.postings["content"]
+    dfs = sidx.doc_freqs([("content", t) for t in want])
+    assert dfs == {("content", t): len(p) for t, p in want.items()}
     assert set(got.keys()) == set(want.keys())
     for term, plist in want.items():
         ids = [d for d, _, _ in plist]
@@ -115,44 +125,58 @@ def test_wand_prune_parity(synth_seg):
     assert_seg_rank_identical(oracle, sidx, q, k=10)
 
 
-def test_resume_after_crash(spark, tmp_path_factory):
+@pytest.fixture(scope="module")
+def resume_full(spark, tmp_path_factory):
+    """An uninterrupted build the resumed ones must answer like."""
     pdf = synth_corpus_pdf(50, mu=2.5, sigma=0.5)
-    fc = {"content": "letter"}
     corpus = spark.createDataFrame(pdf)
+    path = str(tmp_path_factory.mktemp("resume_a"))
+    full = SegmentIndexBuilder(spark, path, {"content": "letter"}, seg_size=8)
+    return corpus, full.build(corpus, id_cols=("repo", "path", "commit"))
 
-    path_a = str(tmp_path_factory.mktemp("resume_a"))
+
+@pytest.mark.parametrize(
+    "stop_after", ["docs", "segments", "term_stats", "old_merged"]
+)
+def test_resume_after_crash(spark, tmp_path_factory, resume_full, stop_after):
+    """Kill the build after each stage but the last, then resume.
+    ``old_merged`` is an older build killed after its merged stage: the
+    manifest says 'merged' done and 'term_stats' not."""
+    corpus, full = resume_full
+    ids = ("repo", "path", "commit")
     path_b = str(tmp_path_factory.mktemp("resume_b"))
-
-    # uninterrupted build
-    full = SegmentIndexBuilder(spark, path_a, fc, seg_size=8).build(
-        corpus, id_cols=("repo", "path", "commit")
+    crash_builder = SegmentIndexBuilder(
+        spark, path_b, {"content": "letter"}, seg_size=8
     )
-    # crash after 'segments', then resume
-    crash_builder = SegmentIndexBuilder(spark, path_b, fc, seg_size=8)
-    out = crash_builder.build(
-        corpus, id_cols=("repo", "path", "commit"), stop_after="segments"
-    )
+    stages = SegmentIndexBuilder.STAGES
+    if stop_after == "old_merged":
+        out = crash_builder.build(corpus, id_cols=ids, stop_after="segments")
+        append_manifest(spark, path_b, "merged", {"rows": 1})
+        want = {"docs", "segments", "merged"}
+    else:
+        out = crash_builder.build(corpus, id_cols=ids, stop_after=stop_after)
+        want = set(stages[: stages.index(stop_after) + 1])
     assert out is None
     m = read_manifest(spark, path_b)
-    assert set(m.keys()) == {"docs", "segments"}
-    seg_mtime_before = m["segments"]["ts"]
-    resumed = crash_builder.build(corpus, id_cols=("repo", "path", "commit"))
+    assert set(m) == want
+    resumed = crash_builder.build(corpus, id_cols=ids)
     m2 = read_manifest(spark, path_b)
-    assert set(m2.keys()) == {"docs", "segments", "merged", "term_stats", "meta"}
+    assert set(m2) == want | set(stages)
     # earlier stages were NOT recomputed (same manifest timestamp)
-    assert m2["segments"]["ts"] == seg_mtime_before
+    assert all(m2[s]["ts"] == m[s]["ts"] for s in want)
 
     # resumed index answers identically to the uninterrupted one
     q = BooleanQuery.of((T("def"), MUST), (T("return"), SHOULD))
     a = [(r["doc_id"], r["score"]) for r in full.search(q, k=10).collect()]
     b = [(r["doc_id"], r["score"]) for r in resumed.search(q, k=10).collect()]
     assert a == b
+    assert resumed.stats == full.stats
 
 
 def test_manifest_metrics(golden_seg, spark):
     _, sidx = golden_seg
     m = read_manifest(spark, sidx.path)
-    for stage in ["docs", "segments", "merged", "term_stats", "meta"]:
+    for stage in ["docs", "segments", "term_stats", "meta"]:
         assert m[stage]["status"] == "done"
         assert m[stage]["elapsed_sec"] >= 0
     assert m["docs"]["rows"] == 18

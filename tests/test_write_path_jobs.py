@@ -1,9 +1,11 @@
 """Build, reader open and incremental add run no metadata jobs: tables the
 library wrote are read with the schema their footers record, an add
-computes its batch once and sizes its merge by the batch, and doc-id
+computes its batch once, sizes its doc-id window and its term_stats by the
+batch and folds only the batch into the corpus stats, and doc-id
 assignment holds its bucket offsets in the plan."""
 
 import os
+import re
 
 import pandas as pd
 import pytest
@@ -11,10 +13,15 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ferret_spark import build as B
-from ferret_spark import ind
+from ferret_spark import ind, segments
 from ferret_spark.ind import FerretIndex
-from ferret_spark.query import TermQuery
-from ferret_spark.segments import SegmentIndex, read_manifest, read_table
+from ferret_spark.segments import (
+    SegmentIndex,
+    SegmentIndexBuilder,
+    data_files,
+    read_manifest,
+    read_table,
+)
 
 from tests.conftest import jobs_in_group
 
@@ -54,8 +61,7 @@ def test_read_table_schema_equals_inference(spark, fidx, tmp_path):
     foreign = str(tmp_path / "foreign")
     os.makedirs(foreign)
     pd.DataFrame({"doc_id": [1, 2]}).to_parquet(f"{foreign}/part-0.parquet")
-    tables = ["docs", "segments", "merged", "term_stats", "deleted",
-              gen["merged"], gen["term_stats"]]
+    tables = ["docs", "segments", "term_stats", "deleted", gen["term_stats"]]
     for p in [os.path.join(fidx.path, t) for t in tables] + [empty, foreign]:
         assert read_table(spark, p).schema == spark.read.parquet(p).schema, p
 
@@ -111,11 +117,11 @@ def test_add_jobs_bounded(spark, fidx):
     one = spark.createDataFrame(_rows(100, 5))
     jobs = _in_group(sc, "add_plain", lambda: fidx.add_documents(one, id_cols=["commit"]))
     assert len(fidx._meta()["generations"]) == 2
-    assert len(jobs) <= 6, jobs
+    assert len(jobs) <= 4, jobs
     two = spark.createDataFrame(_rows(200, 5))
     jobs = _in_group(sc, "add_tier", lambda: fidx.add_documents(two, id_cols=["commit"]))
     assert len(fidx._meta()["generations"]) == 2  # three collapsed to two
-    assert len(jobs) <= 10, jobs
+    assert len(jobs) <= 5, jobs
 
 
 def test_open_runs_no_job(spark, fidx):
@@ -140,29 +146,81 @@ def test_add_leaves_no_persisted_frame(spark, fidx, monkeypatch):
     assert jsc.getPersistentRDDs().size() == before
 
 
-def test_late_add_takes_single_concat_stage(spark, tmp_path, monkeypatch):
-    """An add past segment 64 merges its own one-segment batch in one
-    concat stage; counting segments from 0 took the salted two-stage
-    merge."""
-    idx = FerretIndex(spark, str(tmp_path / "late"), FC, seg_size=2, salt_buckets=8)
-    rows = [{"doc_id": i, "content": f"alpha w{i}"} for i in range(130)]
-    idx.add_documents(spark.createDataFrame(rows), doc_id_col="doc_id")
+def test_add_generation_reads_only_term_columns(spark, fidx, monkeypatch):
+    """An add's generation is the batch's term_stats: its plan reads only
+    field, term and df of the batch's segment rows and runs no Python (the
+    posting-byte concat it replaced was a MapInPandas)."""
     plans = []
-    real = ind.write_generation
+    real = segments.term_stats_frame
 
-    def spy(spark_, root, gname, merged, rows_):
-        plans.append(merged._jdf.queryExecution().executedPlan().toString())
-        return real(spark_, root, gname, merged, rows_)
+    def spy(rows, n_rows):
+        out = real(rows, n_rows)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
 
-    monkeypatch.setattr(ind, "write_generation", spy)
-    idx.add_documents(
-        spark.createDataFrame([{"doc_id": 0, "content": "alpha beta"}]),
-        doc_id_col="doc_id",
-    )
-    assert idx._meta()["id_ranges"][-1][0] // 2 >= 65
-    assert [p.count("MapInPandas") for p in plans] == [1]
-    beta = TermQuery(field="content", term="beta")
-    assert {r["doc_id"] for r in idx.search(beta, k=None).collect()} == {130}
+    monkeypatch.setattr(segments, "term_stats_frame", spy)
+    fidx.add_documents(spark.createDataFrame(_rows(100, 5)), id_cols=["commit"])
+    assert len(plans) == 1
+    assert "MapInPandas" not in plans[0]
+    scan = next(ln for ln in plans[0].splitlines() if "TableScan" in ln)
+    cols = re.findall(r"(\w+)#\d+", scan.split("TableScan", 1)[1].split("]")[0])
+    assert sorted(cols) == ["df", "field", "term"], scan
+
+
+def test_one_segment_add_appends_one_docs_file(spark, fidx):
+    """The doc-id window is sized by the batch: a one-segment add writes one
+    docs/ file (one per shuffle partition before), its ids unchanged, and
+    the window plans no exchange past its own."""
+    docs_dir = os.path.join(fidx.path, "docs")
+    before = set(data_files(docs_dir))
+    batch = spark.createDataFrame(_rows(100, 40))
+    fidx.add_documents(batch, id_cols=["commit"])
+    new = sorted(set(data_files(docs_dir)) - before)
+    assert len(new) == 1, new
+    base = fidx._meta()["id_ranges"][-1][0]
+    got = {r["commit"]: r["doc_id"] for r in spark.read.parquet(*new).collect()}
+    want = {
+        r["commit"]: r["doc_id"] + base
+        for r in _assign_doc_ids_broadcast(batch, ["commit"]).collect()
+    }
+    assert got == want
+    ids = B.assign_doc_ids(batch, ["commit"], seg_size=64)
+    assert ids.rdd.getNumPartitions() == 1
+    assert ids._jdf.queryExecution().executedPlan().toString().count("Exchange") == 1
+
+
+def _varied(lo, n):
+    return [
+        {"commit": f"c{i:05d}", "content": " ".join(f"t{j}" for j in range(i % 7 + 1))}
+        for i in range(lo, lo + n)
+    ]
+
+
+def test_add_stats_fold_only_the_batch(spark, tmp_path, monkeypatch):
+    """After three adds the corpus stats equal a from-scratch build's
+    exactly (float avgdl included), and an add decodes the doc-length
+    markers of only the segment files it appended."""
+    idx = FerretIndex(spark, str(tmp_path / "fold"), FC, seg_size=16, merge_factor=2)
+    idx.add_documents(spark.createDataFrame(_varied(0, 40)), id_cols=["commit"])
+    for lo, n in ((100, 7), (200, 9)):
+        idx.add_documents(spark.createDataFrame(_varied(lo, n)), id_cols=["commit"])
+    seen = []
+    real = ind.marker_sums
+
+    def spy(spark_, files):
+        seen.append(sorted(files))
+        return real(spark_, files)
+
+    monkeypatch.setattr(ind, "marker_sums", spy)
+    seg_dir = os.path.join(idx.path, "segments")
+    before = set(data_files(seg_dir))
+    idx.add_documents(spark.createDataFrame(_varied(300, 20)), id_cols=["commit"])
+    assert seen == [sorted(set(data_files(seg_dir)) - before)]
+    rebuilt = SegmentIndexBuilder(
+        spark, str(tmp_path / "fold_rebuilt"), FC, seg_size=16
+    ).build(idx.index.docs.select("doc_id", "content"), doc_id_col="doc_id")
+    assert idx.index.stats == rebuilt.stats
+    assert idx.index.stats["avgdl"]["content"] == 300 / 76
 
 
 def test_manifest_records_merge_fanout(spark, fidx):
