@@ -165,6 +165,8 @@ def test_geometric_merge_policy_tier_local(spark, tmp_path):
         ts_mtime = os.path.getmtime(str(tmp_path / "geo" / "term_stats"))
         assert ts_mtime == base_mtime
         assert any(g["term_stats"] == "term_stats" for g in gens)
+    # no posting byte was written twice: no merged/ copy anywhere
+    assert not [d for d, _s, _f in os.walk(idx.path) if d.endswith("merged")]
 
     # global df/search correctness vs a from-scratch rebuild
     got = {
