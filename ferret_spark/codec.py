@@ -1,27 +1,36 @@
 """Posting-list compression: delta + variable-byte, numpy-vectorized.
 
+This module is the only one that knows the posting-row format: it holds
+the one encoder (encode_segment_terms, with encode_posting_list as its
+one-term form), the one decoder (decode_posting_list) and the one adapter
+from a stored row to a codec row (posting_row).
+
 Format semantics from the reference (WHAT):
 - vbyte: LSB-first 7-bit groups, high bit = continuation
   (os_write_vint c/src/store.c:545-561, read c/src/store.c:348-360)
 - doc ids delta-encoded; positions delta-encoded per doc
   (dw_flush c/src/index.c:5414-5447, .frq/.prx layout c/FileFormat.txt:68-110)
-- skip structure replaced by block-max metadata: per BLOCK_SIZE docs store
-  (first_doc, last_doc, max_tf, min_dl, byte offsets) -> parquet-friendly
-  block bounds (skip lists c/src/index.c:2999-3065); the segment scorer
-  scores every hit and reads no bound today
+- the skip lists (c/src/index.c:2999-3065) are replaced by per-block
+  metadata, one parquet struct per BLOCK_SIZE docs
 
-Layout per (term) row:
-  doc_bin: per block, vbyte stream of [first_doc_delta0=first_doc-block_first
-           (always 0 by construction, stored as first_doc absolute? no --
-           deltas are relative to block_meta.first_doc, first entry delta 0]
-  Actually: block deltas are [doc_i - doc_{i-1}] with doc_{-1} =
-  block_meta.first_doc and the first stored doc IS first_doc, so the first
-  delta is 0 — blocks are self-contained, so shifting a row's doc ids
-  (add_index) rewrites only block_meta, never the streams.
-  tf_bin:  vbyte stream of tf per doc (block-aligned offsets)
-  pos_bin: per doc, vbyte stream of position deltas (first absolute)
-  block_meta: list of dicts/structs
-    (first, last, count, max_tf, doc_off, tf_off, pos_off, pos_len)
+Layout of one posting row (the postings of one term in one segment, or a
+field's doc-length marker row), each stream one vbyte run over the row's
+docs in id order:
+  doc_bin:    doc id deltas, doc_i - doc_{i-1}, except that the first doc
+              of every block stores 0: its id is block_meta.first. Blocks
+              are self-contained, so shifting a row's doc ids (add_index)
+              rewrites only block_meta.first/last, never the streams.
+  tf_bin:     tf per doc
+  pos_bin:    per doc, its tf position deltas, the first one absolute;
+              empty for keyword fields and marker rows
+  dl_bin:     BM25 doc length per doc
+  block_meta: one struct per block (BLOCK_META_TYPE)
+
+The decoder reads only block_meta.first and .count: it decodes each
+stream in one pass and re-bases the doc ids per block. The other fields
+are written for a later decoder that skips blocks: last, the block-max
+bounds max_tf and min_dl, and each block's byte range (*_off, *_len,
+offsets relative to the row's stream) in every stream.
 """
 
 from __future__ import annotations
@@ -29,6 +38,14 @@ from __future__ import annotations
 import numpy as np
 
 BLOCK_SIZE = 128
+
+BLOCK_META_TYPE = (
+    "array<struct<first:long,last:long,count:int,max_tf:int,"
+    "min_dl:int,doc_off:long,doc_len:long,tf_off:long,tf_len:long,"
+    "pos_off:long,pos_len:long,dl_off:long,dl_len:long>>"
+)
+# a codec row's keys, in the order of the segment schema's posting columns
+POSTING_COLUMNS = ["df", "doc_bin", "tf_bin", "pos_bin", "dl_bin", "block_meta"]
 
 
 # ---------------------------------------------------------------------------
@@ -74,342 +91,194 @@ def vbyte_encode(vals: np.ndarray) -> np.ndarray:
 def vbyte_decode(buf: np.ndarray) -> np.ndarray:
     """uint8 vbyte stream -> uint64 array."""
     arr = np.frombuffer(buf, dtype=np.uint8) if isinstance(buf, (bytes, bytearray)) else buf
-    if len(arr) == 0:
-        return np.empty(0, dtype=np.uint64)
-    is_last = (arr & 0x80) == 0
-    ends = np.flatnonzero(is_last)
+    ends = np.flatnonzero(arr < 0x80)
+    if len(ends) == len(arr):
+        # all values < 128 (the common case for doc deltas and tfs)
+        return arr.astype(np.uint64)
     starts = np.concatenate(([0], ends[:-1] + 1))
     lengths = ends - starts + 1
-    within = np.arange(len(arr), dtype=np.int64) - np.repeat(starts, lengths)
-    contrib = (arr & np.uint8(0x7F)).astype(np.uint64) << (
-        np.uint64(7) * within.astype(np.uint64)
-    )
-    return np.add.reduceat(contrib, starts)
+    low = (arr & np.uint8(0x7F)).astype(np.uint64)
+    vals = low[starts]
+    for j in range(1, int(lengths.max())):
+        more = np.flatnonzero(lengths > j)
+        vals[more] |= low[starts[more] + j] << np.uint64(7 * j)
+    return vals
 
 
 # ---------------------------------------------------------------------------
-# posting-list rows
+# posting rows
 
 
-def encode_posting_list_flat(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    pos_flat: np.ndarray | None,
-    doc_lens: np.ndarray | None = None,
-) -> dict:
-    """Fully vectorized encoder. ``pos_flat`` is the concatenation of each
-    doc's sorted positions (doc i owns pos_flat[bounds[i]:bounds[i+1]] with
-    bounds = cumsum(tfs)). No per-doc Python in the hot path: the whole
-    position stream is delta'd and vbyte'd in one shot; per-block byte
-    offsets come from the per-value encoded lengths."""
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    tfs = np.asarray(tfs, dtype=np.int64)
-    if doc_lens is not None:
-        doc_lens = np.asarray(doc_lens, dtype=np.int64)
-    n = len(doc_ids)
-    assert n > 0
-
-    # --- position stream: delta within doc, absolute at each doc start
-    if pos_flat is not None:
-        pos_flat = np.asarray(pos_flat, dtype=np.int64)
-        bounds = np.concatenate(([0], np.cumsum(tfs)))
-        deltas = pos_flat.copy()
-        deltas[1:] -= pos_flat[:-1]
-        starts = bounds[:-1]
-        deltas[starts] = pos_flat[starts]
-        pos_stream = deltas.astype(np.uint64)
-        pos_byte_bounds = np.concatenate(
-            ([0], np.cumsum(vbyte_lengths(pos_stream)))
-        )
-        pos_bin_all = vbyte_encode(pos_stream)
-    else:
-        bounds = None
-        pos_bin_all = np.empty(0, dtype=np.uint8)
-
-    # --- doc id deltas: absolute->delta except block firsts (0)
-    n_blocks = (n + BLOCK_SIZE - 1) // BLOCK_SIZE
-    block_starts = np.arange(n_blocks) * BLOCK_SIZE
-    dd = np.empty(n, dtype=np.int64)
-    dd[0] = 0
-    dd[1:] = np.diff(doc_ids)
-    dd[block_starts] = 0  # first of each block is carried by block_meta.first
-    doc_byte_bounds = np.concatenate(
-        ([0], np.cumsum(vbyte_lengths(dd.astype(np.uint64))))
-    )
-    doc_bin_all = vbyte_encode(dd.astype(np.uint64))
-
-    tf_byte_bounds = np.concatenate(
-        ([0], np.cumsum(vbyte_lengths(tfs.astype(np.uint64))))
-    )
-    tf_bin_all = vbyte_encode(tfs.astype(np.uint64))
-
-    if doc_lens is not None:
-        dl_byte_bounds = np.concatenate(
-            ([0], np.cumsum(vbyte_lengths(doc_lens.astype(np.uint64))))
-        )
-        dl_bin_all = vbyte_encode(doc_lens.astype(np.uint64))
-    else:
-        dl_bin_all = np.empty(0, dtype=np.uint8)
-
-    block_meta = []
-    for bi in range(n_blocks):
-        b0 = bi * BLOCK_SIZE
-        b1 = min(b0 + BLOCK_SIZE, n)
-        if pos_flat is not None:
-            p_off = int(pos_byte_bounds[bounds[b0]])
-            p_len = int(pos_byte_bounds[bounds[b1]]) - p_off
-        else:
-            p_off = p_len = 0
-        block_meta.append(
-            {
-                "first": int(doc_ids[b0]),
-                "last": int(doc_ids[b1 - 1]),
-                "count": int(b1 - b0),
-                "max_tf": int(tfs[b0:b1].max()),
-                "min_dl": int(doc_lens[b0:b1].min()) if doc_lens is not None else 0,
-                "doc_off": int(doc_byte_bounds[b0]),
-                "doc_len": int(doc_byte_bounds[b1] - doc_byte_bounds[b0]),
-                "tf_off": int(tf_byte_bounds[b0]),
-                "tf_len": int(tf_byte_bounds[b1] - tf_byte_bounds[b0]),
-                "pos_off": p_off,
-                "pos_len": p_len,
-                "dl_off": int(dl_byte_bounds[b0]) if doc_lens is not None else 0,
-                "dl_len": (
-                    int(dl_byte_bounds[b1] - dl_byte_bounds[b0])
-                    if doc_lens is not None
-                    else 0
-                ),
-            }
-        )
+def posting_row(r) -> dict:
+    """The codec row of a stored posting row, given as a Spark Row, a
+    pandas record or a pyarrow ``to_pylist()`` dict: the streams as bytes
+    and block_meta as a list of dicts."""
     return {
-        "doc_bin": doc_bin_all.tobytes(),
-        "tf_bin": tf_bin_all.tobytes(),
-        "pos_bin": pos_bin_all.tobytes(),
-        "dl_bin": dl_bin_all.tobytes(),
-        "block_meta": block_meta,
-        "df": n,
+        "df": int(r["df"]),
+        "doc_bin": bytes(r["doc_bin"]),
+        "tf_bin": bytes(r["tf_bin"]),
+        "pos_bin": bytes(r["pos_bin"]),
+        "dl_bin": bytes(r["dl_bin"]),
+        "block_meta": [
+            bm.asDict() if hasattr(bm, "asDict") else bm for bm in r["block_meta"]
+        ],
     }
 
 
-def encode_posting_list(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    positions: list[np.ndarray] | None,
-    doc_lens: np.ndarray | None = None,
-) -> dict:
-    """List-of-arrays convenience wrapper over encode_posting_list_flat."""
-    pos_flat = (
-        np.concatenate([np.asarray(p, dtype=np.int64) for p in positions])
-        if positions is not None and len(positions)
-        else (np.empty(0, dtype=np.int64) if positions is not None else None)
-    )
-    return encode_posting_list_flat(doc_ids, tfs, pos_flat, doc_lens)
-
-
-def decode_posting_list(row: dict, with_positions=True):
-    """-> (doc_ids int64, tfs int64, positions, doc_lens int64 | None).
-
-    ``with_positions``:
-      - False: positions is None
-      - True:  positions is list[np.ndarray], one sorted array per doc
-      - "flat": positions is (pos_flat int64, bounds int64) — doc i's
-        positions are pos_flat[bounds[i]:bounds[i+1]].  The flat form is
-        the hot-path shape: per-doc delta cumsums are vectorized as ONE
-        global cumsum minus the running total before each doc (no Python
-        loop over the posting list)."""
-    doc_arr = np.frombuffer(row["doc_bin"], dtype=np.uint8)
-    tf_arr = np.frombuffer(row["tf_bin"], dtype=np.uint8)
-    pos_arr = np.frombuffer(row["pos_bin"], dtype=np.uint8)
-    dl_arr = np.frombuffer(row.get("dl_bin", b""), dtype=np.uint8)
-    ids_out, tfs_out, pos_out, dl_out = [], [], [], []
-    has_dl = False
-    for bm in row["block_meta"]:
-        deltas = vbyte_decode(doc_arr[bm["doc_off"] : bm["doc_off"] + bm["doc_len"]])
-        ids = np.cumsum(deltas.astype(np.int64)) + bm["first"]
-        tfs = vbyte_decode(tf_arr[bm["tf_off"] : bm["tf_off"] + bm["tf_len"]]).astype(
-            np.int64
-        )
-        ids_out.append(ids)
-        tfs_out.append(tfs)
-        if bm.get("dl_len"):
-            has_dl = True
-            dl_out.append(
-                vbyte_decode(
-                    dl_arr[bm["dl_off"] : bm["dl_off"] + bm["dl_len"]]
-                ).astype(np.int64)
-            )
-        if with_positions and bm["pos_len"]:
-            flat = vbyte_decode(
-                pos_arr[bm["pos_off"] : bm["pos_off"] + bm["pos_len"]]
-            ).astype(np.int64)
-            bounds = np.concatenate(([0], np.cumsum(tfs)))
-            # per-doc cumsum of position deltas, vectorized: global
-            # cumsum minus the total accumulated before each doc's start.
-            # Encoder invariant: every doc in a positional block has
-            # tf >= 1 — a zero tf would make bounds[i] - 1 wrap to the
-            # previous (or last) doc and silently corrupt every following
-            # position base, so fail loudly on malformed blocks instead.
-            if tfs.size and int(tfs.min()) <= 0:
-                raise ValueError(
-                    "corrupt posting block: tf == 0 alongside a position "
-                    "stream (position bases would be misaligned)"
-                )
-            fc = np.cumsum(flat)
-            if len(tfs) > 1:
-                base = np.concatenate(([0], fc[bounds[1:-1] - 1]))
-            else:
-                base = np.zeros(1, dtype=np.int64)
-            pos_out.append(fc - np.repeat(base, tfs))
-    doc_ids = np.concatenate(ids_out)
-    tfs = np.concatenate(tfs_out)
-    positions = None
-    if with_positions:
-        if not pos_out:
-            # positions-less rows (keyword fields): empty list / empty
-            # flat pair, NOT per-doc empties — re-encode paths rely on
-            # falsy `pos` meaning "no position stream"
-            positions = (
-                (np.empty(0, dtype=np.int64), np.zeros(1, dtype=np.int64))
-                if with_positions == "flat"
-                else []
-            )
-        else:
-            pos_flat = np.concatenate(pos_out)
-            gbounds = np.concatenate(([0], np.cumsum(tfs)))
-            if with_positions == "flat":
-                positions = (pos_flat, gbounds)
-            else:
-                positions = [
-                    pos_flat[gbounds[i] : gbounds[i + 1]]
-                    for i in range(len(tfs))
-                ]
-    return (
-        doc_ids,
-        tfs,
-        positions,
-        (np.concatenate(dl_out) if has_dl else None),
-    )
-
-
-_BM_ORDER = [
-    "first", "last", "count", "max_tf", "min_dl",
-    "doc_off", "doc_len", "tf_off", "tf_len",
-    "pos_off", "pos_len", "dl_off", "dl_len",
-]
+def _stream(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """-> (vbyte stream of ``vals``, byte offset of each value plus the
+    total at the end)."""
+    vals = vals.astype(np.uint64)
+    return vbyte_encode(vals), np.concatenate(([0], np.cumsum(vbyte_lengths(vals))))
 
 
 def encode_segment_terms(
     udocs: np.ndarray,
     tfs: np.ndarray,
-    dls: np.ndarray,
+    dls: np.ndarray | None,
     term_starts: np.ndarray,
     pos_flat: np.ndarray | None,
-):
-    """Batch-encode EVERY term of a segment in four vectorized vbyte passes
-    (one per stream) instead of per-term calls — byte-identical to running
-    encode_posting_list_flat per term.
+) -> list[tuple]:
+    """Encode the posting rows of many terms in one vectorized pass per
+    stream.
 
-    Inputs are posting-major arrays sorted by (term, doc): udocs/tfs/dls
-    have one entry per (term, doc) posting; ``term_starts`` are posting
-    indices where each term begins; ``pos_flat`` holds each posting's
-    sorted positions back-to-back (posting i owns
-    pos_flat[tok_bounds[i]:tok_bounds[i+1]], tok_bounds = cumsum(tfs)).
+    Inputs are posting-major arrays sorted by (term, doc), with at least
+    one posting: udocs/tfs/dls hold one entry per (term, doc) posting;
+    ``term_starts`` are the posting indices where each term begins;
+    ``pos_flat`` holds each posting's sorted positions back-to-back
+    (posting i owns pos_flat[b[i]:b[i+1]], b = [0, *cumsum(tfs)]). With
+    ``dls`` None the rows get no dl stream; with ``pos_flat`` None or
+    empty, no position stream.
 
-    Returns (per-term list of (doc_bin, tf_bin, pos_bin, dl_bin,
-    block_meta_tuples, df)).
+    Returns one tuple per term, its values in POSTING_COLUMNS order.
     """
+    udocs = np.asarray(udocs, dtype=np.int64)
+    tfs = np.asarray(tfs, dtype=np.int64)
+    term_starts = np.asarray(term_starts, dtype=np.int64)
     P = len(udocs)
-    T = len(term_starts)
-    term_ends = np.concatenate((term_starts[1:], [P]))
-    sizes = term_ends - term_starts
-    rank = np.arange(P, dtype=np.int64) - np.repeat(term_starts, sizes)
-    block_start_mask = (rank % BLOCK_SIZE) == 0
-    bs = np.flatnonzero(block_start_mask)
-    be = np.concatenate((bs[1:], [P])) - 1
+    term_ends = np.append(term_starts[1:], P)
+    rank = np.arange(P, dtype=np.int64) - np.repeat(
+        term_starts, term_ends - term_starts
+    )
+    bs = np.flatnonzero(rank % BLOCK_SIZE == 0)  # block starts
+    be = np.append(bs[1:], P)  # block ends (exclusive)
 
-    # doc deltas (reset at block starts)
-    dd = np.empty(P, dtype=np.int64)
-    if P:
-        dd[0] = 0
-        dd[1:] = np.diff(udocs)
-        dd[bs] = 0
-    doc_lens_b = vbyte_lengths(dd.astype(np.uint64))
-    doc_cum = np.concatenate(([0], np.cumsum(doc_lens_b)))
-    doc_all = vbyte_encode(dd.astype(np.uint64))
-
-    tf_lens_b = vbyte_lengths(tfs.astype(np.uint64))
-    tf_cum = np.concatenate(([0], np.cumsum(tf_lens_b)))
-    tf_all = vbyte_encode(tfs.astype(np.uint64))
-
-    dl_lens_b = vbyte_lengths(dls.astype(np.uint64))
-    dl_cum = np.concatenate(([0], np.cumsum(dl_lens_b)))
-    dl_all = vbyte_encode(dls.astype(np.uint64))
-
-    tok_bounds = np.concatenate(([0], np.cumsum(tfs)))
-    if pos_flat is not None and len(pos_flat):
-        pd_ = pos_flat.astype(np.int64).copy()
-        pd_[1:] -= pos_flat[:-1]
-        starts_tok = tok_bounds[:-1]
-        pd_[starts_tok] = pos_flat[starts_tok]
-        pos_lens_b = vbyte_lengths(pd_.astype(np.uint64))
-        pos_cum = np.concatenate(([0], np.cumsum(pos_lens_b)))
-        pos_all = vbyte_encode(pd_.astype(np.uint64))
+    # byte offsets below are indexed by posting: cum[i] = bytes before
+    # posting i in its stream
+    dd = np.diff(udocs, prepend=0)
+    dd[bs] = 0  # a block's first id is carried by block_meta.first
+    doc_all, doc_cum = _stream(dd)
+    tf_all, tf_cum = _stream(tfs)
+    if dls is not None:
+        dls = np.asarray(dls, dtype=np.int64)
+        dl_all, dl_cum = _stream(dls)
+        min_dl = np.minimum.reduceat(dls, bs)
     else:
-        pos_cum = None
-        pos_all = np.empty(0, dtype=np.uint8)
+        dl_all, dl_cum = np.empty(0, dtype=np.uint8), np.zeros(P + 1, np.int64)
+        min_dl = np.zeros(len(bs), dtype=np.int64)
+    if pos_flat is not None and len(pos_flat):
+        pos_flat = np.asarray(pos_flat, dtype=np.int64)
+        tok_starts = np.concatenate(([0], np.cumsum(tfs)))
+        pos_deltas = np.diff(pos_flat, prepend=0)
+        pos_deltas[tok_starts[:-1]] = pos_flat[tok_starts[:-1]]
+        pos_all, pos_tok_cum = _stream(pos_deltas)
+        pos_cum = pos_tok_cum[tok_starts]
+    else:
+        pos_all, pos_cum = np.empty(0, dtype=np.uint8), np.zeros(P + 1, np.int64)
 
-    # per-block aggregates (global reduceat over block starts)
-    blk_max_tf = np.maximum.reduceat(tfs, bs) if len(bs) else np.empty(0)
-    blk_min_dl = np.minimum.reduceat(dls, bs) if len(bs) else np.empty(0)
-    blk_term = np.searchsorted(term_starts, bs, side="right") - 1
+    t0 = term_starts[np.searchsorted(term_starts, bs, side="right") - 1]
+    meta_cols = {
+        "first": udocs[bs],
+        "last": udocs[be - 1],
+        "count": be - bs,
+        "max_tf": np.maximum.reduceat(tfs, bs),
+        "min_dl": min_dl,
+    }
+    for name, cum in (("doc", doc_cum), ("tf", tf_cum), ("pos", pos_cum), ("dl", dl_cum)):
+        meta_cols[f"{name}_off"] = cum[bs] - cum[t0]
+        meta_cols[f"{name}_len"] = cum[be] - cum[bs]
+    names = list(meta_cols)
+    metas = [
+        dict(zip(names, vals))
+        for vals in zip(*(c.tolist() for c in meta_cols.values()))
+    ]
 
+    term_blocks = np.append(np.searchsorted(bs, term_starts), len(bs)).tolist()
+    doc_cum, tf_cum, pos_cum, dl_cum = (
+        c.tolist() for c in (doc_cum, tf_cum, pos_cum, dl_cum)
+    )
     out = []
-    bi = 0
-    n_blocks = len(bs)
-    for t in range(T):
-        s_p, e_p = int(term_starts[t]), int(term_ends[t])
-        d0, d1 = int(doc_cum[s_p]), int(doc_cum[e_p])
-        t0, t1 = int(tf_cum[s_p]), int(tf_cum[e_p])
-        l0, l1 = int(dl_cum[s_p]), int(dl_cum[e_p])
-        if pos_cum is not None:
-            p0 = int(pos_cum[tok_bounds[s_p]])
-            p1 = int(pos_cum[tok_bounds[e_p]])
-        else:
-            p0 = p1 = 0
-        metas = []
-        while bi < n_blocks and blk_term[bi] == t:
-            b_s, b_e = int(bs[bi]), int(be[bi])
-            if pos_cum is not None:
-                pb0 = int(pos_cum[tok_bounds[b_s]]) - p0
-                pb1 = int(pos_cum[tok_bounds[b_e + 1]]) - p0
-            else:
-                pb0 = pb1 = 0
-            metas.append(
-                (
-                    int(udocs[b_s]),            # first
-                    int(udocs[b_e]),            # last
-                    b_e - b_s + 1,              # count
-                    int(blk_max_tf[bi]),        # max_tf
-                    int(blk_min_dl[bi]),        # min_dl
-                    int(doc_cum[b_s]) - d0,     # doc_off
-                    int(doc_cum[b_e + 1] - doc_cum[b_s]),  # doc_len
-                    int(tf_cum[b_s]) - t0,      # tf_off
-                    int(tf_cum[b_e + 1] - tf_cum[b_s]),    # tf_len
-                    pb0,                        # pos_off
-                    pb1 - pb0,                  # pos_len
-                    int(dl_cum[b_s]) - l0,      # dl_off
-                    int(dl_cum[b_e + 1] - dl_cum[b_s]),    # dl_len
-                )
-            )
-            bi += 1
+    for t, (s, e) in enumerate(zip(term_starts.tolist(), term_ends.tolist())):
         out.append(
             (
-                doc_all[d0:d1].tobytes(),
-                tf_all[t0:t1].tobytes(),
-                pos_all[p0:p1].tobytes() if pos_cum is not None else b"",
-                dl_all[l0:l1].tobytes(),
-                metas,
-                e_p - s_p,
+                e - s,
+                doc_all[doc_cum[s] : doc_cum[e]].tobytes(),
+                tf_all[tf_cum[s] : tf_cum[e]].tobytes(),
+                pos_all[pos_cum[s] : pos_cum[e]].tobytes(),
+                dl_all[dl_cum[s] : dl_cum[e]].tobytes(),
+                metas[term_blocks[t] : term_blocks[t + 1]],
             )
         )
     return out
+
+
+def encode_posting_list(
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    pos_flat: np.ndarray | None = None,
+    doc_lens: np.ndarray | None = None,
+) -> dict:
+    """The codec row of one term: encode_segment_terms over a single term.
+    ``pos_flat`` holds each doc's sorted positions back-to-back."""
+    enc = encode_segment_terms(doc_ids, tfs, doc_lens, [0], pos_flat)[0]
+    return dict(zip(POSTING_COLUMNS, enc))
+
+
+def decode_posting_list(row: dict, with_positions=True):
+    """-> (doc_ids int64, tfs int64, positions, doc_lens int64 | None).
+
+    One vbyte_decode per stream. ``with_positions``:
+      - False: positions is None
+      - True:  positions is list[np.ndarray], one sorted array per doc
+      - "flat": positions is (pos_flat int64, bounds int64) — doc i's
+        positions are pos_flat[bounds[i]:bounds[i+1]]
+    A row without a position stream (keyword fields, markers) gives []
+    or (empty, [0]), not per-doc empties: re-encode paths rely on falsy
+    positions meaning "no position stream". doc_lens is None when the
+    row has no dl stream."""
+    bms = row["block_meta"]
+    first = np.fromiter((bm["first"] for bm in bms), np.int64, len(bms))
+    count = np.fromiter((bm["count"] for bm in bms), np.int64, len(bms))
+    # a block's first delta is 0, so one cumsum over the row re-based at
+    # each block start gives every id
+    doc_ids = np.cumsum(vbyte_decode(row["doc_bin"]).astype(np.int64))
+    block_starts = np.cumsum(count) - count
+    doc_ids += np.repeat(first - doc_ids[block_starts], count)
+    tfs = vbyte_decode(row["tf_bin"]).astype(np.int64)
+    dl_bin = row["dl_bin"]
+    doc_lens = vbyte_decode(dl_bin).astype(np.int64) if len(dl_bin) else None
+    positions = None
+    if with_positions:
+        pos = vbyte_decode(row["pos_bin"]).astype(np.int64)
+        if len(pos):
+            # Encoder invariant: every doc of a positional row has tf >= 1
+            # — a zero tf would make bounds[i] - 1 point into the previous
+            # doc and silently corrupt every following position base, so
+            # fail loudly on malformed rows instead.
+            if int(tfs.min()) <= 0:
+                raise ValueError(
+                    "corrupt posting row: tf == 0 alongside a position "
+                    "stream (position bases would be misaligned)"
+                )
+            bounds = np.concatenate(([0], np.cumsum(tfs)))
+            # per-doc cumsum of the deltas: one cumsum over the row minus
+            # the total before each doc's first position
+            fc = np.cumsum(pos)
+            pos = fc - np.repeat(np.concatenate(([0], fc[bounds[1:-1] - 1])), tfs)
+        else:
+            bounds = np.zeros(1, dtype=np.int64)
+        if with_positions == "flat":
+            positions = (pos, bounds)
+        else:
+            positions = [pos[bounds[i] : bounds[i + 1]] for i in range(len(bounds) - 1)]
+    return doc_ids, tfs, positions, doc_lens

@@ -675,7 +675,7 @@ def _doc_postings_many(index, pairs, doc_ids):
         return infos
     pair_cond = _exact_pair_cond(pairs)
     if hasattr(index, "segments"):
-        from ferret_spark.codec import decode_posting_list
+        from ferret_spark.codec import decode_posting_list, posting_row
 
         by_seg: dict[int, list] = {}
         for d in doc_ids:
@@ -684,15 +684,7 @@ def _doc_postings_many(index, pairs, doc_ids):
             F.col("seg_id").isin(sorted(by_seg)) & pair_cond
         ).collect()
         for r in rows:
-            row = {
-                "doc_bin": bytes(r["doc_bin"]),
-                "tf_bin": bytes(r["tf_bin"]),
-                "pos_bin": bytes(r["pos_bin"]),
-                "dl_bin": bytes(r["dl_bin"]),
-                "block_meta": [bm.asDict() for bm in r["block_meta"]],
-                "df": r["df"],
-            }
-            ids, tfs, pos, dls = decode_posting_list(row)
+            ids, tfs, pos, dls = decode_posting_list(posting_row(r))
             for d in by_seg[r["seg_id"]]:
                 hit = np.flatnonzero(ids == d)
                 if len(hit):

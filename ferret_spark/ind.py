@@ -197,8 +197,8 @@ class FerretIndex:
         """Bulk-append another prebuilt index WITHOUT re-tokenizing
         (iw_add_readers analog, c/src/index.c:6530-6750): compressed
         posting bytes copy verbatim; only the absolute ids in block_meta
-        shift by the id base (the codec's delta streams are
-        block-relative). The other index's summed term_stats become one
+        shift by the id base (the codec's blocks are self-contained), in
+        one Spark projection. The other index's summed term_stats become one
         new merge generation (a df does not change when doc ids shift);
         global stats fold in the shifted doc-length markers."""
         from ferret_spark.segments import shift_posting_rows
@@ -440,8 +440,12 @@ class FerretIndex:
         """Expunge deletions by rewriting segments (decode -> drop ->
         re-encode), rebuild one base term_stats + stats, clear the
         deletion list. Doc ids are preserved."""
-        from ferret_spark.codec import decode_posting_list, encode_posting_list
-        from ferret_spark.segments import SEGMENT_SCHEMA, _bm_dicts, _bm_tuples
+        from ferret_spark.codec import (
+            decode_posting_list,
+            encode_posting_list,
+            posting_row,
+        )
+        from ferret_spark.segments import SEGMENT_COLUMNS, SEGMENT_SCHEMA
 
         deleted_df = self.deleted_df()
         has_deletes = deleted_df is not None
@@ -455,55 +459,26 @@ class FerretIndex:
             del_rows = _pack_deleted(deleted_df, self.seg_size, segs.schema)
 
             def rewrite(key, pdf):  # no hints: pyspark warns on partial grouped-map hints
-                ids_del = np.empty(0, dtype=np.int64)
-                for _, r in pdf[pdf["field"] == "__del__"].iterrows():
-                    ids_del = np.frombuffer(bytes(r["doc_bin"]), dtype=np.int64)
+                is_del = (pdf["field"] == "__del__").to_numpy()
+                ids_del = np.frombuffer(
+                    b"".join(map(bytes, pdf["doc_bin"][is_del])), dtype=np.int64
+                )
                 out = []
-                for _, r in pdf.iterrows():
-                    if r["field"] == "__del__":
-                        continue
-                    row = {
-                        "doc_bin": bytes(r["doc_bin"]),
-                        "tf_bin": bytes(r["tf_bin"]),
-                        "pos_bin": bytes(r["pos_bin"]),
-                        "dl_bin": bytes(r["dl_bin"]),
-                        "block_meta": _bm_dicts(r["block_meta"]),
-                        "df": int(r["df"]),
-                    }
-                    ids, tfs, pos, dls = decode_posting_list(row)
-                    keep = (
-                        ~np.isin(ids, ids_del)
-                        if len(ids_del)
-                        else np.ones(len(ids), dtype=bool)
+                for r in pdf[~is_del].to_dict("records"):
+                    ids, tfs, (pos, _bounds), dls = decode_posting_list(
+                        posting_row(r), with_positions="flat"
                     )
+                    keep = ~np.isin(ids, ids_del)
                     if not keep.any():
                         continue
-                    positions = (
-                        [p for p, kp in zip(pos, keep) if kp] if pos else None
-                    )
                     enc = encode_posting_list(
-                        ids[keep], tfs[keep], positions, dls[keep]
+                        ids[keep],
+                        tfs[keep],
+                        pos[np.repeat(keep, tfs)] if len(pos) else None,
+                        dls[keep],
                     )
-                    out.append(
-                        (
-                            int(r["seg_id"]),
-                            r["field"],
-                            r["term"],
-                            int(enc["df"]),
-                            enc["doc_bin"],
-                            enc["tf_bin"],
-                            enc["pos_bin"],
-                            enc["dl_bin"],
-                            _bm_tuples(enc["block_meta"]),
-                        )
-                    )
-                return pd.DataFrame(
-                    out,
-                    columns=[
-                        "seg_id", "field", "term", "df",
-                        "doc_bin", "tf_bin", "pos_bin", "dl_bin", "block_meta",
-                    ],
-                )
+                    out.append((r["seg_id"], r["field"], r["term"], *enc.values()))
+                return pd.DataFrame(out, columns=SEGMENT_COLUMNS)
 
             segs = (
                 segs.unionByName(del_rows)

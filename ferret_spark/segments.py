@@ -53,40 +53,21 @@ from pyspark.sql import functions as F
 
 from ferret_spark import build as B
 from ferret_spark.analysis import get_analyzer
-from ferret_spark.codec import encode_segment_terms
-
-BLOCK_META_TYPE = (
-    "array<struct<first:long,last:long,count:int,max_tf:int,"
-    "min_dl:int,doc_off:long,doc_len:long,tf_off:long,tf_len:long,"
-    "pos_off:long,pos_len:long,dl_off:long,dl_len:long>>"
+from ferret_spark.codec import (
+    BLOCK_META_TYPE,
+    POSTING_COLUMNS,
+    decode_posting_list,
+    encode_posting_list,
+    encode_segment_terms,
+    posting_row,
 )
+
 SEGMENT_SCHEMA = (
     "seg_id int, field string, term string, df long, "
     "doc_bin binary, tf_bin binary, pos_bin binary, dl_bin binary, "
     f"block_meta {BLOCK_META_TYPE}"
 )
-
-_BM_KEYS = [
-    "first", "last", "count", "max_tf", "min_dl",
-    "doc_off", "doc_len", "tf_off", "tf_len",
-    "pos_off", "pos_len", "dl_off", "dl_len",
-]
-
-
-def _bm_tuples(block_meta: list[dict]) -> list[tuple]:
-    return [tuple(int(bm.get(k, 0)) for k in _BM_KEYS) for bm in block_meta]
-
-
-def _bm_dicts(block_meta) -> list[dict]:
-    out = []
-    for bm in block_meta:
-        if isinstance(bm, dict):
-            out.append(bm)
-        elif hasattr(bm, "asDict"):
-            out.append(bm.asDict())
-        else:  # tuple/list in _BM_KEYS order
-            out.append(dict(zip(_BM_KEYS, bm)))
-    return out
+SEGMENT_COLUMNS = ["seg_id", "field", "term", *POSTING_COLUMNS]
 
 
 def invert_partition(
@@ -104,8 +85,6 @@ def invert_partition(
     tokenize pass thus serves postings AND corpus stats — no separate
     doc_len job — and optimize()'s delete-expunge rewrite handles markers
     exactly like postings."""
-    from ferret_spark.codec import encode_posting_list
-
     out_rows = []
 
     def _dl_marker(field: str, doc_ids: np.ndarray, dls_all: np.ndarray):
@@ -113,24 +92,9 @@ def invert_partition(
             return
         o = np.argsort(doc_ids, kind="stable")
         enc = encode_posting_list(
-            doc_ids[o].astype(np.int64),
-            np.ones(len(doc_ids), dtype=np.int64),
-            None,
-            dls_all[o].astype(np.int64),
+            doc_ids[o], np.ones(len(doc_ids), dtype=np.int64), None, dls_all[o]
         )
-        out_rows.append(
-            (
-                seg_id,
-                field,
-                None,
-                int(len(doc_ids)),
-                enc["doc_bin"],
-                enc["tf_bin"],
-                enc["pos_bin"],
-                enc["dl_bin"],
-                _bm_tuples(enc["block_meta"]),
-            )
-        )
+        out_rows.append((seg_id, field, None, *enc.values()))
 
     for field, aname in field_config.items():
         doc_ids = pdf["doc_id"].to_numpy()
@@ -223,27 +187,9 @@ def invert_partition(
             pos_s if with_positions else None,
         )
         term_ids = term_of_posting[term_starts_p]
-        for ti, (dbin, tbin, pbin, lbin, metas, df) in enumerate(encoded):
-            out_rows.append(
-                (
-                    seg_id,
-                    field,
-                    str(uniques[term_ids[ti]]),
-                    int(df),
-                    dbin,
-                    tbin,
-                    pbin,
-                    lbin,
-                    metas,
-                )
-            )
-    return pd.DataFrame(
-        out_rows,
-        columns=[
-            "seg_id", "field", "term", "df",
-            "doc_bin", "tf_bin", "pos_bin", "dl_bin", "block_meta",
-        ],
-    )
+        for ti, enc in enumerate(encoded):
+            out_rows.append((seg_id, field, str(uniques[term_ids[ti]]), *enc))
+    return pd.DataFrame(out_rows, columns=SEGMENT_COLUMNS)
 
 
 def build_segments(
@@ -294,17 +240,6 @@ def build_segments(
         return invert_partition(pdf, fc, int(key[0]))
 
     return src.groupBy("seg_id").applyInPandas(fn, SEGMENT_SCHEMA)
-
-
-def _row_to_codec(r) -> dict:
-    return {
-        "doc_bin": bytes(r["doc_bin"]),
-        "tf_bin": bytes(r["tf_bin"]),
-        "pos_bin": bytes(r["pos_bin"]),
-        "dl_bin": bytes(r["dl_bin"]),
-        "block_meta": _bm_dicts(r["block_meta"]),
-        "df": int(r["df"]),
-    }
 
 
 def term_stats_partitions(spark: SparkSession, n_rows: int | None) -> int:
@@ -378,34 +313,25 @@ def shift_posting_rows(
     df: DataFrame, id_shift: int, seg_shift: int | None = None
 ) -> DataFrame:
     """Shift every absolute doc id in posting rows by ``id_shift`` WITHOUT
-    re-encoding: the codec's delta streams are block-relative (each
-    block's ids decode as cumsum(deltas) + block_meta.first), so only
-    block_meta.first/last move — the compressed doc/tf/pos/dl bytes are
-    copied verbatim. This is what makes reader-to-reader index appends
-    (iw_add_readers analog, c/src/index.c:6530-6750) O(metadata), not
-    O(re-tokenize). Doc-length marker rows shift identically."""
-    has_seg = seg_shift is not None
-    schema = df.schema
-
-    def fix(batches):
-        for pdf in batches:
-            if has_seg and len(pdf):
-                pdf["seg_id"] = pdf["seg_id"] + seg_shift
-
-            def shift_bms(bms):
-                out = []
-                for bm in _bm_dicts(bms):
-                    bm = dict(bm)
-                    bm["first"] = int(bm["first"]) + id_shift
-                    bm["last"] = int(bm["last"]) + id_shift
-                    out.append(tuple(bm[k] for k in _BM_KEYS))
-                return out
-
-            if len(pdf):
-                pdf["block_meta"] = pdf["block_meta"].map(shift_bms)
-            yield pdf
-
-    return df.mapInPandas(fix, schema)
+    re-encoding: the codec's blocks are self-contained (each block's ids
+    decode from block_meta.first), so only block_meta.first/last move —
+    the compressed doc/tf/pos/dl bytes are copied verbatim. This is what
+    makes reader-to-reader index appends (iw_add_readers analog,
+    c/src/index.c:6530-6750) O(metadata), not O(re-tokenize). Doc-length
+    marker rows shift identically. A projection: no Python worker."""
+    n = F.lit(id_shift).cast("long")
+    out = df.withColumn(
+        "block_meta",
+        F.transform(
+            "block_meta",
+            lambda b: b.withField("first", b["first"] + n).withField(
+                "last", b["last"] + n
+            ),
+        ),
+    )
+    if seg_shift is not None:
+        out = out.withColumn("seg_id", F.col("seg_id") + F.lit(seg_shift))
+    return out
 
 
 def _manifest_path(path: str) -> str:
@@ -519,8 +445,6 @@ def _driver_marker_sums(files) -> dict | None:
     when the marker count is too big for the driver."""
     import pyarrow.dataset as ds
 
-    from ferret_spark.codec import decode_posting_list
-
     tbl = ds.dataset(files, format="parquet").to_table(
         columns=["field", "df", "doc_bin", "tf_bin", "pos_bin", "dl_bin",
                  "block_meta"],
@@ -531,7 +455,7 @@ def _driver_marker_sums(files) -> dict | None:
     sums: dict[str, list] = {}
     for r in tbl.to_pylist():
         _ids, _tfs, _pos, dls = decode_posting_list(
-            _row_to_codec(r), with_positions=False
+            posting_row(r), with_positions=False
         )
         a = sums.setdefault(r["field"], [0, 0, 0, 1 << 62])
         a[0] += len(dls)
@@ -544,14 +468,13 @@ def _driver_marker_sums(files) -> dict | None:
 def _spark_marker_sums(segments: DataFrame) -> dict:
     """marker_sums as one small distributed decode over one row per
     (segment, field)."""
-    from ferret_spark.codec import decode_posting_list
 
     def dec(batches):
         for pdf in batches:
             rows = []
             for _, r in pdf.iterrows():
                 _ids, _tfs, _pos, dls = decode_posting_list(
-                    _row_to_codec(r), with_positions=False
+                    posting_row(r), with_positions=False
                 )
                 rows.append(
                     (

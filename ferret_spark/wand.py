@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ferret_spark.codec import decode_posting_list
+from ferret_spark.codec import decode_posting_list, posting_row
 from ferret_spark.oracle import K1, B, bm25_idf
 from ferret_spark.phrase_np import has_repeats, phrase_freqs
 from ferret_spark.query import (
@@ -150,8 +150,6 @@ def _filter_docs_df(index, node) -> DataFrame:
     """Matching doc ids for a ConstantScore filter node — one small decode
     job over JUST the filter's posting rows (term/range pushdown into the
     segments scan), distributed end-to-end."""
-    from ferret_spark.segments import _row_to_codec
-
     if isinstance(node, ConstantScoreTerms):
         cond = (F.col("field") == node.field) & F.col("term").isin(
             list(node.terms)
@@ -164,7 +162,7 @@ def _filter_docs_df(index, node) -> DataFrame:
             outs = []
             for r in pdf.to_dict("records"):
                 ids, _tfs, _pos, _dls = decode_posting_list(
-                    _row_to_codec(r), with_positions=False
+                    posting_row(r), with_positions=False
                 )
                 outs.append(ids)
             yield pd.DataFrame(
@@ -1080,8 +1078,6 @@ def _plan_segments(
         plans.append((qid, rq, qnorm))
 
     def score_segment(key, pdf):  # no hints: pyspark warns on partial grouped-map hints
-        from ferret_spark.segments import _row_to_codec
-
         base = int(key[0]) * seg_size
         rows_by_ft = {}
         filt_local: dict[str, np.ndarray] = {}
@@ -1103,7 +1099,7 @@ def _plan_segments(
                     dl2 if del_local is None else np.union1d(del_local, dl2)
                 )
                 continue
-            rows_by_ft[(fld, r["term"])] = _row_to_codec(r)
+            rows_by_ft[(fld, r["term"])] = posting_row(r)
         args = (
             rows_by_ft, dfs, n_docs, avgdl_map, base, seg_size,
             id_ranges,

@@ -320,12 +320,12 @@ def test_phrase_df_stubs_cover_gap_pushed_segments(spark, tmp_path):
     assert [r["doc_id"] for r in sh] == [12] and sh[0]["score"] > 0
 
 
-def _assert_oracle_ranks(idx, rows, ids, queries):
+def _assert_oracle_ranks(idx, rows, ids, queries, fc=FC):
     """``idx`` ranks like an OracleIndex over ``rows`` (in doc-id order,
     ``ids`` their engine doc ids): same ids, float32-identical scores."""
     import numpy as np
 
-    oracle = OracleIndex(rows, FC)
+    oracle = OracleIndex(rows, fc)
     for q in queries:
         exp = [(ids[d], s) for d, s in oracle.search(q, k=10)]
         got = [(r["doc_id"], r["score"]) for r in idx.search(q, k=10).collect()]
@@ -399,3 +399,95 @@ def test_older_layout_index_opens_adds_and_optimizes(spark, tmp_path):
     assert leftovers == []
     assert old._meta()["generations"] == [{"term_stats": "term_stats", "rows": 7}]
     _assert_oracle_ranks(old, rows, ids, queries + [T("kiwi")])
+
+
+def _assert_rows_reencode(spark, path):
+    """Every segment row of the index at ``path`` (postings and doc-length
+    markers) decodes and re-encodes through the one encoder to the same
+    df, streams and block_meta; returns the rows."""
+    import os
+
+    from ferret_spark.codec import (
+        decode_posting_list,
+        encode_posting_list,
+        posting_row,
+    )
+    from ferret_spark.segments import read_table
+
+    rows = read_table(spark, os.path.join(path, "segments")).collect()
+    assert rows
+    for r in rows:
+        row = posting_row(r)
+        ids, tfs, (pos, _bounds), dls = decode_posting_list(row, "flat")
+        enc = encode_posting_list(ids, tfs, pos if len(pos) else None, dls)
+        assert enc == row, (r["seg_id"], r["field"], r["term"])
+    return rows
+
+
+def test_segment_rows_reencode_identically(spark, tmp_path):
+    """Decode-then-encode reproduces every segment row of a golden build,
+    and the rows add_index (shifted block_meta) and a delete plus optimize
+    (re-encoded lists) wrote."""
+    from ferret_spark.fixtures import GOLDEN_FIELD_CONFIG, golden_rows
+
+    rows = [dict(r, doc_id=i) for i, r in enumerate(golden_rows())]
+
+    def build(name):
+        idx = FerretIndex(spark, str(tmp_path / name), GOLDEN_FIELD_CONFIG, seg_size=5)
+        idx.add_documents(spark.createDataFrame(rows), doc_id_col="doc_id")
+        return idx
+
+    a = build("a")
+    built = _assert_rows_reencode(spark, a.path)
+    assert any(r["term"] is None for r in built)  # doc-length markers
+    a.add_index(build("b"))
+    assert len(_assert_rows_reencode(spark, a.path)) == 2 * len(built)
+    assert a.delete_by_term("content", "word3") == 12
+    a.optimize()
+    _assert_rows_reencode(spark, a.path)
+
+
+def test_optimize_keeps_positions_across_blocks(spark, tmp_path):
+    """optimize re-encodes posting lists that span several 128-doc blocks:
+    after deleting docs inside them, a phrase query and a keyword-field
+    term query rank like the oracle over the surviving docs, and keyword
+    rows keep an empty position stream."""
+    import os
+
+    from ferret_spark.query import PhraseQuery
+    from ferret_spark.segments import read_table
+
+    fc = {"content": "whitespace", "tag": "keyword"}
+    rows = [
+        {
+            "doc_id": i,
+            "content": " ".join(
+                ["alpha", "beta"] * (1 + i % 3) + [f"w{i % 7}"] * (i % 4)
+            ),
+            "tag": "rare" if i % 10 == 0 else "common",
+        }
+        for i in range(600)
+    ]
+    idx = FerretIndex(spark, str(tmp_path / "blocks"), fc, seg_size=256)
+    idx.add_documents(spark.createDataFrame(rows), doc_id_col="doc_id")
+    assert idx.delete_by_term("content", "w3") > 0
+    idx.optimize()
+
+    live = [r for r in rows if "w3" not in r["content"].split()]
+    queries = [
+        PhraseQuery.of("content", ["alpha", "beta"]),
+        PhraseQuery.of("content", ["beta", "alpha"], slop=1),
+        TermQuery(field="tag", term="common"),
+    ]
+    _assert_oracle_ranks(
+        idx,
+        [{"content": r["content"], "tag": r["tag"]} for r in live],
+        [r["doc_id"] for r in live],
+        queries,
+        fc,
+    )
+    segs = read_table(spark, os.path.join(idx.path, "segments")).collect()
+    tag_rows = [r for r in segs if r["field"] == "tag" and r["term"] is not None]
+    assert tag_rows and all(len(r["pos_bin"]) == 0 for r in tag_rows)
+    multi = [r for r in segs if r["term"] == "common" or r["term"] == "alpha"]
+    assert any(len(r["block_meta"]) > 1 for r in multi)

@@ -5,7 +5,7 @@ hierarchical term-dictionary merge + resume)."""
 import numpy as np
 import pytest
 
-from ferret_spark.codec import decode_posting_list
+from ferret_spark.codec import decode_posting_list, posting_row
 from ferret_spark.fixtures import GOLDEN_FIELD_CONFIG, golden_rows, synth_corpus_pdf
 from ferret_spark.oracle import OracleIndex
 from ferret_spark.query import (
@@ -67,15 +67,7 @@ def test_merged_postings_match_oracle(golden_seg):
     rows = sidx.segments.where(sidx.segments.field == "content").collect()
     got = {}
     for r in sorted(rows, key=lambda r: r["seg_id"]):
-        row = {
-            "doc_bin": bytes(r["doc_bin"]),
-            "tf_bin": bytes(r["tf_bin"]),
-            "pos_bin": bytes(r["pos_bin"]),
-            "dl_bin": bytes(r["dl_bin"]),
-            "block_meta": [bm.asDict() for bm in r["block_meta"]],
-            "df": r["df"],
-        }
-        ids, tfs, pos, dls = decode_posting_list(row)
+        ids, tfs, pos, dls = decode_posting_list(posting_row(r))
         g = got.setdefault(r["term"], ([], [], []))
         g[0].extend(ids.tolist())
         g[1].extend(tfs.tolist())

@@ -167,6 +167,46 @@ def test_add_generation_reads_only_term_columns(spark, fidx, monkeypatch):
     assert sorted(cols) == ["df", "field", "term"], scan
 
 
+def test_add_index_shift_runs_no_python(spark, fidx, tmp_path, monkeypatch):
+    """add_index shifts the other index's posting rows with one JVM
+    projection — no MapInPandas or other Python node — and the shifted
+    rows decode to the source ids plus the id base."""
+    import numpy as np
+
+    from ferret_spark.codec import decode_posting_list, posting_row
+
+    other = FerretIndex(spark, str(tmp_path / "other"), FC, seg_size=64)
+    other.add_documents(spark.createDataFrame(_rows(500, 150)), id_cols=["commit"])
+    plans = []
+    real = segments.shift_posting_rows
+
+    def spy(df, id_shift, seg_shift=None):
+        out = real(df, id_shift, seg_shift)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        assert out.schema == df.schema
+        return out
+
+    monkeypatch.setattr(segments, "shift_posting_rows", spy)
+    fidx.add_index(other)
+    assert len(plans) == 1
+    assert not re.search(r"MapInPandas|Python|ArrowEval|MapInArrow", plans[0]), plans[0]
+
+    def decoded(idx, lo):
+        segs = read_table(spark, os.path.join(idx.path, "segments"))
+        return {
+            (r["field"], r["term"]): decode_posting_list(posting_row(r), False)[0]
+            for r in segs.where(segs.seg_id >= lo).orderBy("seg_id").collect()
+        }
+
+    src, got = {}, {}
+    for k, ids in decoded(other, 0).items():
+        src[k] = np.concatenate([src.get(k, ids[:0]), ids])
+    for k, ids in decoded(fidx, 1).items():  # base 64: 40 docs, seg_size 64
+        got[k] = np.concatenate([got.get(k, ids[:0]), ids])
+    assert got.keys() == src.keys()
+    assert all(np.array_equal(got[k], src[k] + 64) for k in src)
+
+
 def test_one_segment_add_appends_one_docs_file(spark, fidx):
     """The doc-id window is sized by the batch: a one-segment add writes one
     docs/ file (one per shuffle partition before), its ids unchanged, and
