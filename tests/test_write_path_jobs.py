@@ -192,17 +192,17 @@ def test_add_index_shift_runs_no_python(spark, fidx, tmp_path, monkeypatch):
     assert not re.search(r"MapInPandas|Python|ArrowEval|MapInArrow", plans[0]), plans[0]
 
     def decoded(idx, lo):
+        """(field, term) -> its ids over every segment from ``lo`` on."""
         segs = read_table(spark, os.path.join(idx.path, "segments"))
-        return {
-            (r["field"], r["term"]): decode_posting_list(posting_row(r), False)[0]
-            for r in segs.where(segs.seg_id >= lo).orderBy("seg_id").collect()
-        }
+        out = {}
+        for r in segs.where(segs.seg_id >= lo).orderBy("seg_id").collect():
+            ids = decode_posting_list(posting_row(r), False)[0]
+            k = (r["field"], r["term"])
+            out[k] = np.concatenate([out.get(k, ids[:0]), ids])
+        return out
 
-    src, got = {}, {}
-    for k, ids in decoded(other, 0).items():
-        src[k] = np.concatenate([src.get(k, ids[:0]), ids])
-    for k, ids in decoded(fidx, 1).items():  # base 64: 40 docs, seg_size 64
-        got[k] = np.concatenate([got.get(k, ids[:0]), ids])
+    src = decoded(other, 0)
+    got = decoded(fidx, 1)  # base 64: 40 docs, seg_size 64
     assert got.keys() == src.keys()
     assert all(np.array_equal(got[k], src[k] + 64) for k in src)
 
